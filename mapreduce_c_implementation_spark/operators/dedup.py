@@ -25,9 +25,14 @@ Scale design notes (the whole point of these ops is 100 TB corpora):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_c_implementation_spark.functions.iterate import (
+    checkpoint_observed,
+    propagate,
+    record_rounds,
+)
 from mapreduce_c_implementation_spark.functions.text import (
     DUCKDB_TOKENIZE,
     duckdb_ngrams,
@@ -621,8 +626,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Rounds of min-label propagation: each round spreads the component
 # minimum one hop, so this bounds the recoverable component DIAMETER.
 # MinHash-LSH components on the fixture corpus are small near-cliques,
-# so 8 is generous; the oracle computes the TRUE transitive closure, so
-# an undershoot fails the diff loudly instead of silently.
+# so 8 is generous; the contract is the TRUE transitive closure, so an
+# undershoot raises (see dedup_connected_components) instead of passing.
 CC_ROUNDS = 8
 
 @register(
@@ -654,20 +659,14 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the word-salad fixture are so dense that everything collapses
     into one component — a degenerate clustering.)
 
-    Implementation is iterative min-label propagation — {CC_ROUNDS}
-    fixed rounds of (join labels to neighbors, take the min).  Each
-    round ends in `localCheckpoint`, which matters twice over: without
-    it the round N plan contains TWO copies of round N-1 (union of
-    labels with joined labels), so lineage — and Catalyst planning
-    time — doubles every round (2^rounds stage blow-up, observed as a
-    500-stage job before the fix); with it every round is one small
-    join+agg job over materialized partitions.  The oracle computes the
-    exact transitive closure with a recursive CTE, so an unconverged
-    round count fails the diff rather than passing silently.  At 100 TB
-    you would checkpoint to reliable storage instead of executor memory
-    and switch to the alternating small-star/large-star formulation
-    (same join/agg primitives, O(log n) rounds); component diameters
-    here are tiny because LSH band collisions form near-cliques.
+    Implementation: min-label propagation to a detected fixpoint in at
+    most {CC_ROUNDS} rounds (``functions/iterate.py::propagate``); the
+    oracle is the exact recursive-CTE transitive closure, so hitting
+    the bound still changing raises.  At 100 TB you would checkpoint
+    to reliable storage instead of executor memory and switch to the
+    alternating small-star/large-star formulation (same join/agg
+    primitives, O(log n) rounds); component diameters here are tiny
+    because LSH band collisions form near-cliques.
     """
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.union(
@@ -677,41 +676,19 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = docs.select(
         "doc_id", F.col("doc_id").alias("cluster_id")
     ).localCheckpoint()
-    # Detected convergence (the dedup_cc_stars / graph_bfs pattern):
-    # labels only decrease and the doc set is fixed, so an unchanged
-    # (count, sum) signature means a fixpoint — remaining rounds are
-    # no-ops and the result equals the full CC_ROUNDS unroll the
-    # oracle mirrors.  The pair is the robust form graph_bfs uses:
-    # count guards against a row-set change that happens to preserve
-    # the sum (impossible under monotone labels, cheap to pin anyway).
-    prev_sig = None
-    rounds = 0
-    for _ in range(CC_ROUNDS):
-        rounds += 1
-        nbr = edges.join(
-            labels, edges.doc_a == labels.doc_id
-        ).select(F.col("doc_b").alias("doc_id"), "cluster_id")
-        # The signature rides the checkpoint's own materialization job
-        # via observe — one job per round instead of two (r13; measured
-        # 4.1 s vs 5.4 s same-window A/B at sf0.1).
-        obs = Observation()
-        labels = (
-            labels.union(nbr)
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("cluster_id").alias("s"),
-            )
-            .localCheckpoint()
-        )
-        got = obs.get
-        sig = (got["n"], got["s"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    dedup_connected_components.last_rounds = rounds
+    labels, rounds, converged = propagate(
+        labels,
+        lambda lab: edges.join(lab, edges.doc_a == lab.doc_id).select(
+            F.col("doc_b").alias("doc_id"), "cluster_id"
+        ),
+        "doc_id",
+        "cluster_id",
+        F.min,
+        CC_ROUNDS,
+    )
+    record_rounds(
+        dedup_connected_components, rounds, converged, f"CC_ROUNDS={CC_ROUNDS}"
+    )
     return labels
 
 
@@ -1148,7 +1125,8 @@ def dedup_cc_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
     — an exact count+except check over the checkpointed edge tables,
     O(edges), cheap because star edge sets only shrink toward one row
     per non-root node) and records the rounds used in
-    ``dedup_cc_stars.last_rounds``.
+    ``dedup_cc_stars.last_rounds``; hitting the round ceiling without
+    a fixed point raises.
 
     Scale shape: per round, two groupBy+broadcast-join passes over an
     EDGE table (pairs-sized, far smaller than the corpus — the corpus
@@ -1171,10 +1149,11 @@ def dedup_cc_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    rounds = 0
-    n_edges = None  # memoized |edges|: small.count() of the prior round
-    for _ in range(CC_STARS_MAX_ROUNDS):
-        rounds += 1
+    # |edges| is counted once; later rounds reuse the previous round's
+    # observed |small| rather than recount a materialized table.
+    n_edges = edges.count()
+    converged = False
+    for rounds in range(1, CC_STARS_MAX_ROUNDS + 1):
         # large-star: m(u) = min over closed neighborhood; larger
         # neighbors of u re-point at m(u).
         sym = edges.select("a", "b").union(
@@ -1196,40 +1175,28 @@ def dedup_cc_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
         # small-star: u and its smaller neighbors re-point at the min of
         # the smaller neighborhood (edges already hold a > b, so each
         # undirected edge appears exactly once with a = larger end).
+        # |small| rides the checkpoint's own job (functions/iterate.py).
         smins = large.groupBy("a").agg(F.min("b").alias("m"))
-        # |small| rides the checkpoint's own materialization job via
-        # observe (r13) — the separate count() job per round is gone.
-        # Invariant (ADVICE r13): DataFrame.localCheckpoint() is EAGER
-        # on Spark 4.1 (it runs the plan via withAction), which is what
-        # delivers the Observation metrics; obs.get below would block
-        # forever under a lazy checkpoint.  Applies to every
-        # observe-fused fixpoint in this repo (cc, cc_stars, entity
-        # resolution, bfs, widest-path, dbscan).
-        obs = Observation()
-        small = (
+        small, got = checkpoint_observed(
             large.join(smins, "a")
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
             .union(smins.select(F.col("a"), F.col("m").alias("b")))
             .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+            .distinct(),
+            F.count(F.lit(1)).alias("n"),
         )
         # fixed point: star edge sets are distinct and share the a > b
         # invariant, so set equality == equal counts + empty except.
-        # |edges| is memoized from the previous round's observed count
-        # (first round pays one count of the checkpointed seed) — the
-        # table is already materialized, so recounting it every round
-        # was a pure extra job.
-        if n_edges is None:
-            n_edges = edges.count()
-        n_small = obs.get["n"]
-        if n_small == n_edges and small.exceptAll(edges).isEmpty():
-            edges = small
+        converged = got["n"] == n_edges and small.exceptAll(edges).isEmpty()
+        edges, n_edges = small, got["n"]
+        if converged:
             break
-        edges = small
-        n_edges = n_small
-    dedup_cc_stars.last_rounds = rounds
+    record_rounds(
+        dedup_cc_stars,
+        rounds,
+        converged,
+        f"CC_STARS_MAX_ROUNDS={CC_STARS_MAX_ROUNDS}",
+    )
     docs = parallel_scan(spark, sf_dir, "documents").select("doc_id")
     return (
         docs.select("doc_id", F.col("doc_id").alias("cluster_id"))
@@ -2049,11 +2016,11 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Implementation: iterative min-label propagation with detected
     convergence over the name-grain linkage edges — the
-    [[dedup_connected_components]] machinery (localCheckpoint per
-    round, (count, sum) fixpoint signature), correct here because
+    [[dedup_connected_components]] machinery
+    (``functions/iterate.py::propagate``), correct here because
     linkage clusters are near-cliques (tiny diameters).  The oracle
-    computes the exact transitive closure with a recursive CTE, so an
-    unconverged round count fails the diff.  At 100 TB swap in the
+    computes the exact transitive closure with a recursive CTE, so a
+    loop still changing at its bound raises.  At 100 TB swap in the
     [[dedup_cc_stars]] O(log n) formulation — same contract.
 
     Scale shape: value-grain compaction + bounded multi-blocking bound
@@ -2075,31 +2042,21 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = vals.select(
         F.col("rep_key").alias("node"), F.col("rep_key").alias("entity_id")
     )
-    prev_sig = None
-    for _ in range(CC_ROUNDS):
-        nbr = edges.join(labels, edges.key_a == labels.node).select(
+    # No broadcast hint: labels is name-space-sized, which grows with
+    # the catalog.
+    labels, rounds, converged = propagate(
+        labels,
+        lambda lab: edges.join(lab, edges.key_a == lab.node).select(
             F.col("key_b").alias("node"), "entity_id"
-        )
-        # Signature rides the checkpoint job via observe (one job per
-        # round, not two — r13); no broadcast hint: labels is
-        # name-space-sized, which grows with the catalog.
-        obs = Observation()
-        labels = (
-            labels.union(nbr)
-            .groupBy("node")
-            .agg(F.min("entity_id").alias("entity_id"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("entity_id").alias("s"),
-            )
-            .localCheckpoint()
-        )
-        got = obs.get
-        sig = (got["n"], got["s"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+        ),
+        "node",
+        "entity_id",
+        F.min,
+        CC_ROUNDS,
+    )
+    record_rounds(
+        entity_resolution_clusters, rounds, converged, f"CC_ROUNDS={CC_ROUNDS}"
+    )
     return (
         labels.join(vals, labels.node == vals.rep_key)
         .groupBy("entity_id")

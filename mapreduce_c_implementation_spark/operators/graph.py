@@ -29,9 +29,14 @@ rationale).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_c_implementation_spark.functions.iterate import (
+    checkpoint_observed,
+    propagate,
+    record_rounds,
+)
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources import load_table
 
@@ -439,6 +444,47 @@ BFS_ITERS = 6
 BFS_NODE_DEGREE = 2
 
 
+def _trade_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-node top-BFS_NODE_DEGREE incident-edge backbone of the
+    trade graph that graph_bfs_distances and graph_widest_path_bottleneck
+    relax over: canonical ``(u < v, wu)`` rows, ``wu`` the undirected
+    edge weight.  Materialized ONCE by an eager ``localCheckpoint`` —
+    without it the backbone subtree is referenced in every round and
+    Spark re-runs the full ``_trade_edges`` join diamond per reference
+    (measured 12.5 s -> ~2 s at sf0.1).  The per-node top-k is a window
+    partitioned by node, so no single task ranks the full edge list.
+    """
+    from pyspark.sql.window import Window
+
+    edges = _trade_edges(spark, sf_dir)
+    undw = (
+        edges.filter(F.col("src") != F.col("dst"))
+        .groupBy(
+            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
+        )
+        .agg(F.sum("w").cast("long").alias("wu"))
+    )
+    inc = undw.select(
+        F.col("u").alias("a"), F.col("v").alias("b"), "wu"
+    ).unionByName(
+        undw.select(F.col("v").alias("a"), F.col("u").alias("b"), "wu")
+    )
+    return (
+        inc.withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("a").orderBy(F.desc("wu"), F.asc("b"))
+            ),
+        )
+        .filter(F.col("rn") <= BFS_NODE_DEGREE)
+        .groupBy(
+            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
+        )
+        .agg(F.max("wu").cast("long").alias("wu"))
+        .localCheckpoint()
+    )
+
+
 def _bfs_oracle() -> str:
     """Unrolled fixed-iteration BFS (Bellman-Ford relaxation with unit
     weights) in DuckDB SQL — unrolled for the same reason as
@@ -509,85 +555,32 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unreached nodes are simply absent (inner join at the end),
     matching the oracle's semantics.
 
-    Scale shape: the edge build is the one fact-fact shuffle (shared
-    [[_trade_edges]] diamond), materialized ONCE by an eager
-    `localCheckpoint` on the node-degree-bounded backbone — without
-    it the backbone subtree is referenced in every round and Spark
-    re-runs the full join diamond per reference (measured 12.5 s -> ~2 s
-    at sf0.1).  The frontier is likewise checkpointed per round: the
-    recurrence references dist_k twice (once bare, once joined), so a
-    lazy chain doubles in size per round — O(2^rounds) plan nodes —
-    while truncation keeps it linear; each round is then one tiny
-    join+agg over node-sized tables, the [[dedup_cc_stars]] pattern.
-    The sparsification is ALREADY the scale-correct per-node top-k
-    (window partitioned by node — work splits across the cluster; no
-    single task ever ranks the full edge list, unlike a global LIMIT).
+    Scale shape: the edge build is the one fact-fact shuffle into the
+    once-checkpointed backbone ([[_trade_backbone]]); the frontier loop
+    (``functions/iterate.py::propagate``) is one node-sized join+agg
+    job per round and stops at the first round that relaxes nothing,
+    whose successors are no-ops — same result as the oracle's unroll.
     """
-    from pyspark.sql.window import Window
-
-    edges = _trade_edges(spark, sf_dir)
-    undw = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .groupBy(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .agg(F.sum("w").cast("long").alias("wu"))
-    )
-    inc = undw.select(
-        F.col("u").alias("a"), F.col("v").alias("b"), "wu"
-    ).unionByName(
-        undw.select(F.col("v").alias("a"), F.col("u").alias("b"), "wu")
-    )
-    und = (
-        inc.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("a").orderBy(F.desc("wu"), F.asc("b"))
-            ),
-        )
-        .filter(F.col("rn") <= BFS_NODE_DEGREE)
-        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-        .localCheckpoint()  # materialize the join diamond exactly once
-    )
+    und = _trade_backbone(spark, sf_dir).select("u", "v")
     sym = und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
     dist = spark.range(1).select(
         F.lit(BFS_SOURCE).cast("long").alias("node"),
         F.lit(0).cast("long").alias("dist"),
     )
-    # Detected convergence (the dedup_cc_stars pattern): the contract is
-    # "up to BFS_ITERS rounds", and once a round relaxes nothing the
-    # remaining rounds are no-ops, so breaking early returns the SAME
-    # result the oracle's full unroll computes — it just skips the dead
-    # rounds' job-scheduling cost.  The signature (frontier size, total
-    # distance) is a 2-long aggregate over the node-sized checkpoint.
-    prev_sig = None
-    rounds = 0
-    for _ in range(BFS_ITERS):
-        rounds += 1
-        # sym is NATION-bounded (<= 25 nodes x top-k degree) but
-        # checkpointed, so its stats are unknown and the planner would
-        # sort-merge — broadcast explicitly (guide §3.1); the signature
-        # rides the checkpoint job via observe (one job/round, not two).
-        relaxed = dist.join(F.broadcast(sym), dist.node == sym.u).select(
+    # sym is NATION-bounded (<= 25 nodes x top-k degree) but
+    # checkpointed, so its stats are unknown and the planner would
+    # sort-merge — broadcast explicitly.
+    dist, rounds, converged = propagate(
+        dist,
+        lambda d: d.join(F.broadcast(sym), d.node == sym.u).select(
             F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
-        )
-        obs = Observation()
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").cast("long").alias("dist"))
-            .observe(
-                obs, F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-            )
-            .localCheckpoint()  # truncate the doubling recurrence
-        )
-        got = obs.get
-        sig = (got["n"], got["s"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    graph_bfs_distances.last_rounds = rounds
+        ),
+        "node",
+        "dist",
+        F.min,
+        BFS_ITERS,
+    )
+    record_rounds(graph_bfs_distances, rounds, converged)
     n = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), "n_name"
     )
@@ -1105,9 +1098,12 @@ def graph_kcore_peel_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     is therefore proportional to the PEELED frontier's edges (each
     edge crosses at most twice over the whole loop — O(E) total, was
     O(E x rounds)); `und` is pre-partitioned and pre-sorted on `nb`
-    before its one checkpoint, so every round's frontier join streams
-    it exchange-free and sort-free, and `deg` stays node-partitioned
-    across checkpoints so the decrement join never re-shuffles it.
+    before its one cached materialization, so every round's frontier
+    join streams it exchange-free and sort-free.  `deg` is a checkpoint
+    (no reported partitioning), so the decrement join re-shuffles it
+    each round: a small node-sized Exchange, never an edge-sized one.
+    The per-round peel count rides each checkpoint's job
+    (``functions/iterate.py::checkpoint_observed``).
 
     Reference analog: none (SURVEY §2.2 graph surface).
     """
@@ -1141,36 +1137,27 @@ def graph_kcore_peel_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Full in-graph degree: und holds both directions of every edge,
     # so one count per `node` equals the old round-1 alive-join result
     # (every nb is itself a node of und, hence alive at round 1).  The
-    # peel-frontier size rides each checkpoint's own materialization
-    # job via observe (the r13 fixpoint pattern — localCheckpoint is
-    # eager, which is what delivers the metric), so the per-round
-    # emptiness probe costs NO extra job.
-    obs = Observation()
+    # peel-frontier size rides each checkpoint's own job
+    # (functions/iterate.py), so the per-round emptiness probe costs NO
+    # extra job.
     n_peel_metric = F.sum(
         F.when(F.col("d") < KCORE_K, 1).otherwise(0)
     ).alias("n_peel")
-    deg = (
-        und.groupBy("node")
-        .agg(F.count("*").alias("d"))
-        .observe(obs, n_peel_metric)
-        .localCheckpoint()
+    deg, got = checkpoint_observed(
+        und.groupBy("node").agg(F.count("*").alias("d")), n_peel_metric
     )
     layers = None
-    survivors = None
-    for r in range(1, KCORE_ITERS + 1):
-        # Fixpoint early-exit: a round that peels NOTHING leaves alive
-        # unchanged, so every later round would peel nothing either
-        # (peeling is monotone) — and `deg` already IS the survivors'
-        # in-core degree table.  (sum over an empty deg is NULL: all
-        # nodes peeled ⇒ nothing left to peel.)
-        if (obs.get["n_peel"] or 0) == 0:
-            survivors = deg.select(
-                "node", F.lit(0).cast("long").alias("layer"), "d"
-            )
-            break
+    rounds = 0
+    # Fixpoint early-exit: a round that would peel NOTHING leaves alive
+    # unchanged, so every later round would peel nothing either
+    # (peeling is monotone) — and `deg` already IS the survivors'
+    # in-core degree table.  (sum over an empty deg is NULL: all nodes
+    # peeled ⇒ nothing left to peel.)
+    while rounds < KCORE_ITERS and (got["n_peel"] or 0) > 0:
+        rounds += 1
         peeled = deg.filter(F.col("d") < KCORE_K)
         layer_r = peeled.select(
-            "node", F.lit(r).cast("long").alias("layer"), "d"
+            "node", F.lit(rounds).cast("long").alias("layer"), "d"
         )
         layers = layer_r if layers is None else layers.unionByName(layer_r)
         # Decrement: each surviving node loses exactly its edges into
@@ -1180,22 +1167,19 @@ def graph_kcore_peel_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.count("*").alias("dd"))
         )
-        obs = Observation()
-        deg = (
+        deg, got = checkpoint_observed(
             deg.filter(F.col("d") >= KCORE_K)
             .join(dec, "node", "left")
             .select(
                 "node", (F.col("d") - F.coalesce("dd", F.lit(0))).alias("d")
-            )
-            .observe(obs, n_peel_metric)
-            .localCheckpoint()
+            ),
+            n_peel_metric,
         )
     und.unpersist()
-    if survivors is None:
-        # All KCORE_ITERS rounds peeled: deg was updated by the last
-        # decrement, so it already holds degrees within alive_ITERS —
-        # the old shape recomputed this with one more full und join.
-        survivors = deg.select("node", F.lit(0).cast("long").alias("layer"), "d")
+    record_rounds(graph_kcore_peel_layers, rounds, (got["n_peel"] or 0) == 0)
+    # deg holds degrees within the last alive set (after the final
+    # decrement when all KCORE_ITERS rounds peeled).
+    survivors = deg.select("node", F.lit(0).cast("long").alias("layer"), "d")
     out = survivors if layers is None else layers.unionByName(survivors)
     return out.select(
         F.col("node").cast("long").alias("p_partkey"),
@@ -1388,43 +1372,12 @@ def graph_widest_path_bottleneck(spark: SparkSession, sf_dir: str) -> DataFrame:
     dead rounds — on a {BFS_NODE_DEGREE}-degree backbone the frontier
     stabilizes in a handful of rounds.
 
-    Scale shape: identical to [[graph_bfs_distances]] — the edge build
-    is the one fact-fact shuffle, the backbone localCheckpoints once,
-    each round is a node-keyed join + max-aggregate over node-sized
-    tables with per-round checkpoint lineage truncation, and the
-    convergence signature is a 2-value collect.
+    Scale shape: identical to [[graph_bfs_distances]] (same backbone,
+    same ``propagate`` loop), with a max-aggregate per round.
 
     Reference analog: none (SURVEY §2.2 graph surface).
     """
-    from pyspark.sql.window import Window
-
-    edges = _trade_edges(spark, sf_dir)
-    undw = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .groupBy(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .agg(F.sum("w").cast("long").alias("wu"))
-    )
-    inc = undw.select(
-        F.col("u").alias("a"), F.col("v").alias("b"), "wu"
-    ).unionByName(
-        undw.select(F.col("v").alias("a"), F.col("u").alias("b"), "wu")
-    )
-    und = (
-        inc.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("a").orderBy(F.desc("wu"), F.asc("b"))
-            ),
-        )
-        .filter(F.col("rn") <= BFS_NODE_DEGREE)
-        .groupBy(
-            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        )
-        .agg(F.max("wu").cast("long").alias("wu"))
-        .localCheckpoint()  # materialize the join diamond exactly once
-    )
+    und = _trade_backbone(spark, sf_dir)
     sym = und.union(
         und.select(F.col("v").alias("u"), F.col("u").alias("v"), "wu")
     )
@@ -1432,29 +1385,19 @@ def graph_widest_path_bottleneck(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(WP_SOURCE).cast("long").alias("node"),
         F.lit(WP_INIT).cast("long").alias("width"),
     )
-    prev_sig = None
-    for _ in range(WP_ITERS):
-        # Same two r13 levers as graph_bfs_distances: broadcast the
-        # nation-bounded backbone; observe-fused signature.
-        relaxed = width.join(F.broadcast(sym), width.node == sym.u).select(
+    # Broadcast the nation-bounded backbone, as in graph_bfs_distances.
+    width, rounds, converged = propagate(
+        width,
+        lambda w: w.join(F.broadcast(sym), w.node == sym.u).select(
             F.col("v").alias("node"),
             F.least(F.col("width"), F.col("wu")).alias("width"),
-        )
-        obs = Observation()
-        width = (
-            width.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.max("width").cast("long").alias("width"))
-            .observe(
-                obs, F.count(F.lit(1)).alias("n"), F.sum("width").alias("s")
-            )
-            .localCheckpoint()  # truncate the doubling recurrence
-        )
-        got = obs.get
-        sig = (got["n"], got["s"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+        ),
+        "node",
+        "width",
+        F.max,
+        WP_ITERS,
+    )
+    record_rounds(graph_widest_path_bottleneck, rounds, converged)
     n = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), "n_name"
     )

@@ -18,9 +18,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_c_implementation_spark.functions.iterate import propagate, record_rounds
 from mapreduce_c_implementation_spark.functions.vector import SQL_DOT as _SQL_DOT
 from mapreduce_c_implementation_spark.functions.vector import np_dot as _np_dot
 from mapreduce_c_implementation_spark.functions.vector import spark_dot as _spark_dot
@@ -3349,10 +3350,10 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     level eps-range queries become one map-side-combined cell count,
     and adjacency is a 9-offset keyed self-join on the bounded dense-
     cell table.  The CC runs the [[dedup_connected_components]]
-    machinery: min-label propagation with the (count, sum) fixpoint
-    signature, bounded by {DBSCAN_CC_ROUNDS} rounds, while the oracle
-    computes the TRUE transitive closure recursively — an unconverged
-    undershoot fails the diff loudly.
+    machinery (``functions/iterate.py::propagate``), bounded by
+    {DBSCAN_CC_ROUNDS} rounds, while the oracle computes the TRUE
+    transitive closure recursively — a loop still changing at its
+    bound raises rather than return a partial closure.
 
     Scale shape: one corpus pass to cells; everything after runs on
     the cell table, which is bounded by the coordinate range /
@@ -3410,28 +3411,22 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ca", F.col("cid").alias("cb")
     ).localCheckpoint()
     labels = dense.select("cid", F.col("cid").alias("lab")).localCheckpoint()
-    prev_sig = None
-    for _ in range(DBSCAN_CC_ROUNDS):
-        prop = nbr.join(F.broadcast(labels), nbr.ca == labels.cid).select(
+    labels, rounds, converged = propagate(
+        labels,
+        lambda lab: nbr.join(F.broadcast(lab), nbr.ca == lab.cid).select(
             F.col("cb").alias("cid"), "lab"
-        )
-        # The (count, sum) fixpoint signature rides the checkpoint's own
-        # materialization job via observe — the former separate
-        # labels.agg(...).collect() job per round is gone (guide §1.5/
-        # §2.6: fewer jobs per round).
-        obs = Observation()
-        labels = (
-            labels.union(prop)
-            .groupBy("cid")
-            .agg(F.min("lab").alias("lab"))
-            .observe(obs, F.count(F.lit(1)).alias("n"), F.sum("lab").alias("s"))
-            .localCheckpoint()
-        )
-        got = obs.get
-        sig = (got["n"], got["s"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+        ),
+        "cid",
+        "lab",
+        F.min,
+        DBSCAN_CC_ROUNDS,
+    )
+    record_rounds(
+        dbscan_grid_clusters,
+        rounds,
+        converged,
+        f"DBSCAN_CC_ROUNDS={DBSCAN_CC_ROUNDS}",
+    )
     return (
         pts.join(F.broadcast(dense), ["ci", "cj"], "left")
         .join(F.broadcast(labels), "cid", "left")

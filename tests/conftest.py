@@ -52,4 +52,4 @@ _GATE_FILE_ORDER = [
 
 def pytest_collection_modifyitems(session, config, items):
     rank = {name: i for i, name in enumerate(_GATE_FILE_ORDER)}
-    items.sort(key=lambda it: rank.get(Path(it.fspath).name, len(rank)))
+    items.sort(key=lambda it: rank.get(it.path.name, len(rank)))

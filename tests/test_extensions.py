@@ -322,23 +322,43 @@ def test_rfm_and_abc_match_oracle_at_sf01(spark):
 
 
 def test_iterative_ops_detect_convergence_early(spark, sf_correct):
-    """BFS and label propagation must exit BEFORE their fixed round
-    caps on the fixture graphs — the detected-convergence guarantee
-    that makes dead rounds free (the dedup_cc_stars contract)."""
-    from mapreduce_c_implementation_spark.operators.dedup import (
-        CC_ROUNDS,
-        dedup_connected_components,
-    )
-    from mapreduce_c_implementation_spark.operators.graph import (
-        BFS_ITERS,
-        graph_bfs_distances,
-    )
+    """Every observe-fused fixpoint loop must record the rounds it used
+    and exit BEFORE its round cap on the fixture graphs — the
+    detected-convergence guarantee that makes dead rounds free (the
+    dedup_cc_stars contract)."""
+    from mapreduce_c_implementation_spark.operators import dedup, graph, similarity
 
-    graph_bfs_distances(spark, sf_correct).collect()
-    assert graph_bfs_distances.last_rounds < BFS_ITERS
+    cases = [
+        (dedup.dedup_connected_components, dedup.CC_ROUNDS),
+        (dedup.entity_resolution_clusters, dedup.CC_ROUNDS),
+        (dedup.dedup_cc_stars, dedup.CC_STARS_MAX_ROUNDS),
+        (graph.graph_bfs_distances, graph.BFS_ITERS),
+        (graph.graph_widest_path_bottleneck, graph.WP_ITERS),
+        (graph.graph_kcore_peel_layers, graph.KCORE_ITERS),
+        (similarity.dbscan_grid_clusters, similarity.DBSCAN_CC_ROUNDS),
+    ]
+    for op, cap in cases:
+        op.last_rounds = op.last_converged = None
+        op(spark, sf_correct).collect()
+        assert isinstance(op.last_rounds, int), op.__name__
+        assert op.last_rounds < cap, (op.__name__, op.last_rounds, cap)
+        assert op.last_converged is True, op.__name__
 
-    dedup_connected_components(spark, sf_correct).collect()
-    assert dedup_connected_components.last_rounds < CC_ROUNDS
+
+@pytest.mark.parametrize(
+    "name", ["dedup_connected_components", "entity_resolution_clusters"]
+)
+def test_closure_ops_raise_when_round_bound_is_hit(spark, sf_correct, monkeypatch, name):
+    """Transitive closure is the contract, so stopping at the round bound
+    while labels still change must fail loudly, naming the operator and
+    the bound.  One round can never be a detected fixpoint (the first
+    round has nothing to compare against), and sf0.01 has near-dup and
+    linkage edges, so round 1 does change labels."""
+    from mapreduce_c_implementation_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match=rf"{name}: .*CC_ROUNDS=1 rounds"):
+        get_operator(name).query_fn(spark, sf_correct)
 
 
 def test_cdc_chunk_dedup_non_ascii_parity(spark, tmp_path):
