@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_c_implementation_spark.functions.exactagg import dec, exact_sum, sql_exact_sum
+from mapreduce_c_implementation_spark.functions.prefix import range_id, running_by_bucket
 from mapreduce_c_implementation_spark.functions.text import (
     DUCKDB_TOKENIZE,
     duckdb_ngrams,
@@ -749,18 +750,11 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines); bucket = floor((rank-1)*B/n) with an orderkey tiebreak,
     so the layout is fully deterministic.
 
-    The global rank is computed the SCALABLE two-pass way, NOT one
-    unpartitioned row_number window (Exchange SinglePartition — the
-    whole fact stream through one task): zval's top {ZORDER_RB_BITS}
-    bits form a deterministic range bucket (the Morton curve is the
-    sort key, so bucket order IS rank order); rows rank within their
-    bucket, a bucket-count prefix table (≤2^{ZORDER_RB_BITS} rows)
-    supplies each bucket's global offset and the corpus total n via
-    one tiny broadcast join.  Bit-identical to the textbook global
-    window; a plan gate pins the fact stream to hash partitioning.
+    The global rank is ``functions/prefix.py``'s two-pass
+    ``running_by_bucket``, bucketed on zval's top {ZORDER_RB_BITS} bits
+    (≤2^{ZORDER_RB_BITS}-row prefix table); a plan gate pins the fact
+    stream to hash partitioning.
     """
-    from pyspark.sql.window import Window
-
     o = load_table(spark, sf_dir, "orders")
     dims = o.selectExpr(
         "o_orderkey",
@@ -773,30 +767,13 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     zvals = dims.selectExpr(
         "o_orderkey", "o_custkey", "o_orderdate", f"CAST({_Z_SPARK} AS BIGINT) AS zval"
     ).withColumn("rb", F.shiftright(F.col("zval"), 2 * ZORDER_BITS - ZORDER_RB_BITS))
-    w_in = Window.partitionBy("rb").orderBy("zval", "o_orderkey")
-    within = zvals.withColumn("rn_in", F.row_number().over(w_in))
-    totals = zvals.groupBy("rb").agg(F.count("*").alias("rb_cnt"))
-    w_pfx = Window.orderBy("rb").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("rb").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    prefix = totals.select(
-        "rb",
-        F.coalesce(F.sum("rb_cnt").over(w_pfx), F.lit(0)).alias("offset"),
-        F.sum("rb_cnt").over(w_all).alias("n"),
-    )
-    ranked = within.join(F.broadcast(prefix), "rb").select(
-        "o_custkey",
-        "o_orderdate",
-        (F.col("offset") + F.col("rn_in")).alias("rn"),
-        "n",
-    )
     return (
-        ranked.selectExpr(
+        running_by_bucket(zvals, "rb", ["zval", "o_orderkey"], rn=None)
+        .selectExpr(
             # `div`/`//` = integer floor division in Spark/DuckDB — plain
             # `/` is float division whose CAST-back rounds differently
             # (truncate vs nearest) between the engines.
-            f"((rn - 1) * {ZORDER_BUCKETS}) div n AS bucket",
+            f"((rn - 1) * {ZORDER_BUCKETS}) div rn_total AS bucket",
             "o_custkey",
             "o_orderdate",
         )
@@ -1749,17 +1726,12 @@ def customer_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one keyed aggregate to customer grain, then three
     GLOBAL ranks over the CUSTOMER table (not the order stream).  Each
-    rank is the two-pass DISTRIBUTED form (the feature_quantile_bins
-    recipe, exact): approxQuantile cut points split the metric domain
-    into {RFM_RANK_PARTS} ranges whose id is a deterministic codegen'd
-    fold over the cut literals, rows rank WITHIN their range, and a
-    broadcast {RFM_RANK_PARTS}-row prefix table lifts local ranks to
-    global — no Exchange SinglePartition ever sees customer-grain
-    data (a plan gate pins it).  The three rank tables rejoin on
-    custkey (hash joins, co-partitioned after the first).
+    rank is ``functions/prefix.py``'s two-pass ``running_by_bucket``
+    over {RFM_RANK_PARTS} approxQuantile ranges (``range_id``) — no
+    Exchange SinglePartition ever sees customer-grain data (a plan
+    gate pins it).  The three rank tables rejoin on custkey (hash
+    joins, co-partitioned after the first).
     """
-    from pyspark.sql.window import Window
-
     o = load_table(spark, sf_dir, "orders")
     per_cust = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.max("o_orderdate").alias("last_order"),
@@ -1799,41 +1771,16 @@ def customer_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def rank0(colname: str, cuts: list[float], out: str, with_n: bool):
-        # pid = #cuts below the value — deterministic, codegen'd.
-        pid = sum(
-            (F.when(F.col(colname) >= float(c), 1).otherwise(0) for c in cuts),
-            F.lit(0),
-        ).alias("pid")
-        keyed = pc.select("custkey", F.col(colname).alias("v"), pid)
-        local = keyed.withColumn(
-            "lr",
-            F.row_number().over(Window.partitionBy("pid").orderBy("v", "custkey")),
+        keyed = pc.select(
+            "custkey",
+            F.col(colname).alias("v"),
+            range_id(F.col(colname), cuts).alias("pid"),
         )
-        wpid = Window.orderBy("pid")
-        offsets = (
-            keyed.groupBy("pid")
-            .agg(F.count("*").alias("c"))
-            .select(
-                "pid",
-                F.coalesce(
-                    F.sum("c").over(
-                        wpid.rowsBetween(Window.unboundedPreceding, -1)
-                    ),
-                    F.lit(0),
-                ).alias("off"),
-                F.sum("c")
-                .over(
-                    wpid.rowsBetween(
-                        Window.unboundedPreceding, Window.unboundedFollowing
-                    )
-                )
-                .alias("n"),
-            )
-        )
-        cols = ["custkey", (F.col("off") + F.col("lr") - 1).alias(out)]
+        ranked = running_by_bucket(keyed, "pid", ["v", "custkey"], rk=None)
+        cols = ["custkey", (F.col("rk") - 1).alias(out)]
         if with_n:
-            cols.append(F.col("n"))
-        return local.join(F.broadcast(offsets), "pid").select(*cols)
+            cols.append(F.col("rk_total").alias("n"))
+        return ranked.select(*cols)
 
     scored = (
         pc.join(rank0("neg_r", cuts_r, "r_rank", with_n=True), "custkey")
@@ -1905,19 +1852,14 @@ def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the order stream reduces to PART grain first (keyed
     aggregate, map-side combined); only the part-sized table enters
-    the cumulative sum, and THAT is the two-pass distributed form
-    (the feature_quantile_bins / size_balanced_shards recipe):
-    approxQuantile cuts on revenue give a deterministic range id,
-    revenue accumulates within each range, and a broadcast
-    {ABC_RANK_PARTS}-row prefix table of per-range revenue subtotals
-    lifts local sums to the global cumulative — part-grain data never
-    crosses a SinglePartition exchange (plan-gated).  The boundary
-    compare runs in DECIMAL(38,0): cum_cents * 10000 wraps int64 once
-    corpus revenue passes ~9.2e14 cents (~sf40), while the DuckDB
-    oracle auto-promotes to HUGEINT — decimals keep both engines exact.
+    the cumulative sum, and THAT is ``functions/prefix.py``'s two-pass
+    ``running_by_bucket`` over {ABC_RANK_PARTS} approxQuantile revenue
+    ranges — part-grain data never crosses a SinglePartition exchange
+    (plan-gated).  The boundary compare runs in DECIMAL(38,0):
+    cum_cents * 10000 wraps int64 once corpus revenue passes ~9.2e14
+    cents (~sf40), while the DuckDB oracle auto-promotes to HUGEINT —
+    decimals keep both engines exact.
     """
-    from pyspark.sql.window import Window
-
     rev = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_partkey").alias("partkey"))
@@ -1936,46 +1878,17 @@ def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts = rev.approxQuantile(
         "neg", [i / ABC_RANK_PARTS for i in range(1, ABC_RANK_PARTS)], 0.01
     )
-    pid = sum(
-        (F.when(F.col("neg") >= float(c), 1).otherwise(0) for c in cuts),
-        F.lit(0),
-    ).alias("pid")
-    keyed = rev.select("partkey", "revenue_cents", "neg", pid)
-    w_in = (
-        Window.partitionBy("pid")
-        .orderBy("neg", "partkey")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = keyed.withColumn("cum_in", F.sum("revenue_cents").over(w_in))
-    wpid = Window.orderBy("pid")
-    offsets = (
-        keyed.groupBy("pid")
-        .agg(F.sum("revenue_cents").alias("pid_rev"))
-        .select(
-            "pid",
-            F.coalesce(
-                F.sum("pid_rev").over(
-                    wpid.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).alias("off"),
-            F.sum("pid_rev")
-            .over(
-                wpid.rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            .alias("total_cents"),
-        )
-    )
-    ranked = local.join(F.broadcast(offsets), "pid").select(
+    keyed = rev.select(
         "partkey",
         "revenue_cents",
-        (F.col("off") + F.col("cum_in")).alias("cum_cents"),
-        "total_cents",
+        "neg",
+        range_id(F.col("neg"), cuts).alias("pid"),
+    )
+    ranked = running_by_bucket(
+        keyed, "pid", ["neg", "partkey"], cum_cents=F.col("revenue_cents")
     )
     cum_d = F.col("cum_cents").cast("decimal(38,0)") * 10000
-    tot_d = F.col("total_cents").cast("decimal(38,0)")
+    tot_d = F.col("cum_cents_total").cast("decimal(38,0)")
     classed = ranked.withColumn(
         "abc_class",
         F.when(cum_d <= tot_d * ABC_A_BP, "A")
@@ -2418,17 +2331,13 @@ def key_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     reaches ~1e18 at web-corpus vocabulary sizes — BIGINT would wrap).
 
     Scale shape: one map-side-combined token count (the word_count
-    shuffle), then the global ascending rank is the TWO-PASS bucketed
-    form — row_number inside log2(count) range buckets (a pure
-    order-preserving function of the sort key; ~40 buckets at any
-    corpus size) plus a broadcast bucket-offset prefix table — never
-    an unpartitioned vocabulary window ([[negative_sampling_table]]'s
-    rule).  The final rollup is a 1-row partial/final aggregate.
+    shuffle), then the global ascending rank is ``functions/prefix.py``'s
+    two-pass ``running_by_bucket`` over log2(count) range buckets (~40
+    at any corpus size) — never an unpartitioned vocabulary window.
+    The final rollup is a 1-row partial/final aggregate.
 
     Reference analog: none (SURVEY §2.2 analytics surface).
     """
-    from pyspark.sql.window import Window
-
     d = parallel_scan(spark, sf_dir, "documents")
     counts = (
         d.select(F.explode(tokenize(F.col("text"))).alias("token"))
@@ -2436,15 +2345,8 @@ def key_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
         .withColumn("bk", F.expr("length(bin(cnt)) - 1"))
     )
-    w_in = Window.partitionBy("bk").orderBy("cnt", "token")
-    within = counts.withColumn("rin", F.row_number().over(w_in))
-    sizes = counts.groupBy("bk").agg(F.count("*").alias("c"))
-    w_pfx = Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)
-    prefix = sizes.select(
-        "bk", F.coalesce(F.sum("c").over(w_pfx), F.lit(0)).alias("off")
-    )
-    ranked = within.join(F.broadcast(prefix), "bk").select(
-        "cnt", (F.col("off") + F.col("rin")).alias("rk")
+    ranked = running_by_bucket(counts, "bk", ["cnt", "token"], rk=None).select(
+        "cnt", "rk"
     ).cache()  # vocab-grain rank table, consumed by totals AND shares
     agg = ranked.agg(
         F.count("*").cast("decimal(38,0)").alias("n"),
@@ -2579,14 +2481,12 @@ def hilbert_curve_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the Hilbert index is in-row whole-stage-codegen
     arithmetic; the global equal-count split is the TWO-PASS bucketed
-    rank (row_number inside hd range buckets + broadcast prefix
-    table — [[zorder_layout]]'s exact pattern); the rollup shares the
-    bucket exchange.  No unpartitioned corpus window anywhere.
+    rank of ``functions/prefix.py`` over hd range buckets; the rollup
+    shares the bucket exchange.  No unpartitioned corpus window
+    anywhere.
 
     Reference analog: none (SURVEY §2.2 layout surface).
     """
-    from pyspark.sql.window import Window
-
     o = load_table(spark, sf_dir, "orders")
     dims = o.selectExpr(
         "o_orderkey",
@@ -2634,27 +2534,10 @@ def hilbert_curve_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rb", F.expr(f"hd div {1 << (2 * HB_ORDER - HB_RB_BITS)}"))
         .localCheckpoint()
     )
-    w_in = Window.partitionBy("rb").orderBy("hd", "o_orderkey")
-    within = hvals.withColumn("rn_in", F.row_number().over(w_in))
-    totals = hvals.groupBy("rb").agg(F.count("*").alias("rb_cnt"))
-    w_pfx = Window.orderBy("rb").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("rb").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    prefix = totals.select(
-        "rb",
-        F.coalesce(F.sum("rb_cnt").over(w_pfx), F.lit(0)).alias("offset"),
-        F.sum("rb_cnt").over(w_all).alias("n"),
-    )
-    ranked = within.join(F.broadcast(prefix), "rb").select(
-        "o_custkey",
-        "o_orderdate",
-        (F.col("offset") + F.col("rn_in")).alias("rn"),
-        "n",
-    )
     return (
-        ranked.selectExpr(
-            f"((rn - 1) * {HB_BUCKETS}) div n AS bucket",
+        running_by_bucket(hvals, "rb", ["hd", "o_orderkey"], rn=None)
+        .selectExpr(
+            f"((rn - 1) * {HB_BUCKETS}) div rn_total AS bucket",
             "o_custkey",
             "o_orderdate",
         )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_c_implementation_spark.functions.prefix import range_id, running_by_bucket
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources import load_table
 
@@ -44,68 +45,25 @@ def feature_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition layout), reported as per-bin count and [lo, hi] envelope.
 
     A bare ``ntile() OVER (ORDER BY ...)`` moves the whole table into
-    ONE window task (ADVICE r2) — instead the global rank is computed
-    the scalable way (the QuantileDiscretizer recipe, made exact):
-
-    1. ``approxQuantile`` cut points split the value domain into
-       {RANK_PARTS} ranges; each row's range id ``pid`` is a pure
-       codegen'd fold over the cut literals — a DETERMINISTIC function
-       of the value, so every consumer branch agrees on it (a
-       ``repartitionByRange``+``spark_partition_id`` pid would depend
-       on boundary sampling and break if the exchange isn't reused).
-    2. ``row_number`` ranks WITHIN each pid (window groups are
-       ~data/{RANK_PARTS}, parallel); a broadcast of the
-       {RANK_PARTS}-row per-pid prefix sums lifts local ranks to
-       global ranks.
-    3. The ntile bucket is then pure arithmetic on (rank, total): with
-       q = n div {N_BINS}, r = n mod {N_BINS}, the first r buckets
-       take q+1 rows and the rest q — byte-identical to the oracle's
-       ntile.
-
-    No stage ever holds more than one value-range of the data; the
-    driver-sized objects are the cut-point list and the
-    {RANK_PARTS}-row offsets table.
+    ONE window task (ADVICE r2) — instead the global rank is
+    ``functions/prefix.py``'s two-pass ``running_by_bucket`` over
+    {RANK_PARTS} approxQuantile value ranges (``range_id``).  The ntile
+    bucket is then pure arithmetic on (rank, total): with
+    q = n div {N_BINS}, r = n mod {N_BINS}, the first r buckets take
+    q+1 rows and the rest q — byte-identical to the oracle's ntile.
     """
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     cuts = o.approxQuantile(
         "o_totalprice", [i / RANK_PARTS for i in range(1, RANK_PARTS)], 0.01
     )
-    # pid = #cuts below the value — a flat sum of comparisons (NOT an
-    # F.aggregate lambda: a higher-order function inside a grouping
-    # expression trips Catalyst attribute binding on a plain session).
-    pid_expr = sum(
-        (F.when(F.col("o_totalprice") >= float(c), 1).otherwise(0) for c in cuts),
-        F.lit(0),
-    ).alias("pid")
-    keyed = o.select("o_orderkey", "o_totalprice", pid_expr)
-    local = keyed.withColumn(
-        "lr",
-        F.row_number().over(
-            Window.partitionBy("pid").orderBy("o_totalprice", "o_orderkey")
-        ),
-    )
-    # RANK_PARTS-row side table: exclusive prefix sum of range sizes
-    # plus the grand total — metadata-scale, broadcast by size.
-    wpid = Window.orderBy("pid")
-    offsets = (
-        keyed.groupBy("pid")
-        .agg(F.count("*").alias("c"))
-        .select(
-            "pid",
-            F.coalesce(
-                F.sum("c").over(wpid.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ).alias("off"),
-            F.sum("c")
-            .over(wpid.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-            .alias("total"),
-        )
-    )
-    rank = F.col("off") + F.col("lr")
-    q = F.floor(F.col("total") / N_BINS)
-    r = F.col("total") % N_BINS
+    pid = range_id(F.col("o_totalprice"), cuts).alias("pid")
+    keyed = o.select("o_orderkey", "o_totalprice", pid)
+    ranked = running_by_bucket(keyed, "pid", ["o_totalprice", "o_orderkey"], rk=None)
+    rank = F.col("rk")
+    q = F.floor(F.col("rk_total") / N_BINS)
+    r = F.col("rk_total") % N_BINS
     cut = r * (q + 1)  # ranks <= cut live in the first r (fat) buckets
-    binned = local.join(F.broadcast(offsets), "pid").select(
+    binned = ranked.select(
         "o_totalprice",
         F.when(rank <= cut, F.floor((rank - 1) / (q + 1)) + 1)
         .otherwise(r + F.floor((rank - cut - 1) / q) + 1)

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mapreduce_c_implementation_spark.registry import register
+from mapreduce_c_implementation_spark.functions.prefix import running_by_bucket
 from mapreduce_c_implementation_spark.functions.text import DUCKDB_TOKENIZE, tokenize
 from mapreduce_c_implementation_spark.sources import load_table
 from mapreduce_c_implementation_spark.sources.tables import compute_scan
@@ -1664,10 +1665,10 @@ def conformal_prediction_threshold(spark: SparkSession, sf_dir: str) -> DataFram
     row_number under a total order (score, doc_id); coverage is an
     integer ppm floor division — no interpolation, no floats.
 
-    Scale shape: one scored scan; the calibration quantile is one
-    ordered window over the calibration-positive subset (at 100 TB:
-    the two-pass distributed rank of [[customer_rfm_segmentation]], or
-    approx_percentile with a documented tolerance); the test-side
+    Scale shape: one scored scan; the calibration rank is
+    ``functions/prefix.py``'s two-pass ``running_by_bucket`` bucketed on
+    nonconf_bp (<= 10,001 values, so the prefix table stays tiny) —
+    never one window over every calibration document; the test-side
     coverage is a map-side-combined aggregate against the broadcast
     1-row threshold.
     """
@@ -1694,12 +1695,9 @@ def conformal_prediction_threshold(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     cal = scored.filter((F.col("part") == "cal") & (F.col("y") == 1))
-    w = Window.orderBy("nonconf_bp", "doc_id")
-    ranked = cal.select(
-        "nonconf_bp",
-        F.row_number().over(w).alias("rk"),
-        F.count("*").over(Window.partitionBy()).alias("n"),
-    )
+    ranked = running_by_bucket(
+        cal.select("doc_id", "nonconf_bp"), "nonconf_bp", ["doc_id"], rk=None
+    ).withColumnRenamed("rk_total", "n")
     thr = ranked.filter(
         F.col("rk")
         == F.least(

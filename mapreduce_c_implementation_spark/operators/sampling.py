@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_c_implementation_spark.functions.prefix import running_by_bucket
 from mapreduce_c_implementation_spark.functions.text import DUCKDB_TOKENIZE, tokenize
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources.tables import compute_scan, parallel_scan
@@ -389,13 +390,10 @@ def size_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     next to a thousand 1 KB ones (the problem small_file_compaction
     fixes after the fact; this op prevents it at write time).
 
-    The cumulative sum is computed the SCALABLE way — not one global
-    ordered window (which funnels the corpus through a single
-    partition) but the two-pass form: per-range running sums within
-    {SHARD_RANGE}-doc buckets, a bucket-total prefix table (rows =
-    #buckets, broadcast), and the global offset joined back.  Bit-
-    identical to the oracle's textbook global window, provable because
-    integer addition is associative.
+    The cumulative sum is ``functions/prefix.py``'s two-pass
+    ``running_by_bucket`` over {SHARD_RANGE}-doc buckets — never one
+    global ordered window, which funnels the corpus through a single
+    partition.
 
     Shard id = floor(bytes_before / target), so a document that
     straddles a boundary lands in the earlier shard — shards overshoot
@@ -403,26 +401,11 @@ def size_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = parallel_scan(spark, sf_dir, "documents").select("doc_id", "n_chars")
     b = d.withColumn("rb", F.expr(f"doc_id div {SHARD_RANGE}"))
-    w_in = (
-        Window.partitionBy("rb")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    within = b.withColumn(
-        "cum_in", F.coalesce(F.sum("n_chars").over(w_in), F.lit(0))
-    )
-    totals = b.groupBy("rb").agg(F.sum("n_chars").alias("rb_total"))
-    w_pfx = Window.orderBy("rb").rowsBetween(Window.unboundedPreceding, -1)
-    prefix = totals.select(
-        "rb", F.coalesce(F.sum("rb_total").over(w_pfx), F.lit(0)).alias("offset")
-    )
-    assigned = (
-        within.join(F.broadcast(prefix), "rb")
-        .select(
-            "doc_id",
-            "n_chars",
-            F.expr(f"(offset + cum_in) div {SHARD_TARGET_BYTES}").alias("shard"),
-        )
+    cum = running_by_bucket(b, "rb", ["doc_id"], cum=F.col("n_chars"))
+    assigned = cum.select(
+        "doc_id",
+        "n_chars",
+        F.expr(f"(cum - n_chars) div {SHARD_TARGET_BYTES}").alias("shard"),
     )
     return (
         assigned.groupBy("shard")
@@ -631,16 +614,12 @@ def curriculum_data_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: rank ties break on doc_id, so the order is total and the
     oracle's textbook global ``row_number()`` is reproduced bit-for-bit.
 
-    Scale shape: the global rank is computed the SCALABLE two-pass way,
-    never as one unpartitioned window: documents hash into difficulty
-    RANGE buckets (``difficulty div {CURR_BUCKET_MILLI}`` — a pure
-    function of the value, so every tie lands in one bucket and buckets
-    are totally ordered), rank = within-bucket row_number (keyed
-    shuffle) + broadcast prefix-count offset (bucket-grain table, rows
-    = value-domain/{CURR_BUCKET_MILLI}, tiny at any corpus size).  Same
-    pattern as sequence_packing/zorder_layout; at 100 TB with a skewed
-    score distribution the fixed-width cuts generalize to
-    approxQuantile cuts — the bucket table stays tiny either way.
+    Scale shape: the global rank is ``functions/prefix.py``'s two-pass
+    ``running_by_bucket`` over difficulty RANGE buckets
+    (``difficulty div {CURR_BUCKET_MILLI}``), never one unpartitioned
+    window; at 100 TB with a skewed score distribution the fixed-width
+    cuts generalize to approxQuantile cuts (``range_id``) — the bucket
+    table stays tiny either way.
     """
     d = parallel_scan(spark, sf_dir, "documents")
     per = (
@@ -659,22 +638,12 @@ def curriculum_data_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff = per.selectExpr(
         "doc_id", "tc * 1000 div nt AS difficulty_milli"
     ).withColumn("bk", F.expr(f"difficulty_milli div {CURR_BUCKET_MILLI}"))
-    w_in = Window.partitionBy("bk").orderBy("difficulty_milli", "doc_id")
-    within = diff.withColumn("rin", F.row_number().over(w_in))
-    sizes = diff.groupBy("bk").agg(F.count("*").alias("c"))
-    w_pfx = Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)
-    prefix = sizes.select(
-        "bk", F.coalesce(F.sum("c").over(w_pfx), F.lit(0)).alias("off")
-    )
-    return (
-        within.join(F.broadcast(prefix), "bk")
-        .selectExpr(
-            "doc_id",
-            "CAST(difficulty_milli AS BIGINT) AS difficulty_milli",
-            "CAST(off + rin AS BIGINT) AS curriculum_rank",
-            f"CAST((off + rin - 1) div {CURR_SHARD_DOCS} AS BIGINT)"
-            " AS shard_id",
-        )
+    ranked = running_by_bucket(diff, "bk", ["difficulty_milli", "doc_id"], rk=None)
+    return ranked.selectExpr(
+        "doc_id",
+        "CAST(difficulty_milli AS BIGINT) AS difficulty_milli",
+        "CAST(rk AS BIGINT) AS curriculum_rank",
+        f"CAST((rk - 1) div {CURR_SHARD_DOCS} AS BIGINT) AS shard_id",
     )
 
 
@@ -1492,19 +1461,14 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ppm probabilities are pure integers.
 
     Scale shape: one map-side-combined token aggregate (the word_count
-    shuffle), then the cumulative ranges are computed the SCALABLE
-    two-pass way — NEVER as one unpartitioned window over the
-    vocabulary (a 100 TB web corpus has 10^8-10^9 raw types, hapax
-    heavy): tokens hash-shuffle into lexicographic {NEG_BUCKET_PREFIX}-
-    char-prefix range buckets (order-preserving, totally ordered, ties
-    impossible across buckets), the within-bucket running sum is a
-    keyed window, and the bucket-total prefix table (rows <= alphabet^
-    {NEG_BUCKET_PREFIX}, tiny at any corpus size) broadcasts back with
-    the grand total riding in the same window pass — the
-    [[curriculum_data_ordering]] / [[zorder_layout]] pattern.  A
-    production word2vec table would also apply a min-count floor,
-    which bounds the table further; omitted here to keep the exact
-    unigram distribution.
+    shuffle), then the cumulative ranges are ``functions/prefix.py``'s
+    two-pass ``running_by_bucket`` over lexicographic
+    {NEG_BUCKET_PREFIX}-char-prefix range buckets (prefix table rows <=
+    alphabet^{NEG_BUCKET_PREFIX}) — NEVER one unpartitioned window over
+    the vocabulary (a 100 TB web corpus has 10^8-10^9 raw types, hapax
+    heavy).  A production word2vec table would also apply a min-count
+    floor, which bounds the table further; omitted here to keep the
+    exact unigram distribution.
 
     Reference analog: src/main.c:61-75 (word-count reduce) — this is
     that aggregate with a smoothing epilogue.
@@ -1524,42 +1488,17 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("weight_milli"),
     ).withColumn("bk", F.substring("token", 1, NEG_BUCKET_PREFIX))
-    # pass 1: per-bucket totals -> tiny prefix table (offset before each
-    # bucket + grand total, one window over the bucket-grain table)
-    sizes = weighted.groupBy("bk").agg(
-        F.sum("weight_milli").alias("wsum")
-    )
-    w_pfx = Window.orderBy("bk").rowsBetween(Window.unboundedPreceding, -1)
-    w_tot = Window.orderBy("bk").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    prefix = sizes.select(
-        "bk",
-        F.coalesce(F.sum("wsum").over(w_pfx), F.lit(0)).alias("off"),
-        F.sum("wsum").over(w_tot).alias("total_milli"),
-    )
-    # pass 2: within-bucket running sum (keyed shuffle) + broadcast offset
-    w_in = (
-        Window.partitionBy("bk")
-        .orderBy("token")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        weighted.withColumn(
-            "cum_in", F.coalesce(F.sum("weight_milli").over(w_in), F.lit(0))
-        )
-        .join(F.broadcast(prefix), "bk")
-        .select(
-            "token",
-            F.col("cnt").cast("long").alias("cnt"),
-            "weight_milli",
-            (F.col("off") + F.col("cum_in"))
-            .cast("long")
-            .alias("cum_before_milli"),
-            F.expr(
-                "CAST(weight_milli * 1000000 div total_milli AS BIGINT)"
-            ).alias("prob_ppm"),
-        )
+    cum = running_by_bucket(weighted, "bk", ["token"], cum=F.col("weight_milli"))
+    return cum.select(
+        "token",
+        F.col("cnt").cast("long").alias("cnt"),
+        "weight_milli",
+        (F.col("cum") - F.col("weight_milli"))
+        .cast("long")
+        .alias("cum_before_milli"),
+        F.expr("CAST(weight_milli * 1000000 div cum_total AS BIGINT)").alias(
+            "prob_ppm"
+        ),
     )
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_c_implementation_spark.functions.prefix import running_by_bucket
 from mapreduce_c_implementation_spark.functions.text import (
     DUCKDB_TOKENIZE,
     duckdb_ngrams,
@@ -532,41 +533,21 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins overflow by at most one document — same guarantee streaming
     packers give.
 
-    The running total is computed the SCALABLE two-pass way (the
-    size_balanced_shards pattern), NOT a single unpartitioned window
-    (which compiles to Exchange SinglePartition and funnels the whole
-    corpus through one task): per-range inclusive cumulative sums
-    within {PACK_RANGE}-doc buckets, a bucket-total prefix table
-    (rows = #buckets) broadcast back, run_total = offset + in-range
-    cumsum.  Bit-identical to the textbook global window because
-    integer addition is associative; a plan gate pins the absence of
-    SinglePartition exchanges.
+    The running total is ``functions/prefix.py``'s two-pass
+    ``running_by_bucket`` over {PACK_RANGE}-doc buckets, NOT a single
+    unpartitioned window (Exchange SinglePartition — the whole corpus
+    through one task); a plan gate pins that.
 
     Output per bin: document count, token total, and the doc_id range —
     the range doubles as the shuffle-free read plan (each bin maps to a
     contiguous doc_id span, so the pack stage can partition-prune).
     Empty docs are excluded (they pack into no sequence).
     """
-    from pyspark.sql.window import Window
-
     d = parallel_scan(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.size(tokenize(F.col("text"))).cast("long").alias("n_tokens")
     ).withColumn("rb", F.expr(f"doc_id div {PACK_RANGE}"))
-    w_in = (
-        Window.partitionBy("rb")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    within = toks.withColumn("cum_in", F.sum("n_tokens").over(w_in))
-    totals = toks.groupBy("rb").agg(F.sum("n_tokens").alias("rb_total"))
-    w_pfx = Window.orderBy("rb").rowsBetween(Window.unboundedPreceding, -1)
-    prefix = totals.select(
-        "rb", F.coalesce(F.sum("rb_total").over(w_pfx), F.lit(0)).alias("offset")
-    )
-    cum = within.join(F.broadcast(prefix), "rb").select(
-        "doc_id", "n_tokens", (F.col("offset") + F.col("cum_in")).alias("run_total")
-    )
+    cum = running_by_bucket(toks, "rb", ["doc_id"], run_total=F.col("n_tokens"))
     return (
         cum.filter(F.col("n_tokens") > 0)
         .selectExpr(
@@ -6425,16 +6406,13 @@ def average_precision_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the head of the ranking, AUC weighs all pairs equally — the pair a
     retrieval-filter model card reports together.
 
-    Scale shape: the global rank is the TWO-PASS BUCKETED rank (score
-    basis points are the buckets: per-bucket row_number over doc_id +
-    a broadcast bucket-prefix table — [[curriculum_data_ordering]]'s
-    pattern), and the per-bucket positive prefix rides the same
-    window; one 1-row reduce ends it.  No unpartitioned corpus window.
+    Scale shape: the global rank and the positive running count are
+    one ``functions/prefix.py`` ``running_by_bucket`` call bucketed on
+    the negated score basis points; one 1-row reduce ends it.  No
+    unpartitioned corpus window.
 
     Reference analog: none (LLM-pipeline eval surface per the brief).
     """
-    from pyspark.sql.window import Window
-
     d = compute_scan(spark, sf_dir, "documents")
     ts = tokenize(F.col("text"))
     scored = (
@@ -6443,38 +6421,15 @@ def average_precision_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
+            # negated: scores rank DESC, doc_id ASC
             F.expr(
-                f"10000 - CAST(size(array_intersect(ts, {_F1_STOPS}))"
-                " AS BIGINT) * 10000 div size(ts)"
-            ).alias("score_bp"),
+                f"CAST(size(array_intersect(ts, {_F1_STOPS}))"
+                " AS BIGINT) * 10000 div size(ts) - 10000"
+            ).alias("neg_bp"),
         )
     )
-    # two-pass bucketed global rank: within-score window + broadcast
-    # score-grain prefix table (scores sort DESC, doc_id ASC)
-    w_in = Window.partitionBy("score_bp").orderBy("doc_id")
-    in_bucket = scored.select(
-        "score_bp",
-        "y",
-        F.row_number().over(w_in).alias("rk_in"),
-        F.sum("y").over(w_in.rowsBetween(Window.unboundedPreceding, 0)).alias(
-            "pos_in"
-        ),
-    )
-    grain = scored.groupBy("score_bp").agg(
-        F.count("*").alias("n_s"), F.sum("y").alias("p_s")
-    )
-    w_above = Window.orderBy(F.desc("score_bp")).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    prefix = grain.select(
-        "score_bp",
-        F.coalesce(F.sum("n_s").over(w_above), F.lit(0)).alias("n_above"),
-        F.coalesce(F.sum("p_s").over(w_above), F.lit(0)).alias("p_above"),
-    )
-    ranked = in_bucket.join(F.broadcast(prefix), "score_bp").select(
-        "y",
-        (F.col("n_above") + F.col("rk_in")).alias("k"),
-        (F.col("p_above") + F.col("pos_in")).alias("cum_pos"),
+    ranked = running_by_bucket(
+        scored, "neg_bp", ["doc_id"], k=None, cum_pos=F.col("y")
     )
     terms = ranked.agg(
         F.sum(

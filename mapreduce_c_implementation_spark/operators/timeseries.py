@@ -243,10 +243,10 @@ def concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines; everything is integer microseconds and unit deltas.
 
     Scale shape: the sweep is one window per event_type over 2 rows
-    per event.  A single globally-hot key would switch to the
-    [[size_balanced_shards]] two-pass form: per-time-range partial
-    sums, tiny prefix table, offset join — running sums distribute
-    because integer addition is associative.
+    per event.  A single globally-hot key would switch to
+    ``functions/prefix.py``'s two-pass ``running_by_bucket`` over
+    time-range buckets — running sums distribute because integer
+    addition is associative.
     """
     from pyspark.sql.window import Window
 

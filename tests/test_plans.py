@@ -5,6 +5,8 @@ because a plan that reads extra columns or shuffles a dim table is a
 
 from __future__ import annotations
 
+import pytest
+
 from mapreduce_c_implementation_spark.plans.inspect import (
     assert_broadcast_join,
     assert_parquet_pushdown,
@@ -422,51 +424,54 @@ def _single_partition_exchanges(df) -> int:
     return len(nodes)
 
 
-def test_zorder_rank_is_distributed(spark, sf_correct):
-    """Z-order layout: the global Morton rank must be the two-pass
-    distributed form — the fact stream ranks inside hash-partitioned
-    zval range buckets; the ONLY SinglePartition exchange allowed is
-    the bucket-count prefix table (<=2^ZORDER_RB_BITS rows)."""
-    df = get_operator("zorder_layout").query_fn(spark, sf_correct)
+# (op, bucket, min hashpartitioning(<bucket> count, max SinglePartition
+# exchanges); each comment names the allowed SinglePartition exchanges.
+_PREFIX_GATES = [
+    # zval top-bit buckets; the prefix table (<= 2^ZORDER_RB_BITS rows)
+    ("zorder_layout", "rb", 1, 1),
+    # doc_id range buckets; the bucket-total prefix table
+    ("sequence_packing", "rb", 1, 1),
+    # three ranks over approxQuantile pids; their three
+    # RFM_RANK_PARTS-row prefix tables plus the 1-row ref-date
+    # aggregate (AQE prints it twice, initial + final plan)
+    ("customer_rfm_segmentation", "pid", 3, 5),
+    # revenue-range pids; the pid-subtotal prefix table
+    ("part_abc_classification", "pid", 1, 1),
+    # difficulty range buckets; the bucket-size prefix table
+    ("curriculum_data_ordering", "bk", 1, 1),
+    # token-prefix buckets; the prefix table (<= alphabet^NEG_BUCKET_PREFIX)
+    ("negative_sampling_table", "bk", 1, 1),
+    # hd range buckets; the prefix table (<= 2^HB_RB_BITS rows)
+    ("hilbert_curve_layout", "rb", 1, 1),
+    # log2-count buckets; the prefix table plus the 1-row rollup
+    # stages (totals, shares and their final-join sides)
+    ("key_gini_concentration", "bk", 1, 4),
+    # doc_id range buckets; the bucket-total prefix table
+    ("size_balanced_shards", "rb", 1, 1),
+    # approxQuantile pids; the RANK_PARTS-row prefix table
+    ("feature_quantile_bins", "pid", 1, 1),
+    # negated score buckets; the prefix table plus the 1-row AP reduce
+    ("average_precision_eval", "neg_bp", 1, 2),
+    # score buckets (<= 10,001); the prefix table
+    ("conformal_prediction_threshold", "nonconf_bp", 1, 1),
+]
+
+
+@pytest.mark.parametrize(
+    "op, bucket, min_hash, max_single",
+    _PREFIX_GATES,
+    ids=[g[0] for g in _PREFIX_GATES],
+)
+def test_prefix_sum_is_distributed(
+    spark, sf_correct, op, bucket, min_hash, max_single
+):
+    """Two-pass global rank / prefix sum (functions/prefix.py): rows may
+    only cross hashpartitioning(<bucket>) exchanges; the SinglePartition
+    bound counts every allowed bucket-grain or 1-row exchange."""
+    df = get_operator(op).query_fn(spark, sf_correct)
     plan = physical_plan(df)
-    assert "hashpartitioning(rb" in plan, plan
-    assert _single_partition_exchanges(df) <= 1, plan
-
-
-def test_sequence_packing_prefix_sum_is_distributed(spark, sf_correct):
-    """Sequence packing: the running token total must be the two-pass
-    prefix sum — corpus-grain cumsum inside hash-partitioned doc_id
-    range buckets; only the bucket-total prefix table (rows = #buckets)
-    may pass through a SinglePartition exchange."""
-    df = get_operator("sequence_packing").query_fn(spark, sf_correct)
-    plan = physical_plan(df)
-    assert "hashpartitioning(rb" in plan, plan
-    assert _single_partition_exchanges(df) <= 1, plan
-
-
-def test_rfm_ranks_are_distributed(spark, sf_correct):
-    """RFM: each of the three global quintile ranks must be the
-    two-pass distributed rank (rank within deterministic value-range
-    pids + broadcast prefix table).  Customer-grain rows may only
-    cross hashpartitioning exchanges; the allowed SinglePartition
-    exchanges are the 1-row ref-date aggregate (which AQE prints as
-    two node ids, initial + final plan) and the three
-    RFM_RANK_PARTS-row offsets windows."""
-    df = get_operator("customer_rfm_segmentation").query_fn(spark, sf_correct)
-    plan = physical_plan(df)
-    assert plan.count("hashpartitioning(pid") >= 3, plan
-    assert _single_partition_exchanges(df) <= 5, plan
-
-
-def test_abc_cumsum_is_distributed(spark, sf_correct):
-    """ABC: the cumulative revenue sum must be the two-pass form —
-    part-grain rows accumulate inside hash-partitioned revenue-range
-    pids; only the pid-subtotal prefix table may cross a
-    SinglePartition exchange."""
-    df = get_operator("part_abc_classification").query_fn(spark, sf_correct)
-    plan = physical_plan(df)
-    assert "hashpartitioning(pid" in plan, plan
-    assert _single_partition_exchanges(df) <= 1, plan
+    assert plan.count(f"hashpartitioning({bucket}") >= min_hash, plan
+    assert _single_partition_exchanges(df) <= max_single, plan
 
 
 def test_pipeline_end2end_two_shuffles(spark, sf_correct):
@@ -766,18 +771,6 @@ def test_bpe_merge_steps_no_corpus_rescan(spark, sf_correct):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_curriculum_rank_is_distributed(spark, sf_correct):
-    """Curriculum ordering: the exact global difficulty rank must be
-    the two-pass distributed form — row_number inside hash-partitioned
-    difficulty range buckets (bk); the ONLY SinglePartition exchange
-    allowed is the bucket-size prefix table (rows = value-domain /
-    CURR_BUCKET_MILLI)."""
-    df = get_operator("curriculum_data_ordering").query_fn(spark, sf_correct)
-    plan = physical_plan(df)
-    assert "hashpartitioning(bk" in plan, plan
-    assert _single_partition_exchanges(df) <= 1, plan
-
-
 def test_whitening_stats_join_broadcasts(spark, sf_correct):
     """Dimension whitening: the d-row moment table joins back
     BROADCAST — the corpus-sized (vec_id, dim) stream must never
@@ -866,29 +859,6 @@ def test_count_min_cells_broadcast_to_probes(spark, sf_correct):
     assert_broadcast_join(df, expect=1)
 
 
-def test_negative_sampling_cumsum_is_distributed(spark, sf_correct):
-    """Negative-sampling table: the vocabulary-grain cumulative ranges
-    must be the two-pass prefix sum — running sums inside
-    hash-partitioned token-prefix buckets (bk); only the bucket-total
-    prefix table (rows <= alphabet^NEG_BUCKET_PREFIX) may cross a
-    SinglePartition exchange."""
-    df = get_operator("negative_sampling_table").query_fn(spark, sf_correct)
-    plan = physical_plan(df)
-    assert "hashpartitioning(bk" in plan, plan
-    assert _single_partition_exchanges(df) <= 1, plan
-
-
-def test_hilbert_rank_is_distributed(spark, sf_correct):
-    """Hilbert layout: the global equal-count rank must be the two-pass
-    form — row_number inside hash-partitioned hd range buckets; the
-    ONLY SinglePartition exchange allowed is the bucket prefix table
-    (<= 2^HB_RB_BITS rows)."""
-    df = get_operator("hilbert_curve_layout").query_fn(spark, sf_correct)
-    plan = physical_plan(df)
-    assert "hashpartitioning(rb" in plan, plan
-    assert _single_partition_exchanges(df) <= 1, plan
-
-
 def test_tiered_trim_stays_keyed(spark, sf_correct):
     """The tiered exact-substring pipeline is equi-keyed end to end:
     digest/gram/doc exchanges only, no nested-loop or cartesian stage
@@ -910,17 +880,6 @@ def test_tfidf_pairs_stay_term_keyed(spark, sf_correct):
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-def test_gini_rank_is_distributed(spark, sf_correct):
-    """Gini: the vocabulary ascending rank must be the two-pass form
-    (log2-count buckets); SinglePartition exchanges are limited to the
-    bucket prefix table and the 1-row rollup stages (totals, shares,
-    and their final-join sides) — all bounded, never the vocabulary."""
-    df = get_operator("key_gini_concentration").query_fn(spark, sf_correct)
-    plan = physical_plan(df)
-    assert "hashpartitioning(bk" in plan, plan
-    assert _single_partition_exchanges(df) <= 4, plan
 
 
 def test_e2lsh_candidate_join_is_hash_join(spark, sf_correct):
