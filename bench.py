@@ -15,8 +15,10 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
+from contextlib import contextmanager
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -229,86 +231,15 @@ HEADLINE = [
     "index_bucket_compaction",
     "index_upsert_delete_lifecycle",
     # round-13 additions (batch surface; the two streaming r13 ops are
-    # probed via scale_probe and timed by their own tests)
+    # probed via `scripts/measure.py scale` and timed by their own tests)
     "index_snapshot_vacuum",
 ]
 
 
-def flagship_throughput(spark, sf_dir: str, target_mb: int) -> dict:
-    """The BASELINE.md comparison: the reference indexes ~708 MB of raw
-    text in 19.1 s (~37 MB/s on 20 cores).  Same-shape measurement —
-    stage a ~target_mb text corpus (documents.text replicated), then run
-    ``run_inverted_index_job`` end to end (text scan -> tokenize ->
-    combine -> word-keyed shuffle -> sorted postings -> part-%05d sink)
-    and report MB/s.  Staging is excluded from the timed window."""
-    import math
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from mapreduce_c_implementation_spark.job import MapReduceJob, run_inverted_index_job
-    from mapreduce_c_implementation_spark.metrics import input_bytes
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("text")
-    base_bytes = docs.agg(
-        F.sum(F.octet_length("text") + F.lit(1)).alias("b")
-    ).collect()[0][0]
-    copies = max(1, math.ceil(target_mb * 1_000_000 / max(1, base_bytes)))
-    corpus = tempfile.mkdtemp(prefix="flagship_corpus_")
-    out_dir = tempfile.mkdtemp(prefix="flagship_out_")
-    report = str(Path(__file__).resolve().parent / "metrics_report.txt")
-    try:
-        (
-            docs.crossJoin(F.broadcast(spark.range(copies)))
-            .select("text")
-            .repartition(64)
-            .write.mode("overwrite")
-            .text(corpus)
-        )
-        corpus_bytes = input_bytes([corpus])
-        job = MapReduceJob(
-            input_paths=[corpus], output_dir=out_dir, metrics_path=report
-        )
-        # Same best-of-N rule as the headline loop: this box's noise
-        # windows can double a single run's wall time.  Staging is
-        # shared; each rep re-runs the full job (scan -> tokenize ->
-        # shuffle -> sink) from scratch.
-        reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
-        wall = float("inf")
-        for _ in range(reps):
-            result = run_inverted_index_job(spark, job)
-            wall = min(wall, result.metrics.wall_s)
-        return {
-            "corpus_mb": round(corpus_bytes / 1e6, 1),
-            "wall_s": wall,
-            "mb_per_s": round(corpus_bytes / 1e6 / wall, 1) if wall else 0.0,
-            "metrics_report": report,
-        }
-    finally:
-        shutil.rmtree(corpus, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if not Path(sf_dir).is_dir():
-        sys.exit(f"bench.py: SPARK_GRAFT_SF_DIR={sf_dir!r} is not a directory")
-    try:
-        sf = float(Path(sf_dir).name.removeprefix("sf"))
-    except ValueError:
-        sf = -1.0  # non-sf-named dir; still benchable
-
-    from mapreduce_c_implementation_spark.registry import all_operators
-    from mapreduce_c_implementation_spark.session import build_session
-
-    spark = build_session("bench")
-    ops = all_operators()
-    names = [n for n in HEADLINE if n in ops]
-
-    # Warm the JVM once (codegen, arrow, shuffle machinery, noop sink) on
-    # a representative tiny pipeline so timings measure steady-state
-    # query execution, not first-query session initialization.
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM once (codegen, arrow, shuffle machinery, noop sink) on
+    a representative tiny pipeline so timings measure steady-state
+    query execution, not first-query session initialization."""
     from pyspark.sql import functions as F
 
     warm = (
@@ -333,29 +264,141 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
+
+def timed_run(spark, query_fn, sf_dir: str) -> float:
+    """Seconds for one run of ``query_fn(spark, sf_dir)`` into the noop
+    sink (full plan, no collect, no sink I/O).
+
+    The clock starts BEFORE query_fn: several operators do eager work
+    inside it (cache-scoped forced materialization of codebooks/band
+    tables, fixture staging) and excluding that would overstate any op
+    that fronts its dominant stage.  The cache is cleared afterwards so
+    a query that caches an intermediate is always billed for building
+    it."""
+    t0 = time.perf_counter()
+    query_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    dt = time.perf_counter() - t0
+    spark.catalog.clearCache()
+    return dt
+
+
+@contextmanager
+def flagship_job(spark, sf_dir: str, target_mb: int, metrics_path: str | None = None):
+    """Stage a ~target_mb text corpus (documents.text replicated) and
+    yield ``(job, corpus_bytes)``: a ``MapReduceJob`` over it writing to
+    a scratch output dir.  Both directories are removed on exit, so
+    staging stays outside every timed window."""
+    import math
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from mapreduce_c_implementation_spark.job import MapReduceJob
+    from mapreduce_c_implementation_spark.metrics import input_bytes
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("text")
+    base_bytes = docs.agg(
+        F.sum(F.octet_length("text") + F.lit(1)).alias("b")
+    ).collect()[0][0]
+    copies = max(1, math.ceil(target_mb * 1_000_000 / max(1, base_bytes)))
+    corpus = tempfile.mkdtemp(prefix="flagship_corpus_")
+    out_dir = tempfile.mkdtemp(prefix="flagship_out_")
+    try:
+        (
+            docs.crossJoin(F.broadcast(spark.range(copies)))
+            .select("text")
+            .repartition(64)
+            .write.mode("overwrite")
+            .text(corpus)
+        )
+        job = MapReduceJob(
+            input_paths=[corpus], output_dir=out_dir, metrics_path=metrics_path
+        )
+        yield job, input_bytes([corpus])
+    finally:
+        shutil.rmtree(corpus, ignore_errors=True)
+        shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def flagship_throughput(spark, sf_dir: str, target_mb: int) -> dict:
+    """The BASELINE.md comparison: the reference indexes ~708 MB of raw
+    text in 19.1 s (~37 MB/s on 20 cores).  Same-shape measurement —
+    stage a ~target_mb text corpus (documents.text replicated), then run
+    ``run_inverted_index_job`` end to end (text scan -> tokenize ->
+    combine -> word-keyed shuffle -> sorted postings -> part-%05d sink)
+    and report MB/s.  Staging is excluded from the timed window."""
+    from mapreduce_c_implementation_spark.job import run_inverted_index_job
+
+    report = str(Path(__file__).resolve().parent / "metrics_report.txt")
+    with flagship_job(spark, sf_dir, target_mb, report) as (job, corpus_bytes):
+        # Same best-of-N rule as the headline loop: this box's noise
+        # windows can double a single run's wall time.  Staging is
+        # shared; each rep re-runs the full job (scan -> tokenize ->
+        # shuffle -> sink) from scratch.
+        reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
+        wall = float("inf")
+        for _ in range(reps):
+            result = run_inverted_index_job(spark, job)
+            wall = min(wall, result.metrics.wall_s)
+    return {
+        "corpus_mb": round(corpus_bytes / 1e6, 1),
+        "wall_s": wall,
+        "mb_per_s": round(corpus_bytes / 1e6 / wall, 1) if wall else 0.0,
+        "metrics_report": report,
+    }
+
+
+def git_rev() -> str | None:
+    """HEAD of the git checkout holding bench.py; None outside one."""
+    here = Path(__file__).resolve().parent
+    cmd = ["git", "rev-parse", "--show-toplevel", "HEAD"]
+    try:
+        out = subprocess.check_output(cmd, cwd=here, stderr=subprocess.DEVNULL)
+    except (OSError, subprocess.CalledProcessError):
+        return None
+    top, rev = out.decode().splitlines()
+    return rev if Path(top).resolve() == here else None
+
+
+def fixture() -> tuple[str, float]:
+    """The fixture directory ($SPARK_GRAFT_SF_DIR) and its scale factor."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if not Path(sf_dir).is_dir():
+        sys.exit(f"bench.py: SPARK_GRAFT_SF_DIR={sf_dir!r} is not a directory")
+    try:
+        sf = float(Path(sf_dir).name.removeprefix("sf"))
+    except ValueError:
+        sf = -1.0  # non-sf-named dir; still benchable
+    return sf_dir, sf
+
+
+def main() -> None:
+    sf_dir, sf = fixture()
+
+    from mapreduce_c_implementation_spark.registry import all_operators
+    from mapreduce_c_implementation_spark.session import build_session
+
+    spark = build_session("bench")
+    ops = all_operators()
+    names = [n for n in HEADLINE if n in ops]
+    warm_up(spark, sf_dir)
+
     # Best-of-N timing with INTERLEAVED passes: this box shows noise
     # windows tens of seconds long during which every query runs many
     # times slower (measured: the same plan swings 0.8 s <-> 8 s).
     # Back-to-back repeats of one query both land inside such a window;
     # running the whole suite N times and taking each query's min means
     # a noise window must recur at the same point of every pass to bias
-    # a result.  The cache is cleared between queries so one that
-    # caches an intermediate is always billed for building it.
+    # a result.
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
     timings: dict[str, float] = {name: float("inf") for name in names}
     for _ in range(reps):
         for name in names:
-            # The clock starts BEFORE query_fn: several operators do
-            # eager work inside it (cache-scoped forced materialization
-            # of codebooks/band tables, fixture staging) and excluding
-            # that would overstate any op that fronts its dominant
-            # stage.  Staging helpers cache per sf_dir, so reps after
-            # the first measure steady state and min() absorbs it.
-            t0 = time.perf_counter()
-            df = ops[name].query_fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = min(timings[name], time.perf_counter() - t0)
-            spark.catalog.clearCache()
+            # Staging helpers cache per sf_dir, so reps after the first
+            # measure steady state and min() absorbs it.
+            dt = timed_run(spark, ops[name].query_fn, sf_dir)
+            timings[name] = min(timings[name], dt)
         # Deterministic heap reset between passes: identical query order
         # means identical allocation profiles, so without this a major GC
         # lands at the SAME position in every pass and min() can't filter
@@ -370,6 +413,9 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "reps": reps,
+        "git_rev": git_rev(),
         # Round-3 methodology change, affects cross-round comparison:
         # the clock now includes query CONSTRUCTION, so operators that
         # execute eagerly inside query_fn (iterative localCheckpoint
@@ -427,7 +473,7 @@ def main() -> None:
         "value": payload["value"],
         "unit": "sec",
         "sf": sf,
-        "cpus": spark.sparkContext.defaultParallelism,
+        "cpus": payload["cpus"],
     }
     print(json.dumps(summary), flush=True)
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
