@@ -13,10 +13,11 @@ Thread-count knobs map to configuration, not code:
 
 ``run_inverted_index_job`` is the flagship end-to-end: raw TEXT FILES in
 (the reference's actual input format, src/reader_queue.c:180-337),
-tokenized with ``input_file_name()`` lineage (== MR_CurrentFile,
-src/mapreduce.c:56-58), reduced to sorted distinct posting lists, and
-written as ``part-%05d`` text shards exactly like the reference sink
-(src/main.c:92-98) — one file per reducer partition.
+tokenized with ``_metadata.file_name`` lineage (== MR_CurrentFile,
+src/mapreduce.c:56-58), shuffled once on the word, reduced to sorted
+distinct posting lists, and written as ``part-%05d`` text shards exactly
+like the reference sink (src/main.c:92-98) — one file per reducer
+partition, its words in byte order.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_c_implementation_spark.functions.text import (
@@ -72,13 +73,50 @@ class JobResult:
     output_files: list[str] = field(default_factory=list)
 
 
-def run_inverted_index_job(spark: SparkSession, job: MapReduceJob) -> JobResult:
-    """The flagship pipeline end-to-end over raw text files.
+def inverted_index_plan(
+    spark: SparkSession, input_paths: list[str], num_partitions: int
+) -> DataFrame:
+    """The flagship's plan, the reference's shape (src/mapreduce.h:105,
+    src/sorting.c): scan -> Arrow map + combine -> ONE hash exchange on
+    the word into ``num_partitions`` reducers -> per-reducer
+    ``collect_set`` -> per-partition word sort -> one ``word -> [files]``
+    row per word."""
+    lines = spark.read.text(input_paths).select(
+        F.col("value").alias("line"),
+        # MR_CurrentFile lineage: which input file produced this record.
+        # The hidden metadata column is a per-file constant, with no
+        # per-line path split.
+        F.col("_metadata.file_name").alias("fname"),
+    )
+    # Map + combine in Arrow: distinct (word, fname) pairs per task,
+    # file names decoded (see tokenize_pairs_arrow).  The JVM
+    # ``tokenize`` stays the single source of truth for the
+    # oracle-paired operators.
+    pairs = lines.mapInArrow(
+        tokenize_pairs_arrow, schema="word string, fname string"
+    )
+    return (
+        # The one exchange: the reference's word-hash partitioner
+        # (src/partition.c).  groupBy reuses this distribution, so no
+        # map-side partial collect_set and no second shuffle.
+        pairs.repartition(num_partitions, F.col("word"))
+        .groupBy("word")
+        .agg(F.sort_array(F.collect_set("fname")).alias("files"))
+        # Each part file lists its words in byte (strcmp) order, the
+        # reference's sorted-key contract; the formatting projection
+        # below is narrow, so the order reaches the sink.
+        .sortWithinPartitions("word")
+        .select(
+            F.concat(
+                F.col("word"), F.lit(" -> ["), F.array_join("files", ", "), F.lit("]")
+            ).alias("value")
+        )
+    )
 
-    Scan (line-boundary-safe text source) -> flatMap tokenize ->
-    partial-agg combine (collect_set) -> shuffle on word ->
-    final agg + in-group sort -> format -> part-%05d text sink.
-    """
+
+def run_inverted_index_job(spark: SparkSession, job: MapReduceJob) -> JobResult:
+    """The flagship pipeline end-to-end over raw text files:
+    ``inverted_index_plan`` written as part-%05d text shards."""
     job.validate()
     out = Path(job.output_dir)
     if job.clear_output and out.exists():
@@ -92,35 +130,7 @@ def run_inverted_index_job(spark: SparkSession, job: MapReduceJob) -> JobResult:
     stage_floor = max_stage_id(spark)
     t0 = time.perf_counter()
 
-    lines = spark.read.text(job.input_paths).select(
-        F.col("value").alias("line"),
-        # MR_CurrentFile lineage: which input file produced this record.
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("fname"),
-    )
-    # Map + combine in Arrow (r14, guide §4.2): tokenize_pairs_arrow is
-    # the vectorized twin of ``explode(tokenize(line))`` that also
-    # dedups (word, fname) per task before anything crosses back to the
-    # JVM — RE2 splitting + C++ distinct replace the Java-regex explode
-    # and the corpus-sized collect_set hash-agg input (measured 2.3x on
-    # the 2.8 GB flagship corpus, identical output; the JVM ``tokenize``
-    # stays the single source of truth for all oracle-paired operators).
-    pairs = lines.mapInArrow(
-        tokenize_pairs_arrow, schema="word string, fname string"
-    )
-    postings = (
-        pairs.groupBy("word")
-        .agg(F.sort_array(F.collect_set("fname")).alias("files"))
-        # Shard assignment keys on the WORD (the reference's default
-        # word-hash partitioner, src/partition.c) before formatting; the
-        # formatting projection below is narrow, so the word-keyed
-        # distribution survives into the part files.
-        .repartition(job.num_partitions, F.col("word"))
-        .select(
-            F.concat(
-                F.col("word"), F.lit(" -> ["), F.array_join("files", ", "), F.lit("]")
-            ).alias("value")
-        )
-    )
+    postings = inverted_index_plan(spark, job.input_paths, job.num_partitions)
     # One text shard per reducer partition — part-%05d like src/main.c:92-98.
     postings.write.text(str(out))
 

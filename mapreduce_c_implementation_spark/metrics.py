@@ -5,9 +5,10 @@ README.md:417 uses the stable section order for regression diffing).
 
 Spark already collects the deep numbers (per-stage run time, shuffle
 bytes, task counts) on the driver's status store; ``collect_stage_metrics``
-snapshots them through the public status API — the listener-bus-backed
-store behind the UI/REST endpoints — so stage timing costs nothing extra,
-exactly like the reference's always-on clocks.  Partition skew (the
+fetches one job's stage records by id through the public status API —
+the listener-bus-backed store behind the UI/REST endpoints — so stage
+timing costs nothing extra, exactly like the reference's always-on
+clocks.  Partition skew (the
 reference's "Top 10 partitions by key count", src/metrics.c:360-395)
 is reported from reducer-output shard sizes: bytes per part file IS the
 per-reduce-partition load, with no second pass over the data.
@@ -39,30 +40,36 @@ class StageMetric:
 
 
 def max_stage_id(spark) -> int:
-    """Highest stage id seen so far — pass as ``after`` to scope a later
-    ``collect_stage_metrics`` snapshot to one job."""
-    stages = _stage_list(spark)
-    ids = [s.stage_id for s in stages]
-    return max(ids) if ids else -1
+    """Highest stage id allocated so far — pass as ``after`` to scope a
+    later ``collect_stage_metrics`` snapshot to one job.  Read from the
+    DAG scheduler's id counter, which store retention cannot drop."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextStageId() - 1
 
 
-def _stage_list(spark) -> list[StageMetric]:
+def collect_stage_metrics(spark, after: int = -1) -> list[StageMetric]:
+    """Stages with id > ``after``, each fetched from the driver status
+    store by id (public status API; zero instrumentation cost).  A stage
+    the store no longer holds (``spark.ui.retainedStages``) is left out."""
+    from py4j.protocol import Py4JJavaError
+
     sc = spark.sparkContext
     jvm = sc._gateway.jvm
     store = sc._jsc.sc().statusStore()
+    no_quantiles = sc._gateway.new_array(jvm.double, 0)
     out: list[StageMetric] = []
-    it = store.stageList(
-        jvm.java.util.ArrayList(),
-        False,
-        False,
-        sc._gateway.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList(),
-    ).iterator()
-    while it.hasNext():
-        s = it.next()
+    for sid in range(after + 1, max_stage_id(spark) + 1):
+        try:
+            attempts = store.stageData(
+                sid, False, jvm.java.util.ArrayList(), False, no_quantiles
+            )
+        except Py4JJavaError:  # NoSuchElementException: not (or no longer) stored
+            continue
+        if attempts.isEmpty():
+            continue
+        s = attempts.last()
         out.append(
             StageMetric(
-                stage_id=s.stageId(),
+                stage_id=sid,
                 status=s.status().toString(),
                 name=str(s.name()).split("\n")[0][:60],
                 num_tasks=s.numCompleteTasks(),
@@ -73,13 +80,7 @@ def _stage_list(spark) -> list[StageMetric]:
                 shuffle_write_bytes=s.shuffleWriteBytes(),
             )
         )
-    return sorted(out, key=lambda s: s.stage_id)
-
-
-def collect_stage_metrics(spark, after: int = -1) -> list[StageMetric]:
-    """Snapshot completed/running stages with id > ``after`` from the
-    driver status store (public status API; zero instrumentation cost)."""
-    return [s for s in _stage_list(spark) if s.stage_id > after]
+    return out
 
 
 def partition_skew_from_files(paths: list[str], top: int = 10) -> list[tuple[str, int]]:

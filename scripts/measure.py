@@ -6,7 +6,7 @@ passes):
     python scripts/measure.py ab Q [Q ...] [--old-root DIR] [--conf K=V ...]
                                            [--plans DIR]
     python scripts/measure.py scale [--k K] [--dims] [--cores A,B] [--top N]
-    python scripts/measure.py flagship [--sizes MB,MB,...]
+    python scripts/measure.py flagship [--sizes MB,MB,...] [--old-root DIR]
 
 Every subcommand feeds one loop, ``compare``.  A *form* is one variant
 under test: the checkout, another revision (``--old-root``: the root of
@@ -332,6 +332,13 @@ def package_form(spark, root: str, sf_dir: str):
         sys.modules.update(saved)
 
 
+def revision_forms(spark, old_root: str, sf_dir: str) -> dict:
+    """The checkout ("new") and the revision at ``old_root`` ("old"), as
+    package forms."""
+    roots = {"new": str(ROOT), "old": old_root}
+    return {t: partial(package_form, spark, r, sf_dir) for t, r in roots.items()}
+
+
 @contextmanager
 def with_conf(form, overlay: dict[str, str]):
     """``form`` with ``overlay`` set on its session.  Each key's prior
@@ -425,8 +432,7 @@ def cmd_ab(args, spark, sf_dir: str) -> dict:
     if missing:
         sys.exit(f"measure.py: unknown operators {missing}")
     if args.old_root:
-        roots = {"new": str(ROOT), "old": args.old_root}
-        forms = {t: partial(package_form, spark, r, sf_dir) for t, r in roots.items()}
+        forms = revision_forms(spark, args.old_root, sf_dir)
     else:
         forms = {"base": fixed(spark, ops, sf_dir)}
     if args.conf:
@@ -483,32 +489,55 @@ def cmd_scale(args, spark, sf_dir: str) -> dict:
     return report
 
 
+def flagship_form(form, job, log: list):
+    """``form`` with one more entry in its ops, "flagship": a call that
+    runs that form's own ``run_inverted_index_job`` on ``job``, appends
+    the result to ``log`` and returns the job's wall."""
+
+    @contextmanager
+    def enter():
+        with form() as (spark, ops, sf_dir):
+            run_job = importlib.import_module(PKG + ".job").run_inverted_index_job
+
+            def flagship():
+                log.append(run_job(spark, job))
+                return log[-1].metrics.wall_s
+
+            yield spark, {**ops, "flagship": flagship}, sf_dir
+
+    return enter
+
+
 def cmd_flagship(args, spark, sf_dir: str) -> dict:
-    from mapreduce_c_implementation_spark.job import run_inverted_index_job
     from mapreduce_c_implementation_spark.registry import all_operators
 
-    ops = all_operators()
+    if args.old_root:
+        bases = revision_forms(spark, args.old_root, sf_dir)
+    else:
+        bases = {"checkout": fixed(spark, all_operators(), sf_dir)}
     sizes = {}
     for mb in args.sizes:
         with bench.flagship_job(spark, sf_dir, mb) as (job, nbytes):
-            results = []
-
-            def run(spark, ops, sf_dir, name):
-                results.append(run_inverted_index_job(spark, job))
-                return results[-1].metrics.wall_s
-
-            form = {"checkout": fixed(spark, ops, sf_dir)}
-            r = compare(form, ["flagship"], args.reps, sf_dir, run)
-        best = min(results, key=lambda res: res.metrics.wall_s)
+            logs = {t: [] for t in bases}
+            forms = {t: flagship_form(f, job, logs[t]) for t, f in bases.items()}
+            r = compare(forms, ["flagship"], args.reps, sf_dir, lambda s, ops, d, n: ops[n]())
+        q = r["queries"]["flagship"]
         sizes[str(mb)] = {
             "corpus_mb": round(nbytes / 1e6, 1),
-            "walls_s": r["queries"]["flagship"]["runs"]["checkout"],
-            "mb_per_s": round(nbytes / 1e6 / best.metrics.wall_s, 1),
-            "controls_s": r["controls"]["checkout"],
-            "stages": [vars(s) for s in best.metrics.stages],
+            "ratio": q["ratio"],
+            "normalized": q["normalized"],
+            "control_ratio": r["control_ratio"],
         }
+        for t, log in logs.items():
+            best = min(log, key=lambda res: res.metrics.wall_s)
+            sizes[str(mb)][t] = {
+                "walls_s": q["runs"][t],
+                "mb_per_s": round(nbytes / 1e6 / best.metrics.wall_s, 1),
+                "controls_s": r["controls"][t],
+                "stages": [vars(s) for s in best.metrics.stages],
+            }
         print(json.dumps({str(mb): sizes[str(mb)]}), flush=True)
-    return {"control": CONTROL, "reps": args.reps, "sizes": sizes}
+    return {"control": CONTROL, "reps": args.reps, "forms": list(bases), "sizes": sizes}
 
 
 def _conf_pair(text: str) -> tuple[str, str]:
@@ -549,6 +578,7 @@ def main() -> None:
     sc.set_defaults(cmd=cmd_scale)
     fl = sub.add_parser("flagship", parents=[common], help="flagship MB/s per size")
     fl.add_argument("--sizes", type=_ints, default=[708, 1416, 2832], help="MB,MB,...")
+    fl.add_argument("--old-root", help="another revision's checkout root")
     fl.set_defaults(cmd=cmd_flagship)
     args = ap.parse_args()
 

@@ -86,6 +86,80 @@ def test_arrow_tokenizer_matches_jvm_tokenize(spark):
     assert ("a" * 255, ("f1",)) in jvm_rows  # truncation actually exercised
 
 
+def _run_toy(spark, tmp_path, files: dict[str, str], num_partitions: int):
+    corpus = tmp_path / "corpus"
+    corpus.mkdir(exist_ok=True)
+    for name, text in files.items():
+        (corpus / name).write_text(text)
+    job = MapReduceJob(
+        input_paths=[str(corpus)],
+        output_dir=str(tmp_path / f"out{num_partitions}"),
+        num_partitions=num_partitions,
+    )
+    return run_inverted_index_job(spark, job)
+
+
+@pytest.mark.parametrize("num_partitions", [1, 3])
+def test_part_files_list_words_in_byte_order(spark, tmp_path, num_partitions):
+    """The reference's sorted-key contract (src/mapreduce.h:105,
+    src/sorting.c): every part file lists its words in strictly
+    increasing byte (strcmp) order, whatever the reducer count."""
+    files = {
+        "first.txt": "zebra mango kiwi apple\nZeta 10 9 alpha Apple\n",
+        "second.txt": "zebra yak 2 banana cherry mango\nxylophone 100 b a\n",
+    }
+    res = _run_toy(spark, tmp_path, files, num_partitions)
+    assert len(res.output_files) == num_partitions
+    words = []
+    for f in res.output_files:
+        part = [ln.split(" -> ")[0] for ln in Path(f).read_text().splitlines()]
+        keys = [w.encode() for w in part]
+        assert all(a < b for a, b in zip(keys, keys[1:])), (Path(f).name, part)
+        words += part
+    assert sorted(words) == sorted(
+        {"zebra", "mango", "kiwi", "apple", "zeta", "10", "9", "alpha", "yak",
+         "2", "banana", "cherry", "xylophone", "100", "b", "a"}
+    )
+
+
+def test_postings_list_file_names_as_on_disk(spark, tmp_path):
+    """Spark reports file names percent-encoded; the postings list them
+    as they are on disk.  ``+`` must stay ``+`` (URI, not form, decoding)."""
+    res = _run_toy(
+        spark, tmp_path, {"my doc#1.txt": "Shared one\n", "a+b.txt": "shared two\n"}, 1
+    )
+    (part,) = res.output_files
+    assert Path(part).read_text().splitlines() == [
+        "one -> [my doc#1.txt]",
+        "shared -> [a+b.txt, my doc#1.txt]",
+        "two -> [a+b.txt]",
+    ]
+
+
+def test_tokenizer_state_compaction_keeps_pairs(monkeypatch):
+    """Merging a file's pending word sets early (the constant set small)
+    yields exactly the pairs of the default run over many batches."""
+    import pyarrow as pa
+
+    from mapreduce_c_implementation_spark.functions import text
+
+    rows = [(f"w{i % 97} W{i % 13} x{i} {'q' * 260}{i % 3}", f"f{i % 4}.txt")
+            for i in range(600)]
+    table = pa.table({"line": [r[0] for r in rows], "fname": [r[1] for r in rows]})
+
+    def pairs():
+        out = text.tokenize_pairs_arrow(iter(table.to_batches(max_chunksize=7)))
+        got = [(w, f) for b in out for w, f in zip(*b.to_pydict().values())]
+        assert len(got) == len(set(got))
+        return set(got)
+
+    default = pairs()
+    monkeypatch.setattr(text, "_PENDING_WORDS", 4)
+    assert pairs() == default
+    # Space-separated alnum runs: str.split is the reference tokenizer here.
+    assert default == {(t.lower()[:255], f) for line, f in rows for t in line.split()}
+
+
 def test_job_validation():
     with pytest.raises(ValueError):
         MapReduceJob(input_paths=[], output_dir="/tmp/x").validate()

@@ -9,6 +9,7 @@ import importlib.util
 import json
 import sys
 from contextlib import contextmanager
+from functools import partial
 from pathlib import Path
 
 import pytest
@@ -163,6 +164,32 @@ def test_package_form_runs_each_forms_own_udfs(spark, tmp_path):
         now = {m: mod for m, mod in sys.modules.items() if m.startswith(pkg)}
         assert now.keys() == real_modules.keys()
         assert all(now[m] is real_modules[m] for m in now)
+
+
+def test_flagship_form_runs_each_forms_own_job(spark, tmp_path):
+    """``flagship --old-root``: the "flagship" op of each package form
+    calls that form's own run_inverted_index_job and logs its result."""
+    pkg = measure.PKG
+    job_src = (
+        "from types import SimpleNamespace\n\n\n"
+        "def run_inverted_index_job(spark, job):\n"
+        "    return SimpleNamespace(job=job, marker={marker!r},\n"
+        "                           metrics=SimpleNamespace(wall_s=len({marker!r})))\n"
+    )
+    logs = {}
+    for marker in ("old", "new"):
+        root = tmp_path / marker
+        (root / pkg).mkdir(parents=True)
+        (root / pkg / "__init__.py").write_text("")
+        (root / pkg / "registry.py").write_text(_MARKER_REGISTRY.format(marker=marker))
+        (root / pkg / "job.py").write_text(job_src.format(marker=marker))
+        base = partial(measure.package_form, spark, str(root), "")
+        log = logs.setdefault(marker, [])
+        with measure.flagship_form(base, "the job", log)() as (_, ops, _):
+            assert "marker" in ops
+            assert ops["flagship"]() == len(marker)
+    assert [(r.marker, r.job) for r in logs["old"]] == [("old", "the job")]
+    assert [(r.marker, r.job) for r in logs["new"]] == [("new", "the job")]
 
 
 def test_write_section_replaces_only_its_own_section(tmp_path, monkeypatch):

@@ -59,6 +59,29 @@ def test_stage_timings_and_skew_in_report(spark, sf_correct):
         assert section in report, report
 
 
+def test_stage_metrics_by_id_for_a_two_job_action(spark):
+    """An aggregate's collect under AQE runs two jobs: the map stage,
+    then the result stage with the map stage skipped.  Exactly those
+    three stage ids come back, in order."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_c_implementation_spark.metrics import (
+        collect_stage_metrics,
+        max_stage_id,
+    )
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs, floor = dag.numTotalJobs(), max_stage_id(spark)
+    spark.range(1000, numPartitions=4).groupBy(F.col("id") % 7).count().collect()
+    assert dag.numTotalJobs() - jobs == 2
+    stages = collect_stage_metrics(spark, after=floor)
+    assert [s.stage_id for s in stages] == [floor + 1, floor + 2, floor + 3]
+    assert max_stage_id(spark) == floor + 3
+    assert [s.status for s in stages] == ["COMPLETE", "SKIPPED", "COMPLETE"]
+    assert [s.num_tasks for s in stages] == [4, 0, 1]
+    assert stages[0].shuffle_write_bytes == stages[2].shuffle_read_bytes > 0
+
+
 def test_input_bytes_file_dir_glob(tmp_path):
     d = tmp_path / "corpus"
     d.mkdir()

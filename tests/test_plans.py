@@ -69,6 +69,31 @@ def test_inverted_index_single_shuffle(spark, sf_correct):
     assert count_shuffles(df) == 1
 
 
+def test_flagship_plan_one_word_exchange(spark, tmp_path):
+    """The flagship job has the reference's shape: one exchange, hashed
+    on the word into the reducer count, with no partial aggregate on its
+    map side (the Arrow map already combined), and a per-partition sort
+    on the word above the aggregate."""
+    import re
+
+    from mapreduce_c_implementation_spark.job import inverted_index_plan
+
+    (tmp_path / "a.txt").write_text("b a\n")
+    df = inverted_index_plan(spark, [str(tmp_path)], 7)
+    plan = physical_plan(df)
+    tree = plan.split("\n\n")[0].splitlines()
+    exchanges = [i for i, ln in enumerate(tree) if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    assert count_shuffles(df) == 1
+    assert re.search(r"Arguments: hashpartitioning\(word#\d+, 7\)", plan), plan
+    below = tree[exchanges[0] + 1:]
+    assert not [ln for ln in below if "Aggregate" in ln], plan
+    assert any("MapInArrow" in ln for ln in below), plan
+    above = " ".join(tree[: exchanges[0]])
+    assert above.index("Sort") < above.index("Aggregate"), plan
+    assert "partial_collect_set" in plan  # the aggregate runs reducer-side
+
+
 def test_topk_uses_take_ordered(spark, sf_correct):
     """orderBy().limit(k) must compile to TakeOrderedAndProject — never a
     global sort of the full aggregate."""

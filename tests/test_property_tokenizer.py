@@ -76,6 +76,85 @@ def test_ngram_helper_cross_engine_parity(tokens, n):
     assert list(got_sql) == expected
 
 
+_NOISE = [" ", "\t", "\r\n", "\n", "-", "..", "é", "ÿ", "ß", "İ", "ı", "Ω",
+          "中文", "e\u0301", "\u0301", "\x00", "\x07", "\x1f", "\x7f", "😀"]
+
+
+def _random_line(rng) -> str | None:
+    if rng.random() < 0.08:
+        return None
+    out = []
+    for _ in range(rng.randint(0, 12)):
+        r = rng.random()
+        if r < 0.45:
+            out.append("".join(rng.choice("aZq09xKM") for _ in range(rng.randint(1, 8))))
+        elif r < 0.5:
+            out.append("".join(rng.choice("aB7") for _ in range(rng.randint(250, 300))))
+        else:
+            out.append(rng.choice(_NOISE))
+    return "".join(out)
+
+
+def test_arrow_pairs_match_jvm_tokenize(spark):
+    """Differential property: ``tokenize_pairs_arrow`` yields exactly the
+    distinct (word, fname) pairs of the JVM ``tokenize``, on seeded random
+    lines mixing ASCII, Latin-1/CJK/combining marks, control bytes,
+    CRLF and >255-char runs, with NULL lines, several files per batch,
+    and sliced (non-zero offset) input batches.  File names come back
+    URI-decoded."""
+    import random
+    from urllib.parse import unquote
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from mapreduce_c_implementation_spark.functions.text import (
+        tokenize,
+        tokenize_pairs_arrow,
+    )
+
+    names = ["a.txt", "my%20doc%231.txt", "a+b.txt"]
+    rows = []
+    for seed in range(4):
+        rng = random.Random(seed)
+        rows += [(_random_line(rng), rng.choice(names)) for _ in range(150)]
+    table = pa.table({"line": [r[0] for r in rows], "fname": [r[1] for r in rows]})
+    batches = table.to_batches(max_chunksize=37)
+    assert any(b.column("line").offset for b in batches)  # sliced inputs
+    assert any(len(set(b.column("fname").to_pylist())) > 1 for b in batches)
+    got = {
+        (w, f)
+        for b in tokenize_pairs_arrow(iter(batches))
+        for w, f in zip(b.column("word").to_pylist(), b.column("fname").to_pylist())
+    }
+    df = spark.createDataFrame(rows, "line string, fname string")
+    want = {
+        (r.word, unquote(r.fname))
+        for r in df.select(F.explode(tokenize(F.col("line"))).alias("word"), "fname")
+        .distinct()
+        .collect()
+    }
+    assert got == want
+    assert any(len(w) == 255 for w, _ in got)  # truncation exercised
+    assert {f for _, f in got} == {"a.txt", "my doc#1.txt", "a+b.txt"}
+
+
+def test_arrow_pairs_treat_invalid_utf8_as_delimiters():
+    """Bytes that are not valid UTF-8 are delimiters like any other
+    non-alnum byte: the cleaned buffer is ASCII before any kernel reads
+    it as text."""
+    import pyarrow as pa
+
+    from mapreduce_c_implementation_spark.functions.text import tokenize_pairs_arrow
+
+    raw = b"Caf\xe9 OK\xff\xfeZ9"
+    offsets = pa.array([0, len(raw)], pa.int32()).buffers()[1]
+    lines = pa.Array.from_buffers(pa.string(), 1, [None, offsets, pa.py_buffer(raw)])
+    batch = pa.record_batch([lines, pa.array(["f"])], names=["line", "fname"])
+    out = list(tokenize_pairs_arrow(iter([batch])))
+    assert sorted(w for b in out for w in b.column("word").to_pylist()) == ["caf", "ok", "z9"]
+
+
 def test_ngram_helper_spark_matches_python(spark):
     """Spark side of the ngram helper over a handful of pinned shapes."""
     from pyspark.sql import functions as F
