@@ -39,7 +39,13 @@ from mapreduce_c_implementation_spark.functions.text import (
     ngrams,
     tokenize,
 )
-from mapreduce_c_implementation_spark.functions.vector import SQL_DOT, spark_dot
+from mapreduce_c_implementation_spark.functions.vector import (
+    SQL_DOT,
+    plane_rule,
+    spark_dot,
+    spark_sign_bucket,
+    sql_sign_bucket,
+)
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources import load_table
 from mapreduce_c_implementation_spark.sources.tables import (
@@ -470,13 +476,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DOT = SQL_DOT
-_spark_dot = spark_dot
-
-# Embedding near-dup candidate generation reuses the 6-plane random-
-# hyperplane machinery from operators/similarity.py, banded 2 x 3 bits
-# (LSH OR-construction): candidates share band 0 OR band 1, so a vector
-# sitting on one hyperplane boundary still collides in the other band.
+# Embedding near-dup candidate generation reuses the 6 random LSH
+# hyperplanes of ann_lsh_bucketed (functions/vector.py::plane_rule),
+# banded 2 x 3 bits (LSH OR-construction): candidates share band 0 OR
+# band 1, so a vector sitting on one hyperplane boundary still collides
+# in the other band.
 COSINE_BANDS = 2
 _PLANES_PER_BAND = 3
 # Near-dup threshold.  The synthetic fixture embeddings are i.i.d.
@@ -487,28 +491,8 @@ _PLANES_PER_BAND = 3
 COSINE_THRESHOLD = 0.35
 
 
-def _cosine_band_sql(band: int) -> str:
-    from mapreduce_c_implementation_spark.operators.similarity import _plane_dot_sql
-
-    return " + ".join(
-        f"(CASE WHEN {_plane_dot_sql(band * _PLANES_PER_BAND + j, 'embedding')} > 0 "
-        f"THEN {1 << j} ELSE 0 END)"
-        for j in range(_PLANES_PER_BAND)
-    )
-
-
-def _cosine_band_spark(band: int) -> Column:
-    from mapreduce_c_implementation_spark.operators.similarity import _plane_dot_spark
-
-    val: Column | None = None
-    for j in range(_PLANES_PER_BAND):
-        bit = F.when(
-            _plane_dot_spark(band * _PLANES_PER_BAND + j, F.col("embedding")) > 0,
-            F.lit(1 << j),
-        ).otherwise(F.lit(0))
-        val = bit if val is None else val + bit
-    assert val is not None
-    return val.cast("long")
+def _band_planes(band: int) -> list:
+    return [plane_rule(band * _PLANES_PER_BAND + j) for j in range(_PLANES_PER_BAND)]
 
 
 @register(
@@ -516,13 +500,13 @@ def _cosine_band_spark(band: int) -> Column:
     oracle_sql=f"""
     WITH norms AS (
       SELECT vec_id, embedding,
-             sqrt({_SQL_DOT.format(a="embedding", b="embedding")}) AS nrm
+             sqrt({SQL_DOT.format(a="embedding", b="embedding")}) AS nrm
       FROM embeddings
     ),
     sig AS (
       SELECT vec_id,
-             CAST({_cosine_band_sql(0)} AS BIGINT) AS band0,
-             CAST({_cosine_band_sql(1)} AS BIGINT) AS band1
+             {sql_sign_bucket(_band_planes(0), "embedding")} AS band0,
+             {sql_sign_bucket(_band_planes(1), "embedding")} AS band1
       FROM norms
     ),
     bands AS (
@@ -537,12 +521,12 @@ def _cosine_band_spark(band: int) -> Column:
        AND a.vec_id < b.vec_id
     )
     SELECT c.vec_a, c.vec_b,
-           round({_SQL_DOT.format(a="na.embedding", b="nb.embedding")}
+           round({SQL_DOT.format(a="na.embedding", b="nb.embedding")}
                  / (na.nrm * nb.nrm), 6) AS cosine
     FROM cand c
     JOIN norms na ON na.vec_id = c.vec_a
     JOIN norms nb ON nb.vec_id = c.vec_b
-    WHERE {_SQL_DOT.format(a="na.embedding", b="nb.embedding")}
+    WHERE {SQL_DOT.format(a="na.embedding", b="nb.embedding")}
           / (na.nrm * nb.nrm) > {COSINE_THRESHOLD}
     """,
     tags=("dedup", "embedding", "cosine"),
@@ -568,7 +552,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     norms = e.select(
         "vec_id",
         "embedding",
-        F.sqrt(_spark_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
+        F.sqrt(spark_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
     )
     # Deliberately NOT cached: the three consumers re-run only the
     # 1-fold-per-row norm map, and measured A/B the cache's
@@ -578,7 +562,12 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = norms.select(
         "vec_id",
         F.posexplode(
-            F.array(_cosine_band_spark(0), _cosine_band_spark(1))
+            F.array(
+                *[
+                    spark_sign_bucket(_band_planes(b), F.col("embedding"))
+                    for b in range(COSINE_BANDS)
+                ]
+            )
         ).alias("band_idx", "band_val"),
     )
     a = bands.alias("a")
@@ -612,7 +601,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it replaces — the §4.2 lever needs enough rows per batch to
     # amortize the boundary, which semdedup's within-cell join has and
     # this post-banding verify does not.
-    cos = _spark_dot(F.col("na.embedding"), F.col("nb.embedding")) / (
+    cos = spark_dot(F.col("na.embedding"), F.col("nb.embedding")) / (
         F.col("na.nrm") * F.col("nb.nrm")
     )
     return (

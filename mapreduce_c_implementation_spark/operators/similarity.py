@@ -10,25 +10,34 @@ Two tiers, mirroring production vector-search architecture:
   a ~2^planes candidate cut.  This is the scale path.
 
 Determinism: dot products are sequential left folds in both engines
-(identical IEEE doubles — see operators/dedup.py); LSH hyperplanes are
+(identical IEEE doubles — see functions/vector.py); LSH hyperplanes are
 rule-generated ±1 vectors, identical literals in both plans.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_c_implementation_spark.functions.iterate import propagate, record_rounds
-from mapreduce_c_implementation_spark.functions.vector import SQL_DOT as _SQL_DOT
-from mapreduce_c_implementation_spark.functions.vector import np_dot as _np_dot
-from mapreduce_c_implementation_spark.functions.vector import spark_dot as _spark_dot
+from mapreduce_c_implementation_spark.functions.vector import (
+    EMB_DIM,
+    SQL_DOT,
+    SQL_SQDIST,
+    centroid_rule,
+    e2_rule,
+    np_dot,
+    np_signed_dots,
+    plane_rule,
+    sem_rule,
+    spark_dot,
+    spark_sign_bucket,
+    spark_sqdist,
+    sql_sign_bucket,
+)
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources import load_table
 
-EMB_DIM = 64
 N_QUERIES = 10  # probe set: vec_id < 10
 TOP_K = 5
 N_PLANES = 6
@@ -49,13 +58,13 @@ def _norms(spark: SparkSession, sf_dir: str, parallel: bool = False) -> DataFram
         "vec_id",
         "label",
         "embedding",
-        F.sqrt(_spark_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
+        F.sqrt(spark_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
     )
 
 
 _SQL_NORMS = (
     "norms AS (SELECT vec_id, label, embedding, "
-    "sqrt(" + _SQL_DOT.format(a="embedding", b="embedding") + ") AS nrm "
+    "sqrt(" + SQL_DOT.format(a="embedding", b="embedding") + ") AS nrm "
     "FROM embeddings)"
 )
 
@@ -66,7 +75,7 @@ _SQL_NORMS = (
     WITH {_SQL_NORMS},
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.label AS neighbor_label,
-             round({_SQL_DOT.format(a="q.embedding", b="c.embedding")}
+             round({SQL_DOT.format(a="q.embedding", b="c.embedding")}
                    / (q.nrm * c.nrm), 6) AS cosine
       FROM norms q JOIN norms c ON q.vec_id <> c.vec_id
       WHERE q.vec_id < {N_QUERIES}
@@ -99,7 +108,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("c_nrm"),
     )
     cos = F.round(
-        _spark_dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm")),
+        spark_dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm")),
         6,
     )
     scored = (
@@ -116,35 +125,8 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Plane signs use modulus 11: multipliers j+3 for j in 0..5 are all
-# nonzero and distinct mod 11, giving 6 distinct balanced hyperplanes
-# (+1 fraction 0.44-0.45).  The earlier mod-7 form degenerated at j=4
-# (multiplier 7 ≡ 0 mod 7 -> an all-ones plane, wasting one sign bit).
-def _plane_dot_sql(j: int, emb: str) -> str:
-    return (
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform(generate_series(1, {EMB_DIM}), "
-        f"i -> (CASE WHEN (i * {j + 3}) % 11 < 5 THEN 1.0 ELSE -1.0 END) "
-        f"* CAST({emb}[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    )
-
-
-def _plane_dot_spark(j: int, emb: Column) -> Column:
-    return F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(EMB_DIM)),
-            lambda i: F.when((i * (j + 3)) % 11 < 5, F.lit(1.0)).otherwise(F.lit(-1.0))
-            * F.element_at(emb, i).cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-_SQL_BUCKET = " + ".join(
-    f"(CASE WHEN {_plane_dot_sql(j, 'embedding')} > 0 THEN {1 << j} ELSE 0 END)"
-    for j in range(N_PLANES)
-)
+PLANES = [plane_rule(j) for j in range(N_PLANES)]
+_SQL_BUCKET = sql_sign_bucket(PLANES, "embedding")
 
 
 @register(
@@ -153,13 +135,13 @@ _SQL_BUCKET = " + ".join(
     WITH {_SQL_NORMS},
     bucketed AS (
       SELECT vec_id, label, embedding, nrm,
-             CAST({_SQL_BUCKET} AS BIGINT) AS bucket
+             {_SQL_BUCKET} AS bucket
       FROM norms
     ),
     cand AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              c.label AS neighbor_label,
-             round({_SQL_DOT.format(a="q.embedding", b="c.embedding")}
+             round({SQL_DOT.format(a="q.embedding", b="c.embedding")}
                    / (q.nrm * c.nrm), 6) AS cosine
       FROM bucketed q JOIN bucketed c
         ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
@@ -184,12 +166,9 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-bit int, ~2^6 × fewer pairs than brute force.
     """
     norms = _norms(spark, sf_dir)
-    bucket = None
-    for j in range(N_PLANES):
-        bit = F.when(_plane_dot_spark(j, F.col("embedding")) > 0, 1 << j).otherwise(0)
-        bucket = bit if bucket is None else bucket + bit
+    bucket = spark_sign_bucket(PLANES, F.col("embedding"))
     bucketed = norms.select(
-        "vec_id", "label", "embedding", "nrm", bucket.cast("long").alias("bucket")
+        "vec_id", "label", "embedding", "nrm", bucket.alias("bucket")
     )
     q = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -205,7 +184,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("c_nrm"),
     )
     cos = F.round(
-        _spark_dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm")),
+        spark_dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm")),
         6,
     )
     cand = (
@@ -229,38 +208,12 @@ N_CELLS = 8
 NPROBE = 2
 
 
-def _centroid_dot_sql(k: int, emb: str) -> str:
-    return (
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform(generate_series(1, {EMB_DIM}), "
-        f"i -> (CASE WHEN ((i + {k}) * {k + 5}) % 11 < 5 THEN 1.0 ELSE -1.0 END) "
-        f"* CAST({emb}[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    )
-
-
-def _centroid_dot_spark(k: int, emb: Column) -> Column:
-    return F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(EMB_DIM)),
-            lambda i: F.when(((i + k) * (k + 5)) % 11 < 5, F.lit(1.0)).otherwise(
-                F.lit(-1.0)
-            )
-            * F.element_at(emb, i).cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _sql_cell_scores(n_cells: int) -> str:
-    return " UNION ALL ".join(
-        f"SELECT vec_id, label, embedding, nrm, {k} AS cell, "
-        f"round({_centroid_dot_sql(k, 'embedding')}, 6) AS cscore FROM norms"
-        for k in range(n_cells)
-    )
-
-
-_SQL_CELL_SCORES = _sql_cell_scores(N_CELLS)
+CENTROIDS = [centroid_rule(k) for k in range(N_CELLS)]
+_SQL_CELL_SCORES = " UNION ALL ".join(
+    f"SELECT vec_id, label, embedding, nrm, {k} AS cell, "
+    f"round({r.sql_dot('embedding')}, 6) AS cscore FROM norms"
+    for k, r in enumerate(CENTROIDS)
+)
 
 
 @register(
@@ -280,7 +233,7 @@ _SQL_CELL_SCORES = _sql_cell_scores(N_CELLS)
     cand AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              c.label AS neighbor_label,
-             round({_SQL_DOT.format(a="q.embedding", b="c.embedding")}
+             round({SQL_DOT.format(a="q.embedding", b="c.embedding")}
                    / (q.nrm * c.nrm), 6) AS cosine
       FROM probes q JOIN corpus c
         ON q.cell = c.cell AND q.vec_id <> c.vec_id
@@ -312,10 +265,10 @@ def ann_ivf_coarse(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores = F.array(
         *[
             F.struct(
-                F.round(_centroid_dot_spark(k, F.col("embedding")), 6).alias("cscore"),
+                F.round(r.spark_dot(F.col("embedding")), 6).alias("cscore"),
                 F.lit(k).alias("cell"),
             )
-            for k in range(N_CELLS)
+            for k, r in enumerate(CENTROIDS)
         ]
     )
     exploded = norms.select(
@@ -341,7 +294,7 @@ def ann_ivf_coarse(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell",
     )
     cos = F.round(
-        _spark_dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm")),
+        spark_dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm")),
         6,
     )
     cand = (
@@ -361,7 +314,7 @@ def ann_ivf_coarse(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle_sql=f"""
     SELECT label,
            count(*) AS n_vecs,
-           (CAST(CAST(sum(CAST({_SQL_DOT.format(a="embedding", b="embedding")}
+           (CAST(CAST(sum(CAST({SQL_DOT.format(a="embedding", b="embedding")}
                           AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS DOUBLE)
             / count(*)) AS avg_sq_norm
     FROM embeddings
@@ -376,7 +329,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-row mean goes through fixed-point so group order can't skew
     the last ulp."""
     e = load_table(spark, sf_dir, "embeddings")
-    sq = _spark_dot(F.col("embedding"), F.col("embedding"))
+    sq = spark_dot(F.col("embedding"), F.col("embedding"))
     return (
         e.select("label", sq.cast("decimal(18,6)").alias("sq"))
         .groupBy("label")
@@ -573,72 +526,14 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEM_TAU = 0.30
 # semdedup uses a FINER quantizer than ann_ivf_coarse's 8 cells: pair
 # cost is sum over cells of c^2/2, so cells must track corpus size.
-# It needs its OWN sign formula: the IVF formula ((i+k)*(k+5)) % 11 is
-# periodic in k mod 11, so only 11 of its centroids are distinct — fine
-# for 8 IVF cells, a silent collapse at 64.  This one is verified to
-# give 64 distinct ±1 patterns with +1-fraction 0.44-0.59 per centroid.
+# It needs its OWN centroid rule: see functions/vector.py::sem_rule.
 SEM_CELLS = 64
-
-
-def _sem_dot_sql(k: int, emb: str) -> str:
-    return (
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform(generate_series(1, {EMB_DIM}), "
-        f"i -> (CASE WHEN (i * 125 + {k * 114} + i * {k * 6}) % 127 < 63 "
-        f"THEN 1.0 ELSE -1.0 END) * CAST({emb}[i] AS DOUBLE))), "
-        "(acc, x) -> acc + x)"
-    )
-
-
-def _sem_dot_spark(k: int, emb: Column) -> Column:
-    return F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(EMB_DIM)),
-            lambda i: F.when(
-                (i * 125 + F.lit(k * 114) + i * (k * 6)) % 127 < 63, F.lit(1.0)
-            ).otherwise(F.lit(-1.0))
-            * F.element_at(emb, i).cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _sem_scores_np():
-    """Vectorized twin of the {SEM_CELLS} `_sem_dot_spark` folds (guide
-    §4.2): one Arrow-batched pandas UDF computes every cell score for a
-    batch of vectors with numpy, BIT-IDENTICAL to the interpreted HOF
-    fold — the loop adds term i = sign(k, i) * emb[i] for i = 1..dim in
-    exactly the fold's order (numpy elementwise ops are strict IEEE
-    doubles, no FMA/reassociation), so round(score, 6) and the argmax
-    tiebreak downstream cannot diverge from the DuckDB oracle.  Returns
-    RAW sums; rounding and the argmax stay in the JVM exactly as
-    before."""
-    signs = np.array(
-        [
-            [
-                1.0 if ((i * 125 + k * 114 + i * k * 6) % 127) < 63 else -1.0
-                for i in range(1, EMB_DIM + 1)
-            ]
-            for k in range(SEM_CELLS)
-        ]
-    )  # (cells, dims)
-
-    @F.pandas_udf("array<double>")
-    def scores(emb: pd.Series) -> pd.Series:
-        m = np.stack(emb.to_numpy()).astype(np.float64, copy=False)  # (n, d)
-        acc = np.zeros((m.shape[0], SEM_CELLS))
-        for i in range(EMB_DIM):  # fold order: i ascending, acc + term
-            acc = acc + m[:, i : i + 1] * signs[:, i]
-        return pd.Series(list(acc))
-
-    return scores
-
+SEM_CENTROIDS = [sem_rule(k) for k in range(SEM_CELLS)]
 
 _SQL_SEM_CELL_SCORES = " UNION ALL ".join(
     f"SELECT vec_id, label, embedding, nrm, {k} AS cell, "
-    f"round({_sem_dot_sql(k, 'embedding')}, 6) AS cscore FROM norms"
-    for k in range(SEM_CELLS)
+    f"round({r.sql_dot('embedding')}, 6) AS cscore FROM norms"
+    for k, r in enumerate(SEM_CENTROIDS)
 )
 
 
@@ -658,7 +553,7 @@ _SQL_SEM_CELL_SCORES = " UNION ALL ".join(
       SELECT b.vec_id AS vec_id, a.vec_id AS partner
       FROM assigned a JOIN assigned b
         ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE round({_SQL_DOT.format(a="a.embedding", b="b.embedding")}
+      WHERE round({SQL_DOT.format(a="a.embedding", b="b.embedding")}
                   / (a.nrm * b.nrm), 6) >= {SEM_TAU}
     ),
     dup_counts AS (
@@ -696,7 +591,7 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DESC, cell ASC — with NO explode and NO per-vector window shuffle
     # (the previous form shuffled SEM_CELLS rows per vector just to
     # rank them).  r14: the {SEM_CELLS} x {EMB_DIM} score sums come from
-    # ONE numpy pandas UDF (fold-order-exact, see _sem_scores_np)
+    # ONE numpy pandas UDF (fold-order-exact, see np_signed_dots)
     # instead of {SEM_CELLS} interpreted HOF folds per row; round(., 6)
     # and the argmax are unchanged JVM expressions.
     cs = F.col("_cs")
@@ -709,7 +604,8 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in range(SEM_CELLS)
         ]
     )
-    assigned = norms.withColumn("_cs", _sem_scores_np()("embedding")).select(
+    sem_scores = np_signed_dots(SEM_CENTROIDS)
+    assigned = norms.withColumn("_cs", sem_scores("embedding")).select(
         "vec_id",
         "embedding",
         "nrm",
@@ -734,7 +630,7 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # functions/vector.py) — so the pair-verify stage is one Arrow batch
     # per partition instead of one interpreted 64-step fold per pair.
     cos = F.round(
-        _np_dot()(F.col("a.embedding"), F.col("b.embedding"))
+        np_dot()(F.col("a.embedding"), F.col("b.embedding"))
         / (F.col("a.nrm") * F.col("b.nrm")),
         6,
     )
@@ -782,11 +678,7 @@ def _km_sql_quant() -> str:
     )
 
 
-_KM_SQL_DIST = (
-    f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    f"list_transform(generate_series(1, {EMB_DIM}), "
-    f"i -> (q.xq[i] - c.cq[i]) * (q.xq[i] - c.cq[i]))), (a, b) -> a + b)"
-)
+_KM_SQL_DIST = SQL_SQDIST.format(a="q.xq", b="c.cq")
 
 
 def _km_sql_round(src_pts: str, src_cent: str, out_assign: str, out_cent: str) -> str:
@@ -867,16 +759,9 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cid"), F.col("xq").alias("cq")
     )
 
-    def dist_col():
-        return F.aggregate(
-            F.zip_with(F.col("xq"), F.col("cq"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     def assign(points, centroids):
         d = points.crossJoin(F.broadcast(centroids)).select(
-            "vec_id", "xq", "cid", dist_col().alias("dist")
+            "vec_id", "xq", "cid", spark_sqdist(F.col("xq"), F.col("cq")).alias("dist")
         )
         best = d.groupBy("vec_id").agg(
             F.min(F.struct("dist", "cid")).alias("m"),
@@ -928,11 +813,7 @@ PQ_M = 16  # subspaces
 PQ_SUBDIM = EMB_DIM // PQ_M  # 4 dims each
 PQ_TOPK = 10
 
-_PQ_SQL_SUBDIST = (
-    f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    f"list_transform(generate_series(1, {PQ_SUBDIM}), "
-    f"i -> (s.sub[i] - c.cq[i]) * (s.sub[i] - c.cq[i]))), (a, b) -> a + b)"
-)
+_PQ_SQL_SUBDIST = SQL_SQDIST.format(a="s.sub", b="c.cq")
 
 
 @register(
@@ -1066,11 +947,6 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cq")
     ).cache()
     cb.count()
-    subdist = F.aggregate(
-        F.zip_with(F.col("sub"), F.col("cq"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     from pyspark.sql.window import Window
 
     # Encode via an IN-ROW argmin against broadcast per-m candidate
@@ -1084,15 +960,12 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.collect_list(F.struct(F.col("label").alias("code"), "cq"))
         ).alias("cands")
     )
-    subdist_of = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("sub"), c["cq"], lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     best = F.array_min(
         F.transform(
             F.col("cands"),
-            lambda c: F.struct(subdist_of(c).alias("sd"), c["code"].alias("code")),
+            lambda c: F.struct(
+                spark_sqdist(F.col("sub"), c["cq"]).alias("sd"), c["code"].alias("code")
+            ),
         )
     )
     enc = subs.join(F.broadcast(cands), "m").select(
@@ -1102,7 +975,10 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         subs.filter(F.col("vec_id") < N_QUERIES)
         .join(F.broadcast(cb.select(F.col("label").alias("code"), "m", "cq")), "m")
         .select(
-            F.col("vec_id").alias("query_id"), "m", "code", subdist.alias("tdist")
+            F.col("vec_id").alias("query_id"),
+            "m",
+            "code",
+            spark_sqdist(F.col("sub"), F.col("cq")).alias("tdist"),
         )
     )
     scored = (
@@ -1129,13 +1005,6 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of EMB_DIM-wide float arithmetic).  Reference analog: none — the
 # reference's single workload is text MapReduce (src/main.c:28-59); this
 # is the LLM-pipeline extension surface.
-
-_IVFPQ_SQL_SUBDIST = (
-    f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    f"list_transform(generate_series(1, {PQ_SUBDIM}), "
-    f"i -> (s.sub[i] - c.cq[i]) * (s.sub[i] - c.cq[i]))), (a, b) -> a + b)"
-)
-
 
 @register(
     "ann_ivf_pq",
@@ -1174,13 +1043,13 @@ _IVFPQ_SQL_SUBDIST = (
       SELECT vec_id, m, code FROM (
         SELECT s.vec_id, s.m, c.label AS code,
                row_number() OVER (PARTITION BY s.vec_id, s.m
-                                  ORDER BY {_IVFPQ_SQL_SUBDIST} ASC, c.label ASC) AS rn
+                                  ORDER BY {_PQ_SQL_SUBDIST} ASC, c.label ASC) AS rn
         FROM subs s JOIN cb c ON s.m = c.m
       ) WHERE rn = 1
     ),
     adc AS (
       SELECT s.vec_id AS query_id, s.m, c.label AS code,
-             {_IVFPQ_SQL_SUBDIST} AS tdist
+             {_PQ_SQL_SUBDIST} AS tdist
       FROM subs s JOIN cb c ON s.m = c.m
       WHERE s.vec_id < {N_QUERIES}
     ),
@@ -1248,10 +1117,10 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell_scores = F.array(
         *[
             F.struct(
-                F.round(_centroid_dot_spark(k, F.col("embedding")), 6).alias("cscore"),
+                F.round(r.spark_dot(F.col("embedding")), 6).alias("cscore"),
                 F.lit(-k).alias("negcell"),
             )
-            for k in range(N_CELLS)
+            for k, r in enumerate(CENTROIDS)
         ]
     )
     xq = F.transform(
@@ -1319,15 +1188,12 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.collect_list(F.struct(F.col("label").alias("code"), "cq"))
         ).alias("cands")
     )
-    subdist_of = lambda c: F.aggregate(
-        F.zip_with(F.col("sub"), c["cq"], lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     best = F.array_min(
         F.transform(
             F.col("cands"),
-            lambda c: F.struct(subdist_of(c).alias("sd"), c["code"].alias("code")),
+            lambda c: F.struct(
+                spark_sqdist(F.col("sub"), c["cq"]).alias("sd"), c["code"].alias("code")
+            ),
         )
     )
     enc = subs.join(F.broadcast(cands), "m").select(
@@ -1349,11 +1215,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p.cell").alias("cell"),
             "m",
             "code",
-            F.aggregate(
-                F.zip_with(F.col("sub"), F.col("cq"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("tdist"),
+            spark_sqdist(F.col("sub"), F.col("cq")).alias("tdist"),
         )
     )
     scored = (
@@ -1514,7 +1376,7 @@ def gram_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_EXACT_TOPK = f"""
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             round({_SQL_DOT.format(a="q.embedding", b="c.embedding")}
+             round({SQL_DOT.format(a="q.embedding", b="c.embedding")}
                    / (q.nrm * c.nrm), 6) AS cosine
       FROM norms q JOIN norms c ON q.vec_id <> c.vec_id
       WHERE q.vec_id < {N_QUERIES}
@@ -1530,12 +1392,12 @@ _SQL_EXACT_TOPK = f"""
 _SQL_APPROX_TOPK = f"""
     bucketed AS (
       SELECT vec_id, embedding, nrm,
-             CAST({_SQL_BUCKET} AS BIGINT) AS bucket
+             {_SQL_BUCKET} AS bucket
       FROM norms
     ),
     cand AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             round({_SQL_DOT.format(a="q.embedding", b="c.embedding")}
+             round({SQL_DOT.format(a="q.embedding", b="c.embedding")}
                    / (q.nrm * c.nrm), 6) AS cosine
       FROM bucketed q JOIN bucketed c
         ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
@@ -1840,7 +1702,7 @@ COS_TARGET_SAMPLE = 125
     ),
     pairs AS (
       SELECT CAST(floor(round(
-               {_SQL_DOT.format(a="a.embedding", b="b.embedding")}
+               {SQL_DOT.format(a="a.embedding", b="b.embedding")}
                / (a.nrm * b.nrm), 6) * 10) AS BIGINT) AS bin
       FROM sampled a JOIN sampled b ON a.vec_id < b.vec_id
     ),
@@ -1897,7 +1759,7 @@ def cosine_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("nrm_b"),
     )
     cos = F.round(
-        _spark_dot(F.col("emb_a"), F.col("emb_b"))
+        spark_dot(F.col("emb_a"), F.col("emb_b"))
         / (F.col("nrm_a") * F.col("nrm_b")),
         6,
     )
@@ -1923,10 +1785,7 @@ def cosine_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same-LABEL neighbor in-bucket and 64-way bucketing leaves too few.
 HN_PLANES = 4
 
-_SQL_HN_BUCKET = " + ".join(
-    f"(CASE WHEN {_plane_dot_sql(j, 'embedding')} > 0 THEN {1 << j} ELSE 0 END)"
-    for j in range(HN_PLANES)
-)
+_SQL_HN_BUCKET = sql_sign_bucket(PLANES[:HN_PLANES], "embedding")
 
 
 @register(
@@ -1935,13 +1794,13 @@ _SQL_HN_BUCKET = " + ".join(
     WITH {_SQL_NORMS},
     bucketed AS (
       SELECT vec_id, label, embedding, nrm,
-             CAST({_SQL_HN_BUCKET} AS BIGINT) AS bucket
+             {_SQL_HN_BUCKET} AS bucket
       FROM norms
     ),
     cand AS (
       SELECT q.vec_id AS anchor_id, q.label AS anchor_label,
              c.vec_id AS cand_id, c.label AS cand_label,
-             round({_SQL_DOT.format(a="q.embedding", b="c.embedding")}
+             round({SQL_DOT.format(a="q.embedding", b="c.embedding")}
                    / (q.nrm * c.nrm), 6) AS cosine
       FROM bucketed q JOIN bucketed c
         ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
@@ -1985,12 +1844,9 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     plane count; the join stays linear in candidates.
     """
     norms = _norms(spark, sf_dir)
-    bucket = None
-    for j in range(HN_PLANES):
-        bit = F.when(_plane_dot_spark(j, F.col("embedding")) > 0, 1 << j).otherwise(0)
-        bucket = bit if bucket is None else bucket + bit
+    bucket = spark_sign_bucket(PLANES[:HN_PLANES], F.col("embedding"))
     bucketed = norms.select(
-        "vec_id", "label", "embedding", "nrm", bucket.cast("long").alias("bucket")
+        "vec_id", "label", "embedding", "nrm", bucket.alias("bucket")
     )
     q = bucketed.filter(F.col("vec_id") % 17 == 0).select(
         F.col("vec_id").alias("anchor_id"),
@@ -2007,7 +1863,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("c_nrm"),
     )
     cos = F.round(
-        _spark_dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm")),
+        spark_dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm")),
         6,
     )
     # No broadcast hint on q: the anchor side is corpus/17 — forcing it
@@ -2171,7 +2027,7 @@ DIV_CAP = 8
     oracle_sql=f"""
     WITH {_SQL_NORMS},
     bucketed AS (
-      SELECT vec_id, CAST({_SQL_BUCKET} AS BIGINT) AS bucket
+      SELECT vec_id, {_SQL_BUCKET} AS bucket
       FROM norms
     ),
     ranked AS (
@@ -2210,11 +2066,8 @@ def cluster_capped_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFra
     Reference analog: none (LLM-pipeline surface per the brief).
     """
     norms = _norms(spark, sf_dir)
-    bucket = None
-    for j in range(N_PLANES):
-        bit = F.when(_plane_dot_spark(j, F.col("embedding")) > 0, 1 << j).otherwise(0)
-        bucket = bit if bucket is None else bucket + bit
-    bucketed = norms.select("vec_id", bucket.cast("long").alias("bucket"))
+    bucket = spark_sign_bucket(PLANES, F.col("embedding"))
+    bucketed = norms.select("vec_id", bucket.alias("bucket"))
     from pyspark.sql.window import Window
 
     wb = Window.partitionBy("bucket")
@@ -2239,12 +2092,9 @@ def cluster_capped_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFra
 MRL_DIMS = 16
 MRL_K = 5
 
-_SQL_MRL_DOT = (
-    "list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-    f"list_transform(generate_series(1, {MRL_DIMS}), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))), "
-    "(acc, x) -> acc + x)"
-)
+
+def _sql_mrl_dot(a: str, b: str) -> str:
+    return SQL_DOT.format(a=f"{a}[1:{MRL_DIMS}]", b=f"{b}[1:{MRL_DIMS}]")
 
 
 @register(
@@ -2254,7 +2104,7 @@ _SQL_MRL_DOT = (
     tnorms AS (
       SELECT * FROM (
         SELECT vec_id, embedding,
-               sqrt({_SQL_MRL_DOT.format(a="embedding", b="embedding")}) AS tnrm
+               sqrt({_sql_mrl_dot("embedding", "embedding")}) AS tnrm
         FROM embeddings
       ) WHERE tnrm > 0
     ),
@@ -2263,7 +2113,7 @@ _SQL_MRL_DOT = (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                row_number() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY round({_SQL_DOT.format(a="q.embedding", b="c.embedding")}
+                 ORDER BY round({SQL_DOT.format(a="q.embedding", b="c.embedding")}
                                 / (q.nrm * c.nrm), 6) DESC, c.vec_id ASC) AS rk
         FROM norms q JOIN norms c ON q.vec_id <> c.vec_id
         WHERE q.vec_id < {N_QUERIES}
@@ -2274,7 +2124,7 @@ _SQL_MRL_DOT = (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                row_number() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY round({_SQL_MRL_DOT.format(a="q.embedding", b="c.embedding")}
+                 ORDER BY round({_sql_mrl_dot("q.embedding", "c.embedding")}
                                 / (q.tnrm * c.tnrm), 6) DESC, c.vec_id ASC) AS rk
         FROM tnorms q JOIN tnorms c ON q.vec_id <> c.vec_id
         WHERE q.vec_id < {N_QUERIES}
@@ -2347,15 +2197,7 @@ def matryoshka_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def trunc_dot(a, b):
-        return F.aggregate(
-            F.zip_with(
-                F.slice(a, 1, MRL_DIMS),
-                F.slice(b, 1, MRL_DIMS),
-                lambda x, y: x.cast("double") * y.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        return spark_dot(F.slice(a, 1, MRL_DIMS), F.slice(b, 1, MRL_DIMS))
 
     norms = _norms(spark, sf_dir)
     # Zero-truncated-norm guard: a vector whose first MRL_DIMS components
@@ -2371,7 +2213,7 @@ def matryoshka_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("tnrm") > 0)
     )
-    full_top = topk(_spark_dot, "nrm", norms)
+    full_top = topk(spark_dot, "nrm", norms)
     trunc_top = topk(trunc_dot, "tnrm", tnorms).withColumnRenamed(
         "neighbor_id", "t_neighbor_id"
     )
@@ -2417,7 +2259,7 @@ _SQL_GAIN = "(CASE rel WHEN 2 THEN 3 WHEN 1 THEN 1 ELSE 0 END)"
     WITH {_SQL_NORMS},
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             round({_SQL_DOT.format(a="q.embedding", b="c.embedding")}
+             round({SQL_DOT.format(a="q.embedding", b="c.embedding")}
                    / (q.nrm * c.nrm), 6) AS cosine,
              CASE WHEN c.label = q.label THEN 2
                   WHEN abs(c.label - q.label) = 1 THEN 1
@@ -2497,7 +2339,7 @@ def ndcg_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("c_nrm"),
     )
     cos = F.round(
-        _spark_dot(F.col("q_emb"), F.col("c_emb"))
+        spark_dot(F.col("q_emb"), F.col("c_emb"))
         / (F.col("q_nrm") * F.col("c_nrm")),
         6,
     )
@@ -2578,7 +2420,7 @@ KNN_K = 5
     scored AS (
       SELECT q.vec_id AS query_id, q.label AS true_label,
              c.vec_id AS neighbor_id, c.label AS c_label,
-             round({_SQL_DOT.format(a="q.embedding", b="c.embedding")}
+             round({SQL_DOT.format(a="q.embedding", b="c.embedding")}
                    / (q.nrm * c.nrm), 6) AS cosine
       FROM norms q JOIN norms c ON q.vec_id <> c.vec_id
       WHERE q.vec_id < {KNN_N_QUERIES} AND c.vec_id >= {KNN_N_QUERIES}
@@ -2644,7 +2486,7 @@ def knn_classification_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("c_nrm"),
     )
     cos = F.round(
-        _spark_dot(F.col("q_emb"), F.col("c_emb"))
+        spark_dot(F.col("q_emb"), F.col("c_emb"))
         / (F.col("q_nrm") * F.col("c_nrm")),
         6,
     )
@@ -2689,10 +2531,10 @@ def _kcenter_oracle() -> str:
     argmax-of-min-distance row and relaxes every point's distance
     against it.  Distances are the shared fold-order dot product, so
     every double is bit-identical to the Spark plan's."""
-    dot_pc = _SQL_DOT.format(a="p.embedding", b="c.embedding")
+    dot_pc = SQL_DOT.format(a="p.embedding", b="c.embedding")
     ctes = [
         "pts AS (SELECT vec_id, embedding, "
-        + _SQL_DOT.format(a="embedding", b="embedding")
+        + SQL_DOT.format(a="embedding", b="embedding")
         + " AS n2 FROM embeddings)",
         "c0 AS (SELECT vec_id, embedding, n2 FROM pts ORDER BY vec_id LIMIT 1)",
         f"d1 AS (SELECT p.vec_id, p.embedding, p.n2,"
@@ -2762,7 +2604,7 @@ def kcenter_greedy_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
-        _spark_dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        spark_dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
     c = pts.orderBy("vec_id").limit(1).localCheckpoint()
 
@@ -2775,7 +2617,7 @@ def kcenter_greedy_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         dist = (
             F.col("n2")
             + F.col("c_n2")
-            - F.lit(2.0) * _spark_dot(F.col("embedding"), F.col("c_emb"))
+            - F.lit(2.0) * spark_dot(F.col("embedding"), F.col("c_emb"))
         )
         base = d.crossJoin(cc)
         md = dist if "md" not in d.columns else F.least(F.col("md"), dist)
@@ -2961,41 +2803,17 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # staggered per-line offset, and candidate ONLY pairs agreeing on the
 # full cell signature; exact L2 verifies.  Complements the
 # sign-bit (cosine) LSH of ann_lsh_bucketed — quantized cells bound
-# EUCLIDEAN distance, the metric PQ/IVF also operate in.  Line rule
-# uses modulus 17 with multipliers j+13 (all nonzero, distinct mod 17;
-# +1 fraction 8/17), disjoint from the mod-11 cosine family.
+# EUCLIDEAN distance, the metric PQ/IVF also operate in.  The line rule
+# is functions/vector.py::e2_rule.
 E2_LINES = 4
 E2_W = 2.0
 E2_EPS = 1.2
-
-
-def _e2_dot_sql(j: int, emb: str) -> str:
-    return (
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform(generate_series(1, {EMB_DIM}), "
-        f"i -> (CASE WHEN (i * {j + 13}) % 17 < 8 THEN 1.0 ELSE -1.0 END) "
-        f"* CAST({emb}[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    )
-
-
-def _e2_dot_spark(j: int, emb: Column) -> Column:
-    return F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(EMB_DIM)),
-            lambda i: F.when((i * (j + 13)) % 17 < 8, F.lit(1.0)).otherwise(
-                F.lit(-1.0)
-            )
-            * F.element_at(emb, i).cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
+E2_RULES = [e2_rule(j) for j in range(E2_LINES)]
 
 _E2_BUCKETS_SQL = ", ".join(
-    f"CAST(floor(({_e2_dot_sql(j, 'embedding')} + {j * E2_W / E2_LINES!r}) "
+    f"CAST(floor(({r.sql_dot('embedding')} + {j * E2_W / E2_LINES!r}) "
     f"/ {E2_W!r}) AS BIGINT) AS b{j}"
-    for j in range(E2_LINES)
+    for j, r in enumerate(E2_RULES)
 )
 
 
@@ -3010,7 +2828,7 @@ _E2_BUCKETS_SQL = ", ".join(
     cand AS (
       SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
              sqrt(a.nrm * a.nrm + b.nrm * b.nrm
-                  - 2 * {_SQL_DOT.format(a="a.embedding", b="b.embedding")})
+                  - 2 * {SQL_DOT.format(a="a.embedding", b="b.embedding")})
                AS l2
       FROM cells a JOIN cells b
         ON a.b0 = b.b0 AND a.b1 = b.b1 AND a.b2 = b.b2 AND a.b3 = b.b3
@@ -3049,12 +2867,12 @@ def lsh_euclidean_e2lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nrm",
         *[
             F.floor(
-                (_e2_dot_spark(j, F.col("embedding")) + F.lit(j * E2_W / E2_LINES))
+                (r.spark_dot(F.col("embedding")) + F.lit(j * E2_W / E2_LINES))
                 / F.lit(E2_W)
             )
             .cast("long")
             .alias(f"b{j}")
-            for j in range(E2_LINES)
+            for j, r in enumerate(E2_RULES)
         ],
     )
     a = cells.select(
@@ -3075,7 +2893,7 @@ def lsh_euclidean_e2lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     l2 = F.sqrt(
         F.col("nrm_a") * F.col("nrm_a")
         + F.col("nrm_b") * F.col("nrm_b")
-        - F.lit(2.0) * _spark_dot(F.col("emb_a"), F.col("emb_b"))
+        - F.lit(2.0) * spark_dot(F.col("emb_a"), F.col("emb_b"))
     )
     return (
         cand.withColumn("l2", l2)
@@ -3108,14 +2926,14 @@ def _mmr_oracle() -> str:
     ),
     cand AS MATERIALIZED (
       SELECT c.vec_id,
-             CAST(round({_SQL_DOT.format(a="q.embedding", b="c.embedding")}
+             CAST(round({SQL_DOT.format(a="q.embedding", b="c.embedding")}
                    / (q.nrm * c.nrm) * 1000000) AS BIGINT) AS rel
       FROM norms c, q WHERE c.vec_id <> {MMR_QUERY_ID}
       ORDER BY rel DESC, c.vec_id ASC LIMIT {MMR_N}
     ),
     pairs AS MATERIALIZED (
       SELECT a.vec_id AS ia, b.vec_id AS ib,
-             CAST(round({_SQL_DOT.format(a="na.embedding", b="nb.embedding")}
+             CAST(round({SQL_DOT.format(a="na.embedding", b="nb.embedding")}
                    / (na.nrm * nb.nrm) * 1000000) AS BIGINT) AS sim
       FROM cand a JOIN norms na ON na.vec_id = a.vec_id
       JOIN cand b ON b.vec_id <> a.vec_id
@@ -3203,7 +3021,7 @@ def mmr_diverse_reranking(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
             "nrm",
             F.round(
-                _spark_dot(F.col("embedding"), F.col("q_emb"))
+                spark_dot(F.col("embedding"), F.col("q_emb"))
                 / (F.col("q_nrm") * F.col("nrm"))
                 * F.lit(1000000.0)
             )
@@ -3230,7 +3048,7 @@ def mmr_diverse_reranking(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ia",
             "ib",
             F.round(
-                _spark_dot(F.col("ea"), F.col("eb"))
+                spark_dot(F.col("ea"), F.col("eb"))
                 / (F.col("na") * F.col("nb"))
                 * F.lit(1000000.0)
             )
@@ -3478,7 +3296,7 @@ SHAP_K = 5
              CASE WHEN tr.label = t.tlabel THEN 1 ELSE 0 END AS ind,
              row_number() OVER (
                PARTITION BY t.tid
-               ORDER BY {_SQL_DOT.format(a="t.temb", b="tr.embedding")}
+               ORDER BY {SQL_DOT.format(a="t.temb", b="tr.embedding")}
                         / (t.tnrm * tr.nrm) DESC, tr.vec_id ASC) AS i,
              count(*) OVER (PARTITION BY t.tid) AS n
       FROM tests t CROSS JOIN train tr
@@ -3557,7 +3375,7 @@ def knn_shapley_valuation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     train = pts.filter(F.col("vec_id") >= N_QUERIES)
-    cos = _spark_dot(F.col("temb"), F.col("embedding")) / (
+    cos = spark_dot(F.col("temb"), F.col("embedding")) / (
         F.col("tnrm") * F.col("nrm")
     )
     wrank = Window.partitionBy("tid").orderBy(
@@ -3641,42 +3459,42 @@ MAXSIM_QUERIES = 8
 MAXSIM_TOPK = 5
 
 
-def _maxsim_exprs():
-    """(spark_expr_sql, duckdb_expr_sql) for the MaxSim score — the SAME
-    structural expression (sequential-fold dots, greatest, left-to-right
+def _maxsim_spark() -> Column:
+    """The MaxSim score as the SAME structural expression as
+    ``_MAXSIM_DUCK`` (sequential-fold dots, greatest, left-to-right
     sum), so doubles stay bit-identical."""
-    from mapreduce_c_implementation_spark.functions.vector import SQL_DOT
 
-    def spark_sub(col: str, i: int) -> str:
-        return f"slice({col}, {i * MAXSIM_SUBDIM + 1}, {MAXSIM_SUBDIM})"
+    def sub(col: str, i: int) -> Column:
+        return F.slice(F.col(col), i * MAXSIM_SUBDIM + 1, MAXSIM_SUBDIM)
 
-    def duck_sub(col: str, i: int) -> str:
-        return f"{col}[{i * MAXSIM_SUBDIM + 1}:{(i + 1) * MAXSIM_SUBDIM}]"
+    terms = [
+        F.greatest(
+            *[
+                spark_dot(sub("q_emb", qi), sub("c_emb", ci))
+                for ci in range(MAXSIM_SUBS)
+            ]
+        )
+        for qi in range(MAXSIM_SUBS)
+    ]
+    score = terms[0]
+    for t in terms[1:]:
+        score = score + t
+    return score
 
-    spark_dot_sql = (
-        "aggregate(zip_with({a}, {b}, (x, y) ->"
-        " CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE),"
-        " (acc, x) -> acc + x)"
+
+def _duck_sub(col: str, i: int) -> str:
+    return f"{col}[{i * MAXSIM_SUBDIM + 1}:{(i + 1) * MAXSIM_SUBDIM}]"
+
+
+_MAXSIM_DUCK = "(" + " + ".join(
+    "(greatest("
+    + ", ".join(
+        SQL_DOT.format(a=_duck_sub("q.embedding", qi), b=_duck_sub("c.embedding", ci))
+        for ci in range(MAXSIM_SUBS)
     )
-    spark_terms, duck_terms = [], []
-    for qi in range(MAXSIM_SUBS):
-        sd = [
-            spark_dot_sql.format(a=spark_sub("q_emb", qi), b=spark_sub("c_emb", ci))
-            for ci in range(MAXSIM_SUBS)
-        ]
-        dd = [
-            SQL_DOT.format(a=duck_sub("q.embedding", qi), b=duck_sub("c.embedding", ci))
-            for ci in range(MAXSIM_SUBS)
-        ]
-        spark_terms.append("greatest(" + ", ".join(sd) + ")")
-        duck_terms.append("greatest(" + ", ".join(dd) + ")")
-    return (
-        "(" + " + ".join(f"({t})" for t in spark_terms) + ")",
-        "(" + " + ".join(f"({t})" for t in duck_terms) + ")",
-    )
-
-
-_MAXSIM_SPARK, _MAXSIM_DUCK = _maxsim_exprs()
+    + "))"
+    for qi in range(MAXSIM_SUBS)
+) + ")"
 
 
 @register(
@@ -3740,9 +3558,7 @@ def maxsim_late_interaction_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "neighbor_id",
             "neighbor_label",
-            F.expr(f"CAST(floor({_MAXSIM_SPARK} * 1000) AS BIGINT)").alias(
-                "score_milli"
-            ),
+            F.floor(_maxsim_spark() * 1000).cast("long").alias("score_milli"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

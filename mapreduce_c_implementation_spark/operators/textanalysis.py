@@ -25,6 +25,7 @@ from mapreduce_c_implementation_spark.functions.text import (
     ngrams,
     tokenize,
 )
+from mapreduce_c_implementation_spark.functions.vector import SQL_DOT, spark_dot
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources import load_table
 from mapreduce_c_implementation_spark.sources.tables import compute_scan, parallel_scan
@@ -1520,10 +1521,7 @@ RRF_SCALE = 1_000_000
 
 
 def _hybrid_oracle() -> str:
-    from mapreduce_c_implementation_spark.operators.similarity import (
-        _SQL_DOT,
-        _SQL_NORMS,
-    )
+    from mapreduce_c_implementation_spark.operators.similarity import _SQL_NORMS
 
     return f"""
     WITH {_SQL_BM25_CTES},
@@ -1538,7 +1536,7 @@ def _hybrid_oracle() -> str:
            WHERE vec_id = {HYBRID_QUERY_VEC}),
     sem_scored AS (
       SELECT c.vec_id AS doc_id,
-             round({_SQL_DOT.format(a="qv.qe", b="c.embedding")}
+             round({SQL_DOT.format(a="qv.qe", b="c.embedding")}
                    / (qv.qn * c.nrm), 6) AS cos
       FROM norms c CROSS JOIN qv
       WHERE c.vec_id <> {HYBRID_QUERY_VEC}
@@ -1601,10 +1599,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from mapreduce_c_implementation_spark.operators.similarity import (
-        _norms,
-        _spark_dot,
-    )
+    from mapreduce_c_implementation_spark.operators.similarity import _norms
 
     lex_base = bm25_topk_docs(spark, sf_dir).filter(
         F.col("rank") <= HYBRID_LIST_K
@@ -1621,7 +1616,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("doc_id"),
             F.round(
-                _spark_dot(F.col("qe"), F.col("embedding"))
+                spark_dot(F.col("qe"), F.col("embedding"))
                 / (F.col("qn") * F.col("nrm")),
                 6,
             ).alias("cos"),
