@@ -34,6 +34,7 @@ from mapreduce_c_implementation_spark.operators.textanalysis import (
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources.tables import (
     compute_scan,
+    local_frame,
     parallel_scan,
 )
 
@@ -1704,7 +1705,7 @@ def url_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = _spark_url_table(spark, sf_dir).withColumn(
         "path", F.expr("substring(canonical_url, length(host) + 1)")
     )
-    bl = spark.createDataFrame(_URL_BLOCKLIST, ["bhost", "bprefix"])
+    bl = local_frame(spark, _URL_BLOCKLIST, "bhost string, bprefix string")
     hit = (
         u.join(
             F.broadcast(bl),

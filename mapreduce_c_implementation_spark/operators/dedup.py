@@ -25,7 +25,7 @@ Scale design notes (the whole point of these ops is 100 TB corpora):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_c_implementation_spark.functions.iterate import (
@@ -50,6 +50,7 @@ from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources import load_table
 from mapreduce_c_implementation_spark.sources.tables import (
     compute_scan,
+    local_frame,
     parallel_scan,
     table_location,
 )
@@ -2150,6 +2151,40 @@ def _rtbf_oracle() -> str:
     """
 
 
+def _rtbf_checksum_cols(cols: list[str]) -> list[Column]:
+    """The ``chk`` / ``cnt`` aggregate columns of [[_rtbf_checksum_agg]],
+    usable as ``agg`` or ``observe`` metrics alike."""
+    hval = F.conv(
+        F.substring(F.md5(F.concat_ws("|", *cols)), 1, 8), 16, 10
+    ).cast("long")
+    return [
+        F.coalesce(F.sum(hval), F.lit(0)).cast("long").alias("chk"),
+        F.count("*").cast("long").alias("cnt"),
+    ]
+
+
+def _save_bucketed(
+    spark: SparkSession, df: DataFrame, tbl: str, key: str
+) -> None:
+    """(Re)create ``tbl`` from ``df`` in RTBF_BUCKETS buckets on ``key``,
+    sorted by ``key``.  The old table and any orphaned directory in the
+    warehouse go first, so ``saveAsTable`` never refuses the location."""
+    import shutil as _sh
+    from urllib.parse import urlparse as _urlparse
+
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
+    if warehouse:
+        _sh.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
+    (
+        df.write.bucketBy(RTBF_BUCKETS, key)
+        .sortBy(key)
+        .mode("overwrite")
+        .format("parquet")
+        .saveAsTable(tbl)
+    )
+
+
 def _rtbf_checksum_agg(
     df: DataFrame, cols: list[str], count_df: DataFrame | None = None
 ) -> DataFrame:
@@ -2160,13 +2195,7 @@ def _rtbf_checksum_agg(
     high: the CAS audit checksums the SERVED refcount aggregate but
     must count MEMBERSHIP rows — on corpora with duplicate payloads the
     grains diverge, and the oracle counts membership rows)."""
-    hval = F.conv(
-        F.substring(F.md5(F.concat_ws("|", *cols)), 1, 8), 16, 10
-    ).cast("long")
-    chk = df.agg(
-        F.coalesce(F.sum(hval), F.lit(0)).cast("long").alias("chk"),
-        F.count("*").cast("long").alias("cnt"),
-    )
+    chk = df.agg(*_rtbf_checksum_cols(cols))
     if count_df is None:
         return chk
     return chk.drop("cnt").crossJoin(
@@ -2191,7 +2220,13 @@ def _write_snapshot_manifest(
     is the missing half of the v2 swap pattern's safety promise:
     [[index_snapshot_vacuum]] re-derives the LIVE snapshot's checksum
     and verifies it against this record BEFORE the superseded version
-    is dropped."""
+    is dropped.
+
+    Where ``chk`` / ``rows`` come from is the caller's choice:
+    [[_save_observed_snapshot]] passes what the write job itself
+    observed (the rows it emitted — an independent record of the
+    write); [[index_delete_propagation]] passes its audit read-back of
+    the new table, which it takes anyway for ``rebuild_match``."""
     import json as _json
     import os as _os
 
@@ -2207,6 +2242,29 @@ def _write_snapshot_manifest(
             },
             f,
         )
+
+
+def _save_observed_snapshot(
+    spark: SparkSession,
+    df: DataFrame,
+    tbl: str,
+    key: str,
+    supersedes: str,
+    chk_cols: list[str],
+) -> None:
+    """One staging swap: [[_save_bucketed]] ``df`` into ``tbl`` and
+    commit its manifest from an ``Observation`` on that write, not from
+    re-reading the new table (one aggregate job pair fewer per swap).
+    As in ``functions/iterate.py::checkpoint_observed``, the write is
+    the action that completes ``Observation.get``, so ``get`` cannot
+    hang; a failed write raises before ``get`` and commits nothing."""
+    obs = Observation()
+    _save_bucketed(spark, df.observe(obs, *_rtbf_checksum_cols(chk_cols)), tbl, key)
+    got = obs.get
+    _write_snapshot_manifest(
+        spark, tbl, supersedes=supersedes, chk=got["chk"], rows=got["cnt"],
+        chk_cols=chk_cols,
+    )
 
 
 def read_snapshot_manifest(spark: SparkSession, tbl: str) -> dict | None:
@@ -2228,14 +2286,17 @@ def vacuum_superseded(spark: SparkSession, current_tbl: str) -> dict:
     tables accreted in the warehouse forever.
 
     Safety first: the LIVE current snapshot's membership-grain checksum
-    and row count are re-derived and verified against the manifest its
-    swap committed.  Only on an exact match does the walk drop the
-    ``supersedes`` chain (each predecessor's own manifest links one
-    further back; the chain ends at the original build, which has no
-    manifest).  Bytes are measured from the predecessor's data files
-    before each drop.  On a verification MISMATCH nothing is dropped —
-    a wrong live snapshot is precisely when the old version must
-    survive.
+    and row count are re-derived from its files on disk (the catalog's
+    cached file listing is refreshed first, so a lost file counts as
+    lost) and verified against the manifest its swap committed.  Where
+    that manifest was observed on the write itself, the two are
+    independent records of the same rows.  Only on an exact match does
+    the walk drop the ``supersedes`` chain (each predecessor's own
+    manifest links one further back; the chain ends at the original
+    build, which has no manifest).  Bytes are measured from the
+    predecessor's data files before each drop.  On a verification
+    MISMATCH nothing is dropped — a wrong live snapshot is precisely
+    when the old version must survive.
 
     Scale shape: the verify is one linear bucket-aligned scan of the
     current snapshot (no shuffle — a sum aggregate); drops are catalog
@@ -2248,6 +2309,7 @@ def vacuum_superseded(spark: SparkSession, current_tbl: str) -> dict:
     if m is None:
         raise ValueError(f"{current_tbl!r} has no snapshot manifest")
     cols = m["chk_cols"]
+    spark.catalog.refreshTable(current_tbl)
     live = _rtbf_checksum_agg(
         spark.table(current_tbl).select(*cols), cols
     ).first()
@@ -2340,8 +2402,6 @@ def index_delete_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the brief).
     """
     import hashlib as _hl
-    import shutil as _sh
-    from urllib.parse import urlparse as _urlparse
 
     from mapreduce_c_implementation_spark.streaming.queries import (
         _sscr_anchored_wins,
@@ -2374,21 +2434,10 @@ def index_delete_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cache()
 
     tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
 
     def build(name: str, df: DataFrame, key: str) -> str:
         tbl = f"b_rtbf_{name}_{tag}"
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        if warehouse:
-            _sh.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-        (
-            df.repartition(RTBF_BUCKETS, F.col(key))
-            .write.bucketBy(RTBF_BUCKETS, key)
-            .sortBy(key)
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
+        _save_bucketed(spark, df.repartition(RTBF_BUCKETS, F.col(key)), tbl, key)
         return tbl
 
     def propagate(tbl: str, key: str) -> str:
@@ -2396,17 +2445,11 @@ def index_delete_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         is never shuffled (no repartition: bucket ids are computed
         in-task by the bucketed write)."""
         v2 = f"{tbl}_v2"
-        spark.sql(f"DROP TABLE IF EXISTS {v2}")
-        if warehouse:
-            _sh.rmtree(f"{warehouse}/{v2}", ignore_errors=True)
-        (
-            spark.table(tbl)
-            .join(F.broadcast(deletes), "doc_id", "anti")
-            .write.bucketBy(RTBF_BUCKETS, key)
-            .sortBy(key)
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(v2)
+        _save_bucketed(
+            spark,
+            spark.table(tbl).join(F.broadcast(deletes), "doc_id", "anti"),
+            v2,
+            key,
         )
         return v2
 
@@ -2510,7 +2553,8 @@ def index_delete_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands_cached.unpersist()
     wins.unpersist()
     cas_m.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "index_name string, rows_before long, rows_deleted long, "
         "rows_after long, checksum_after long, rebuild_match long",
@@ -2565,12 +2609,16 @@ def index_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     == {VAC_DELETE2_REM}), each swap committing a
     ``_SNAPSHOT_MANIFEST.json`` (physical checksum + row count + column
     order) into the new snapshot's directory — three live versions,
-    two superseded.  The vacuum itself ([[vacuum_superseded]]) then:
+    two superseded.  Each manifest is observed on the swap's own
+    bucketed write ([[_save_observed_snapshot]]): it records the rows
+    the write emitted, and no job re-reads the new table to learn them.
+    The vacuum itself ([[vacuum_superseded]]) then:
 
     1. VERIFIES the current snapshot: its membership-grain checksum and
-       row count are re-derived from the live table and compared
-       against the manifest the swap committed — the safety check the
-       swap pattern promised in prose.  On mismatch, NOTHING is
+       row count are re-derived from the live table ON DISK and
+       compared against the manifest the write committed — two
+       independent records of the same rows, the safety check the swap
+       pattern promised in prose.  On mismatch, NOTHING is
        dropped (a wrong live snapshot is exactly when the old versions
        must survive).
     2. WALKS the ``supersedes`` chain from the manifest, dropping each
@@ -2590,11 +2638,13 @@ def index_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     [[index_delete_propagation]]); drops are catalog/filesystem
     metadata.  At 100 TB the staging pre-exists as the index's actual
     swap history and vacuum costs one index scan per retention cycle.
+    One call runs 9 Spark jobs: the build's shuffle + write (2), each
+    swap's broadcast + write (2 x 2), the verify aggregate (2) and the
+    result collect (1).  The audit row is a local relation
+    ([[local_frame]]), so no Python worker starts.
     Reference analog: none (LLM-pipeline maintenance surface).
     """
     import hashlib as _hl
-    import shutil as _sh
-    from urllib.parse import urlparse as _urlparse
 
     docs = parallel_scan(spark, sf_dir, "documents").select("doc_id", "text")
     cas_m = docs.select(
@@ -2607,25 +2657,18 @@ def index_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
     g0 = f"b_vac_cas_{tag}"
     g1, g2 = f"{g0}_v2", f"{g0}_v3"
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    for t in (g0, g1, g2):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        if warehouse:
-            _sh.rmtree(f"{warehouse}/{t}", ignore_errors=True)
 
     # Original build: the one full shuffle into the bucket layout.
-    (
-        cas_m.repartition(RTBF_BUCKETS, F.col("payload_sha256"))
-        .write.bucketBy(RTBF_BUCKETS, "payload_sha256")
-        .sortBy("payload_sha256")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(g0)
+    _save_bucketed(
+        spark,
+        cas_m.repartition(RTBF_BUCKETS, F.col("payload_sha256")),
+        g0,
+        "payload_sha256",
     )
 
     # Two retention epochs: broadcast anti-join rewrites (the index is
     # never shuffled — bucket ids are computed in-task), each committing
-    # a manifest into the NEW snapshot.
+    # a manifest, observed on its own write, into the NEW snapshot.
     for old, new, rem in (
         (g0, g1, RTBF_DELETE_REM),
         (g1, g2, VAC_DELETE2_REM),
@@ -2633,26 +2676,19 @@ def index_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         deletes = docs.filter(
             F.col("doc_id") % RTBF_DELETE_MOD == rem
         ).select("doc_id")
-        (
-            spark.table(old)
-            .join(F.broadcast(deletes), "doc_id", "anti")
-            .write.bucketBy(RTBF_BUCKETS, "payload_sha256")
-            .sortBy("payload_sha256")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(new)
-        )
-        committed = _rtbf_checksum_agg(
-            spark.table(new).select(*man_cols), man_cols
-        ).first()
-        _write_snapshot_manifest(
-            spark, new, supersedes=old, chk=committed["chk"],
-            rows=committed["cnt"], chk_cols=man_cols,
+        _save_observed_snapshot(
+            spark,
+            spark.table(old).join(F.broadcast(deletes), "doc_id", "anti"),
+            new,
+            "payload_sha256",
+            supersedes=old,
+            chk_cols=man_cols,
         )
 
     audit = vacuum_superseded(spark, g2)
     index_snapshot_vacuum.last_audit = audit
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 "cas_membership_index",

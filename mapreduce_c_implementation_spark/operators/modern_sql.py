@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_c_implementation_spark.registry import register
-from mapreduce_c_implementation_spark.sources.tables import register_views
+from mapreduce_c_implementation_spark.sources.tables import local_frame, register_views
 
 SPINE_START = "1995-01-01 00:00:00"
 SPINE_END = "2001-08-01 00:00:00"
@@ -459,7 +459,8 @@ def observed_metrics_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pipeline.write.format("noop").mode("overwrite").save()
     i, o = obs_in.get, obs_out.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(i["n"]),

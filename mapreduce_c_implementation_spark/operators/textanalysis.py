@@ -28,7 +28,11 @@ from mapreduce_c_implementation_spark.functions.text import (
 from mapreduce_c_implementation_spark.functions.vector import SQL_DOT, spark_dot
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources import load_table
-from mapreduce_c_implementation_spark.sources.tables import compute_scan, parallel_scan
+from mapreduce_c_implementation_spark.sources.tables import (
+    compute_scan,
+    local_frame,
+    parallel_scan,
+)
 
 _TOK = DUCKDB_TOKENIZE.format(col="text")
 
@@ -6198,7 +6202,7 @@ def greedy_set_cover_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    covered = spark.createDataFrame([], "t string").localCheckpoint()
+    covered = local_frame(spark, [], "t string").localCheckpoint()
     trace = None
     for r in range(1, SETCOVER_K + 1):
         # covered is vocabulary-bounded and localCheckpoint-backed, so

@@ -24,6 +24,7 @@ from mapreduce_c_implementation_spark.functions.text import DUCKDB_TOKENIZE, tok
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources.tables import (
     load_table,
+    local_frame,
     table_location,
 )
 
@@ -679,7 +680,12 @@ def parquet_agg_pushdown_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     )
-    return spark.createDataFrame(rows)
+    return local_frame(
+        spark,
+        rows,
+        "n_rows long, min_custkey long, max_custkey long, "
+        "min_orderkey long, max_orderkey long",
+    )
 
 
 def _agg_pushdown_plan(spark: SparkSession, sf_dir: str) -> str:
@@ -767,7 +773,9 @@ def runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("l_returnflag")
         .collect()
     )
-    return spark.createDataFrame(rows)
+    return local_frame(
+        spark, rows, "l_returnflag string, n_items long, revenue double"
+    )
 
 
 def _bloom_join_plan(spark: SparkSession, sf_dir: str) -> str:

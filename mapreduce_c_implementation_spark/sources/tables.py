@@ -13,10 +13,12 @@ DataFrame before any wide transform — assert via plans.scan_pushdown.
 
 from __future__ import annotations
 
+from typing import Sequence
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Driver star schema + event stream + LLM-pipeline tables (TESTDATA.md).
 TABLES = (
@@ -169,6 +171,30 @@ def table_location(spark: SparkSession, tbl: str) -> str:
         if r.col_name == "Location":
             return urlparse(r.data_type).path
     raise ValueError(f"no Location in catalog metadata for table {tbl!r}")
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: str
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples or ``Row``s) with the
+    DDL ``schema``, planned as ``LocalTableScan``.
+    ``spark.createDataFrame(list, schema)`` plans as ``Scan ExistingRDD``
+    over a Python ``map``, so even a one-row result starts Python
+    workers.  Here the rows become a ``pyarrow.Table`` with the schema's
+    own Arrow types, which Spark turns into a JVM local relation.  A
+    pandas input is no substitute: an empty pandas frame falls back to
+    the RDD path, silently under the default
+    ``arrow.pyspark.fallback.enabled``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

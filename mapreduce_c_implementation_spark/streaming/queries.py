@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from mapreduce_c_implementation_spark.functions.exactagg import exact_sum
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources import load_table
+from mapreduce_c_implementation_spark.sources.tables import local_frame
 from mapreduce_c_implementation_spark.streaming.staging import (
     SENTINEL_TS,
     SENTINEL_TYPE,
@@ -2390,7 +2391,7 @@ def stream_substring_screen_cumulative(spark: SparkSession, sf_dir: str) -> Data
     if warehouse:
         _sh.rmtree(f"{warehouse}/{ovl}", ignore_errors=True)
     (
-        spark.createDataFrame([], "base_doc long, win_hash string")
+        local_frame(spark, [], "base_doc long, win_hash string")
         .write.bucketBy(SSCR_BUCKETS, "win_hash")
         .sortBy("win_hash")
         .mode("overwrite")
@@ -2408,7 +2409,7 @@ def stream_substring_screen_cumulative(spark: SparkSession, sf_dir: str) -> Data
         _sh.rmtree(_FEBATCH_DIRS[tkey], ignore_errors=True)
     texts_dir = tempfile.mkdtemp(prefix="sscrc_texts_")
     _FEBATCH_DIRS[tkey] = texts_dir
-    spark.createDataFrame([], "doc_id long, text string").write.mode(
+    local_frame(spark, [], "doc_id long, text string").write.mode(
         "overwrite"
     ).parquet(texts_dir)
 
@@ -2596,7 +2597,7 @@ def _sscrr_run(spark: SparkSession, sf_dir: str, state_root: str,
     if not _os.path.isdir(_os.path.join(texts_root, "e_init")):
         # Schema seed so the accepted-texts read works before the first
         # acceptance (and after a restart with zero accepted docs).
-        spark.createDataFrame([], "doc_id long, text string").write.mode(
+        local_frame(spark, [], "doc_id long, text string").write.mode(
             "overwrite"
         ).parquet(_os.path.join(texts_root, "e_init"))
 
@@ -2915,15 +2916,15 @@ def stream_substring_screen_rtbf(
         .format("parquet")
         .saveAsTable(f"b_sscrv_{tag}_base_v0")
     )
-    spark.createDataFrame([], "base_doc long, win_hash string").write.bucketBy(
+    local_frame(spark, [], "base_doc long, win_hash string").write.bucketBy(
         SSCR_BUCKETS, "win_hash"
     ).sortBy("win_hash").mode("overwrite").format("parquet").saveAsTable(
         f"b_sscrv_{tag}_ovl_v0"
     )
-    spark.createDataFrame([], "doc_id long, text string").write.mode(
+    local_frame(spark, [], "doc_id long, text string").write.mode(
         "overwrite"
     ).parquet(st["texts"])
-    spark.createDataFrame([], "doc_id long").write.mode("overwrite").parquet(
+    local_frame(spark, [], "doc_id long").write.mode("overwrite").parquet(
         del_dir
     )
     stream_substring_screen_rtbf.last_delete_audit = []

@@ -131,6 +131,73 @@ def test_vacuum_refuses_to_drop_on_checksum_mismatch(spark, sf_smoke):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_observed_manifest_matches_readback_and_vacuum_sees_lost_file(
+    spark,
+):
+    """The manifest observed on the swap's write equals the checksum
+    read back from the written table.  The vacuum's verify reads the
+    files on disk: after one bucket file of the new snapshot is lost,
+    it refuses (verified == 0) and drops nothing."""
+    from mapreduce_c_implementation_spark.operators.dedup import (
+        RTBF_BUCKETS,
+        _rtbf_checksum_agg,
+        _save_bucketed,
+        _save_observed_snapshot,
+        read_snapshot_manifest,
+        vacuum_superseded,
+    )
+    from mapreduce_c_implementation_spark.sources.tables import (
+        table_location,
+    )
+
+    old_t, new_t = "b_vac_obs_old", "b_vac_obs_new"
+    cols = ["doc_id", "k"]
+    try:
+        df = spark.range(500).select(
+            F.col("id").alias("doc_id"),
+            F.md5(F.col("id").cast("string")).alias("k"),
+        )
+        _save_bucketed(spark, df.repartition(RTBF_BUCKETS, "k"), old_t, "k")
+        _save_observed_snapshot(
+            spark,
+            spark.table(old_t).filter(F.col("doc_id") % 10 != 3),
+            new_t,
+            "k",
+            supersedes=old_t,
+            chk_cols=cols,
+        )
+        m = read_snapshot_manifest(spark, new_t)
+        back = _rtbf_checksum_agg(spark.table(new_t), cols).first()
+        assert (m["checksum"], m["rows"]) == (back["chk"], back["cnt"])
+        assert m["rows"] == 450
+        assert m["supersedes"] == old_t and m["chk_cols"] == cols
+
+        parts = sorted(Path(table_location(spark, new_t)).glob("part-*"))
+        assert len(parts) > 1
+        parts[0].unlink()
+        audit = vacuum_superseded(spark, new_t)
+        assert audit["verified"] == 0, audit
+        assert audit["versions_dropped"] == 0
+        assert audit["bytes_reclaimed"] == 0
+        assert audit["rows_current"] < 450
+        assert spark.catalog.tableExists(old_t), "dropped despite lost file"
+    finally:
+        for t in (old_t, new_t):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_vacuum_op_runs_at_most_nine_jobs(spark, sf_correct):
+    """Per call (query_fn + toPandas): build 2, two observed swaps 2 x 2,
+    verify 2, result collect 1.  The swaps' manifests come from their
+    writes, so no job re-reads a new snapshot."""
+    op = get_operator("index_snapshot_vacuum").query_fn
+    op(spark, sf_correct).toPandas()  # warm: reader and catalog caches
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = dag.numTotalJobs()
+    op(spark, sf_correct).toPandas()
+    assert dag.numTotalJobs() - jobs <= 9
+
+
 # --- stream_substring_screen_resumable --------------------------------
 
 
