@@ -26,6 +26,7 @@ import shutil
 import time
 from dataclasses import dataclass, field
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,28 +115,37 @@ def inverted_index_plan(
     )
 
 
-def run_inverted_index_job(spark: SparkSession, job: MapReduceJob) -> JobResult:
-    """The flagship pipeline end-to-end over raw text files:
-    ``inverted_index_plan`` written as part-%05d text shards."""
+def _run_app(
+    spark: SparkSession,
+    job: MapReduceJob,
+    app: str,
+    write: Callable[[Path], dict],
+) -> JobResult:
+    """The steps every job-API app shares, the reference's MR_Run
+    (src/job.c:157-293): validate, clear the output dir, time
+    ``write(out)`` (which builds the app's plan, writes it under
+    ``out`` and returns the app's own counters), then report.  The
+    part files under ``out`` give the shard count and skew table."""
     job.validate()
     out = Path(job.output_dir)
     if job.clear_output and out.exists():
         shutil.rmtree(out)
 
     metrics = JobMetrics(config={
+        "app": app,
         "input_paths": list(job.input_paths),
         "output_dir": job.output_dir,
         "num_partitions": job.num_partitions,
+        "readers": job.readers,
+        "mappers": job.mappers,
     })
     stage_floor = max_stage_id(spark)
     t0 = time.perf_counter()
-
-    postings = inverted_index_plan(spark, job.input_paths, job.num_partitions)
-    # One text shard per reducer partition — part-%05d like src/main.c:92-98.
-    postings.write.text(str(out))
-
+    counters = write(out)
     metrics.wall_s = round(time.perf_counter() - t0, 3)
-    files = sorted(str(p) for p in out.glob("part-*"))
+
+    files = sorted(str(p) for p in out.rglob("part-*"))
+    metrics.counters.update(counters)
     metrics.counters["n_output_files"] = len(files)
     metrics.counters["input_bytes"] = input_bytes(job.input_paths)
     # Stage clocks + skew table, reference metrics.c parity: stage rows
@@ -148,6 +158,19 @@ def run_inverted_index_job(spark: SparkSession, job: MapReduceJob) -> JobResult:
     if job.verbose:
         print(metrics.render_report())
     return JobResult(output_dir=str(out), metrics=metrics, output_files=files)
+
+
+def run_inverted_index_job(spark: SparkSession, job: MapReduceJob) -> JobResult:
+    """The flagship pipeline end-to-end over raw text files:
+    ``inverted_index_plan`` written as part-%05d text shards."""
+
+    def write(out: Path) -> dict:
+        postings = inverted_index_plan(spark, job.input_paths, job.num_partitions)
+        # One text shard per reducer partition — part-%05d like src/main.c:92-98.
+        postings.write.text(str(out))
+        return {}
+
+    return _run_app(spark, job, "inverted_index", write)
 
 
 def parse_cli(argv: list[str]) -> MapReduceJob:
@@ -242,87 +265,66 @@ def run_corpus_pipeline_job(spark: SparkSession, job: MapReduceJob) -> JobResult
         SPLIT_VALID_PCT,
     )
 
-    job.validate()
-    out = Path(job.output_dir)
-    if job.clear_output and out.exists():
-        shutil.rmtree(out)
+    def write(out: Path) -> dict:
+        obs_in = Observation("corpus_in")
+        obs_out = Observation("corpus_out")
 
-    metrics = JobMetrics(config={
-        "input_paths": list(job.input_paths),
-        "output_dir": job.output_dir,
-        "num_partitions": job.num_partitions,
-        "app": "corpus_pipeline",
-    })
-    stage_floor = max_stage_id(spark)
-    t0 = time.perf_counter()
-
-    obs_in = Observation("corpus_in")
-    obs_out = Observation("corpus_out")
-
-    docs = spark.read.parquet(*job.input_paths).observe(
-        obs_in, F.count(F.lit(1)).alias("n_input_docs")
-    )
-    toks = docs.select(
-        "doc_id", "text", "lang", "source",
-        tokenize(F.col("text")).alias("tokens"),
-    )
-    text_len = F.length("text")
-    n_tok = F.size("tokens")
-    alpha_ratio = (
-        F.length(F.regexp_replace("text", "[^A-Za-z]", "")).cast("double")
-        / F.when(text_len == 0, F.lit(1)).otherwise(text_len)
-    )
-    distinct_ratio = (
-        F.size(F.array_distinct("tokens")).cast("double")
-        / F.when(n_tok == 0, F.lit(1)).otherwise(n_tok)
-    )
-    kept = toks.filter(
-        (n_tok >= QF_MIN_TOKENS)
-        & (alpha_ratio >= QF_MIN_ALPHA_RATIO)
-        & (distinct_ratio >= QF_MIN_DISTINCT_RATIO)
-    )
-    # Exact dedup: one representative (min doc_id) per content digest —
-    # min_by over the full row, digest-keyed shuffle only.
-    deduped = (
-        kept.withColumn("digest", F.md5(F.col("text")))
-        .groupBy("digest")
-        .agg(F.min_by(F.struct("doc_id", "text", "lang", "source", "tokens"),
-                      F.col("doc_id")).alias("r"))
-        .select("r.doc_id", "r.text", "r.lang", "r.source", "r.tokens")
-    )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 100
-    )
-    final = (
-        deduped.select(
+        docs = spark.read.parquet(*job.input_paths).observe(
+            obs_in, F.count(F.lit(1)).alias("n_input_docs")
+        )
+        toks = docs.select(
             "doc_id", "text", "lang", "source",
-            F.size("tokens").cast("long").alias("n_tokens"),
-            F.when(bucket < SPLIT_TRAIN_PCT, "train")
-            .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VALID_PCT, "valid")
-            .otherwise("test")
-            .alias("split"),
+            tokenize(F.col("text")).alias("tokens"),
         )
-        .observe(
-            obs_out,
-            F.count(F.lit(1)).alias("n_output_docs"),
-            F.sum("n_tokens").alias("n_output_tokens"),
+        text_len = F.length("text")
+        n_tok = F.size("tokens")
+        alpha_ratio = (
+            F.length(F.regexp_replace("text", "[^A-Za-z]", "")).cast("double")
+            / F.when(text_len == 0, F.lit(1)).otherwise(text_len)
         )
-        .repartition(job.num_partitions, F.col("doc_id"))
-    )
-    final.write.partitionBy("split").parquet(str(out))
+        distinct_ratio = (
+            F.size(F.array_distinct("tokens")).cast("double")
+            / F.when(n_tok == 0, F.lit(1)).otherwise(n_tok)
+        )
+        kept = toks.filter(
+            (n_tok >= QF_MIN_TOKENS)
+            & (alpha_ratio >= QF_MIN_ALPHA_RATIO)
+            & (distinct_ratio >= QF_MIN_DISTINCT_RATIO)
+        )
+        # Exact dedup: one representative (min doc_id) per content digest —
+        # min_by over the full row, digest-keyed shuffle only.
+        deduped = (
+            kept.withColumn("digest", F.md5(F.col("text")))
+            .groupBy("digest")
+            .agg(F.min_by(F.struct("doc_id", "text", "lang", "source", "tokens"),
+                          F.col("doc_id")).alias("r"))
+            .select("r.doc_id", "r.text", "r.lang", "r.source", "r.tokens")
+        )
+        bucket = (
+            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
+            .cast("long") % 100
+        )
+        final = (
+            deduped.select(
+                "doc_id", "text", "lang", "source",
+                F.size("tokens").cast("long").alias("n_tokens"),
+                F.when(bucket < SPLIT_TRAIN_PCT, "train")
+                .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VALID_PCT, "valid")
+                .otherwise("test")
+                .alias("split"),
+            )
+            .observe(
+                obs_out,
+                F.count(F.lit(1)).alias("n_output_docs"),
+                F.sum("n_tokens").alias("n_output_tokens"),
+            )
+            .repartition(job.num_partitions, F.col("doc_id"))
+        )
+        final.write.partitionBy("split").parquet(str(out))
+        return {
+            "n_input_docs": int(obs_in.get["n_input_docs"]),
+            "n_output_docs": int(obs_out.get["n_output_docs"]),
+            "n_output_tokens": int(obs_out.get["n_output_tokens"]),
+        }
 
-    metrics.wall_s = round(time.perf_counter() - t0, 3)
-    files = sorted(str(p) for p in out.glob("split=*/part-*"))
-    metrics.counters["n_input_docs"] = int(obs_in.get["n_input_docs"])
-    metrics.counters["n_output_docs"] = int(obs_out.get["n_output_docs"])
-    metrics.counters["n_output_tokens"] = int(obs_out.get["n_output_tokens"])
-    metrics.counters["n_output_files"] = len(files)
-    metrics.counters["input_bytes"] = input_bytes(job.input_paths)
-    metrics.stages = collect_stage_metrics(spark, after=stage_floor)
-    metrics.partition_top = partition_skew_from_files(files)
-    if job.metrics_path:
-        metrics.write_report(job.metrics_path)
-    if job.verbose:
-        print(metrics.render_report())
-    return JobResult(output_dir=str(out), metrics=metrics, output_files=files)
+    return _run_app(spark, job, "corpus_pipeline", write)

@@ -52,6 +52,8 @@ from mapreduce_c_implementation_spark.sources.tables import (
     compute_scan,
     local_frame,
     parallel_scan,
+    path_tag,
+    save_bucketed,
     table_location,
 )
 
@@ -1234,28 +1236,19 @@ def dedup_minhash_bucketed_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to the dedup index; the reference's analog is its hash
     partitioner contract (src/partition.c) made durable.
     """
-    import hashlib as _hl
-    import shutil as _sh
-    from urllib.parse import urlparse as _urlparse
-
     bands = _minhash_bands(spark, sf_dir)
     bkey = F.concat_ws("#", F.col("band_idx").cast("string"), F.col("band_key"))
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    tbl = f"b_mh_index_{tag}"
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
+    tbl = f"b_mh_index_{path_tag(sf_dir)}"
     if not spark.catalog.tableExists(tbl):
-        if warehouse:
-            _sh.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-        (
+        save_bucketed(
+            spark,
             bands.filter(~_inc_is_new())
             .select("doc_id", bkey.alias("bkey"))
             # one file per bucket keeps the sorted-scan optimization on
-            .repartition(MH_INDEX_BUCKETS, F.col("bkey"))
-            .write.bucketBy(MH_INDEX_BUCKETS, "bkey")
-            .sortBy("bkey")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tbl)
+            .repartition(MH_INDEX_BUCKETS, F.col("bkey")),
+            tbl,
+            "bkey",
+            MH_INDEX_BUCKETS,
         )
     idx = spark.table(tbl).select(
         F.col("doc_id").alias("index_doc_id"), "bkey"
@@ -2163,28 +2156,6 @@ def _rtbf_checksum_cols(cols: list[str]) -> list[Column]:
     ]
 
 
-def _save_bucketed(
-    spark: SparkSession, df: DataFrame, tbl: str, key: str
-) -> None:
-    """(Re)create ``tbl`` from ``df`` in RTBF_BUCKETS buckets on ``key``,
-    sorted by ``key``.  The old table and any orphaned directory in the
-    warehouse go first, so ``saveAsTable`` never refuses the location."""
-    import shutil as _sh
-    from urllib.parse import urlparse as _urlparse
-
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    if warehouse:
-        _sh.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-    (
-        df.write.bucketBy(RTBF_BUCKETS, key)
-        .sortBy(key)
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(tbl)
-    )
-
-
 def _rtbf_checksum_agg(
     df: DataFrame, cols: list[str], count_df: DataFrame | None = None
 ) -> DataFrame:
@@ -2252,14 +2223,17 @@ def _save_observed_snapshot(
     supersedes: str,
     chk_cols: list[str],
 ) -> None:
-    """One staging swap: [[_save_bucketed]] ``df`` into ``tbl`` and
+    """One staging swap: [[save_bucketed]] ``df`` into ``tbl`` and
     commit its manifest from an ``Observation`` on that write, not from
     re-reading the new table (one aggregate job pair fewer per swap).
     As in ``functions/iterate.py::checkpoint_observed``, the write is
     the action that completes ``Observation.get``, so ``get`` cannot
     hang; a failed write raises before ``get`` and commits nothing."""
     obs = Observation()
-    _save_bucketed(spark, df.observe(obs, *_rtbf_checksum_cols(chk_cols)), tbl, key)
+    save_bucketed(
+        spark, df.observe(obs, *_rtbf_checksum_cols(chk_cols)), tbl, key,
+        RTBF_BUCKETS,
+    )
     got = obs.get
     _write_snapshot_manifest(
         spark, tbl, supersedes=supersedes, chk=got["chk"], rows=got["cnt"],
@@ -2401,8 +2375,6 @@ def index_delete_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     new one commits).  Reference analog: none (LLM-pipeline surface per
     the brief).
     """
-    import hashlib as _hl
-
     from mapreduce_c_implementation_spark.streaming.queries import (
         _sscr_anchored_wins,
     )
@@ -2433,11 +2405,14 @@ def index_delete_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.octet_length(F.col("text")).cast("long").alias("n_bytes"),
     ).cache()
 
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = path_tag(sf_dir)
 
     def build(name: str, df: DataFrame, key: str) -> str:
         tbl = f"b_rtbf_{name}_{tag}"
-        _save_bucketed(spark, df.repartition(RTBF_BUCKETS, F.col(key)), tbl, key)
+        save_bucketed(
+            spark, df.repartition(RTBF_BUCKETS, F.col(key)), tbl, key,
+            RTBF_BUCKETS,
+        )
         return tbl
 
     def propagate(tbl: str, key: str) -> str:
@@ -2445,11 +2420,12 @@ def index_delete_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         is never shuffled (no repartition: bucket ids are computed
         in-task by the bucketed write)."""
         v2 = f"{tbl}_v2"
-        _save_bucketed(
+        save_bucketed(
             spark,
             spark.table(tbl).join(F.broadcast(deletes), "doc_id", "anti"),
             v2,
             key,
+            RTBF_BUCKETS,
         )
         return v2
 
@@ -2644,8 +2620,6 @@ def index_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ([[local_frame]]), so no Python worker starts.
     Reference analog: none (LLM-pipeline maintenance surface).
     """
-    import hashlib as _hl
-
     docs = parallel_scan(spark, sf_dir, "documents").select("doc_id", "text")
     cas_m = docs.select(
         "doc_id",
@@ -2654,16 +2628,16 @@ def index_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     man_cols = ["doc_id", "payload_sha256", "n_bytes"]
 
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    g0 = f"b_vac_cas_{tag}"
+    g0 = f"b_vac_cas_{path_tag(sf_dir)}"
     g1, g2 = f"{g0}_v2", f"{g0}_v3"
 
     # Original build: the one full shuffle into the bucket layout.
-    _save_bucketed(
+    save_bucketed(
         spark,
         cas_m.repartition(RTBF_BUCKETS, F.col("payload_sha256")),
         g0,
         "payload_sha256",
+        RTBF_BUCKETS,
     )
 
     # Two retention epochs: broadcast anti-join rewrites (the index is
@@ -2785,32 +2759,22 @@ def dedup_minhash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/partition.c, made durable AND maintainable; LLM-pipeline
     surface per the brief).
     """
-    import hashlib as _hl
-    import shutil as _sh
-    from urllib.parse import urlparse as _urlparse
-
     bands_all = _minhash_bands(spark, sf_dir)
     bkey = F.concat_ws(
         "#", F.col("band_idx").cast("string"), F.col("band_key")
     )
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    tbl = f"b_mha_index_{tag}"
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
+    tbl = f"b_mha_index_{path_tag(sf_dir)}"
 
     # Maintained state starts fresh each invocation (the op replays the
     # one staged increment): rebuild the old-corpus index.
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    if warehouse:
-        _sh.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-    (
+    save_bucketed(
+        spark,
         bands_all.filter(~_inc_is_new())
         .select("doc_id", bkey.alias("bkey"))
-        .repartition(MH_INDEX_BUCKETS, F.col("bkey"))
-        .write.bucketBy(MH_INDEX_BUCKETS, "bkey")
-        .sortBy("bkey")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(tbl)
+        .repartition(MH_INDEX_BUCKETS, F.col("bkey")),
+        tbl,
+        "bkey",
+        MH_INDEX_BUCKETS,
     )
 
     inc = bands_all.filter(_inc_is_new()).select(
@@ -2851,15 +2815,14 @@ def dedup_minhash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "semi",
     )
-    (
-        accepted_bands.repartition(MH_INDEX_BUCKETS, F.col("bkey"))
-        .write.bucketBy(MH_INDEX_BUCKETS, "bkey")
-        .sortBy("bkey")
-        .mode("append")
-        .format("parquet")
-        .saveAsTable(tbl)
+    save_bucketed(
+        spark,
+        accepted_bands.repartition(MH_INDEX_BUCKETS, F.col("bkey")),
+        tbl,
+        "bkey",
+        MH_INDEX_BUCKETS,
+        mode="append",
     )
-    spark.catalog.refreshTable(tbl)
     # decisions are checkpointed and the index is on disk — release the
     # per-invocation band cache (cache-scoping rule: long suites/bench
     # runs must not accumulate one band copy per maintenance op).
@@ -2985,10 +2948,6 @@ def index_upsert_delete_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
     deletes.  Reference analog: none (table-maintenance surface per
     the brief).
     """
-    import hashlib as _hl
-    import shutil as _sh
-    from urllib.parse import urlparse as _urlparse
-
     bands_cached = _minhash_bands(spark, sf_dir)
     bands_all = bands_cached.select(
         "doc_id",
@@ -2996,14 +2955,8 @@ def index_upsert_delete_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
             "#", F.col("band_idx").cast("string"), F.col("band_key")
         ).alias("bkey"),
     )
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    tbl = f"b_life_index_{tag}"
+    tbl = f"b_life_index_{path_tag(sf_dir)}"
     v2 = f"{tbl}_v2"
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    for t in (tbl, v2):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        if warehouse:
-            _sh.rmtree(f"{warehouse}/{t}", ignore_errors=True)
 
     hval = F.conv(
         F.substring(
@@ -3018,15 +2971,14 @@ def index_upsert_delete_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
     audits = []
     for e in range(LIFE_EPOCHS):
         inserts = bands_all.filter(F.col("doc_id") % LIFE_EPOCHS == e)
-        (
-            inserts.repartition(MH_INDEX_BUCKETS, F.col("bkey"))
-            .write.bucketBy(MH_INDEX_BUCKETS, "bkey")
-            .sortBy("bkey")
-            .mode("overwrite" if e == 0 else "append")
-            .format("parquet")
-            .saveAsTable(tbl)
+        save_bucketed(
+            spark,
+            inserts.repartition(MH_INDEX_BUCKETS, F.col("bkey")),
+            tbl,
+            "bkey",
+            MH_INDEX_BUCKETS,
+            mode="overwrite" if e == 0 else "append",
         )
-        spark.catalog.refreshTable(tbl)
         if e > 0:
             new_tombs = docs.filter(
                 (F.col("doc_id") % LIFE_EPOCHS < e)
@@ -3067,15 +3019,14 @@ def index_upsert_delete_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
     # one file per bucket (path read — see index_bucket_compaction; the
     # path is catalog-resolved, never string-built from the warehouse
     # conf, ADVICE r12).
-    (
+    save_bucketed(
+        spark,
         spark.read.parquet(table_location(spark, tbl))
         .join(F.broadcast(tombstones), "doc_id", "anti")
-        .repartition(MH_INDEX_BUCKETS, F.col("bkey"))
-        .write.bucketBy(MH_INDEX_BUCKETS, "bkey")
-        .sortBy("bkey")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(v2)
+        .repartition(MH_INDEX_BUCKETS, F.col("bkey")),
+        v2,
+        "bkey",
+        MH_INDEX_BUCKETS,
     )
     audits.append(
         spark.table(v2)

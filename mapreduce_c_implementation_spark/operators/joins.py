@@ -22,6 +22,7 @@ from mapreduce_c_implementation_spark.functions.exactagg import (
 )
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources import load_table
+from mapreduce_c_implementation_spark.sources.tables import path_tag, save_bucketed
 
 
 @register(
@@ -316,32 +317,20 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     where orders would otherwise broadcast; at production scale the
     optimizer picks SMJ on its own.
     """
-    import hashlib as _hl
-    import shutil as _sh
-    from urllib.parse import urlparse as _urlparse
-
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = path_tag(sf_dir)
     b_orders, b_lineitem = f"b_orders_{tag}", f"b_lineitem_{tag}"
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
     for tbl, src, key in (
         (b_orders, "orders", "o_orderkey"),
         (b_lineitem, "lineitem", "l_orderkey"),
     ):
         if not spark.catalog.tableExists(tbl):
-            # A previous session's managed-table directory may survive
-            # while the in-memory catalog entry did not; clear it so
-            # saveAsTable doesn't refuse the location.
-            if warehouse:
-                _sh.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-            (
-                load_table(spark, sf_dir, src)
+            save_bucketed(
+                spark,
                 # one file per bucket => sorted-scan optimization stays on
-                .repartition(N_BUCKETS, F.col(key))
-                .write.bucketBy(N_BUCKETS, key)
-                .sortBy(key)
-                .mode("overwrite")
-                .format("parquet")
-                .saveAsTable(tbl)
+                load_table(spark, sf_dir, src).repartition(N_BUCKETS, F.col(key)),
+                tbl,
+                key,
+                N_BUCKETS,
             )
     o = spark.table(b_orders).select("o_orderkey", "o_orderpriority")
     li = spark.table(b_lineitem).select("l_orderkey", "l_quantity")

@@ -25,6 +25,8 @@ from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources.tables import (
     load_table,
     local_frame,
+    path_tag,
+    save_bucketed,
     table_location,
 )
 
@@ -848,35 +850,26 @@ def index_bucket_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (table-maintenance surface; the reference's
     part-%05d sink never appends, src/mapreduce.c:76-224).
     """
-    import hashlib as _hl
-    from urllib.parse import urlparse as _urlparse
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     members = docs.select(
         "doc_id",
         F.sha2(F.encode(F.col("text"), "UTF-8"), 256).alias("payload_sha256"),
     )
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    tbl = f"b_cmpb_index_{tag}"
+    tbl = f"b_cmpb_index_{path_tag(sf_dir)}"
     v2 = f"{tbl}_v2"
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    for t in (tbl, v2):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        if warehouse:
-            shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
 
     # Replay the append history: initial write + bucket-aligned appends.
     for s in range(CMPB_SLICES):
-        (
-            members.filter(F.col("doc_id") % CMPB_SLICES == s)
-            .repartition(CMPB_BUCKETS, F.col("payload_sha256"))
-            .write.bucketBy(CMPB_BUCKETS, "payload_sha256")
-            .sortBy("payload_sha256")
-            .mode("overwrite" if s == 0 else "append")
-            .format("parquet")
-            .saveAsTable(tbl)
+        save_bucketed(
+            spark,
+            members.filter(F.col("doc_id") % CMPB_SLICES == s).repartition(
+                CMPB_BUCKETS, F.col("payload_sha256")
+            ),
+            tbl,
+            "payload_sha256",
+            CMPB_BUCKETS,
+            mode="overwrite" if s == 0 else "append",
         )
-    spark.catalog.refreshTable(tbl)
 
     # The compaction itself: one full-table re-cluster on the bucket key.
     # Read the table's FILES by path, not via the catalog: the bucketed
@@ -887,14 +880,14 @@ def index_bucket_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # snapshot lands at one file per bucket.  The path itself comes from
     # the CATALOG (ADVICE r12: a string-built warehouse path breaks when
     # the conf is unset or the table lives elsewhere).
-    (
-        spark.read.parquet(table_location(spark, tbl))
-        .repartition(CMPB_BUCKETS, F.col("payload_sha256"))
-        .write.bucketBy(CMPB_BUCKETS, "payload_sha256")
-        .sortBy("payload_sha256")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(v2)
+    save_bucketed(
+        spark,
+        spark.read.parquet(table_location(spark, tbl)).repartition(
+            CMPB_BUCKETS, F.col("payload_sha256")
+        ),
+        v2,
+        "payload_sha256",
+        CMPB_BUCKETS,
     )
 
     hval = F.conv(

@@ -9,11 +9,23 @@ parallel reads) via ``spark.read``; chunk size is the
 At 100 TB these parquet reads are the scan layer: column pruning and
 predicate pushdown happen because every operator selects/filters on the
 DataFrame before any wide transform — assert via plans.scan_pushdown.
+
+The module is also the package's one warehouse-table writer.
+``save_bucketed`` creates or appends a bucketed, key-sorted catalog
+table (the persisted, key-partitioned index the maintenance and
+streaming-screen operators probe without an index-side shuffle);
+``path_tag`` scopes such a table's name to a fixture dir or state root;
+``drop_tables`` reclaims a family of them.  Only here is
+``spark.sql.warehouse.dir`` read.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import shutil
 from typing import Sequence
+from urllib.parse import urlparse
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
@@ -165,12 +177,75 @@ def table_location(spark: SparkSession, tbl: str) -> str:
     write's clustering requirement per-file and elides the re-cluster).
     Raises if the table has no resolvable location — failing fast beats
     scanning a wrong directory."""
-    from urllib.parse import urlparse
-
     for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect():
         if r.col_name == "Location":
             return urlparse(r.data_type).path
     raise ValueError(f"no Location in catalog metadata for table {tbl!r}")
+
+
+def path_tag(s: str) -> str:
+    """The 8-hex-digit md5 tag that scopes a persisted table's name to
+    ``s`` (a fixture dir or a state root)."""
+    return hashlib.md5(s.encode()).hexdigest()[:8]
+
+
+def _warehouse_dir(spark: SparkSession) -> str:
+    """Filesystem path of the managed-table warehouse ('' if unset)."""
+    return urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
+
+
+def save_bucketed(
+    spark: SparkSession,
+    df: DataFrame,
+    tbl: str,
+    key: str,
+    buckets: int,
+    mode: str = "overwrite",
+) -> None:
+    """Write ``df`` as catalog table ``tbl`` in ``buckets`` buckets on
+    ``key``, sorted by ``key``.
+
+    ``mode="overwrite"`` first drops ``tbl`` and removes any orphaned
+    warehouse directory of that name (a managed table whose in-memory
+    catalog entry died with an earlier session), which ``saveAsTable``
+    would otherwise refuse with ``LOCATION_ALREADY_EXISTS``.  Because
+    the old table is gone before the write starts, ``df`` must not read
+    ``tbl``: write each version under a new name.  ``mode="append"``
+    adds files to the existing buckets, then refreshes ``spark``'s
+    cached listing so the next read sees them.  ``spark`` is the
+    session that reads the table afterwards, which inside
+    ``foreachBatch`` is not ``df``'s micro-batch session.
+
+    The write never repartitions: callers that want one file per
+    bucket pass ``df.repartition(buckets, key)``; a narrow rewrite of a
+    bucketed table (a broadcast anti-join) computes bucket ids in-task
+    and needs no shuffle."""
+    if mode == "overwrite":
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        warehouse = _warehouse_dir(spark)
+        if warehouse:
+            shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
+    (
+        df.write.bucketBy(buckets, key)
+        .sortBy(key)
+        .mode(mode)
+        .format("parquet")
+        .saveAsTable(tbl)
+    )
+    if mode == "append":
+        spark.catalog.refreshTable(tbl)
+
+
+def drop_tables(spark: SparkSession, prefix: str) -> None:
+    """Drop every catalog table named ``prefix*`` and remove the
+    orphaned warehouse directories of such names."""
+    for t in spark.catalog.listTables():
+        if t.name.startswith(prefix):
+            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+    warehouse = _warehouse_dir(spark)
+    if warehouse:
+        for d in glob.glob(f"{warehouse}/{prefix}*"):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def local_frame(

@@ -17,15 +17,24 @@ the memory sink becomes a real sink behind ``foreachBatch``.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from mapreduce_c_implementation_spark.functions.exactagg import exact_sum
 from mapreduce_c_implementation_spark.registry import register
 from mapreduce_c_implementation_spark.sources import load_table
-from mapreduce_c_implementation_spark.sources.tables import local_frame
+from mapreduce_c_implementation_spark.sources.tables import (
+    drop_tables,
+    local_frame,
+    path_tag,
+    save_bucketed,
+)
 from mapreduce_c_implementation_spark.streaming.staging import (
     SENTINEL_TS,
     SENTINEL_TYPE,
@@ -52,6 +61,16 @@ _SQL_IS_LATE_ARRIVAL = (
 _FEBATCH_DIRS: dict[tuple[str, str], str] = {}
 
 
+def _run_dir(sf_dir: str, part: str) -> str:
+    """A fresh temp dir for this run's ``part`` of the sink state over
+    ``sf_dir``; the previous run's dir for the same part is removed."""
+    key = (sf_dir, part)
+    if key in _FEBATCH_DIRS:
+        shutil.rmtree(_FEBATCH_DIRS[key], ignore_errors=True)
+    _FEBATCH_DIRS[key] = tempfile.mkdtemp(prefix=f"{part}_")
+    return _FEBATCH_DIRS[key]
+
+
 def _staged_stream(spark: SparkSession, sf_dir: str, with_dup_replay: bool = False) -> DataFrame:
     """File-source stream over the deterministic staging plan."""
     d = stage_events(sf_dir, with_dup_replay=with_dup_replay)
@@ -61,22 +80,36 @@ def _staged_stream(spark: SparkSession, sf_dir: str, with_dup_replay: bool = Fal
     )
 
 
-def _drain_to_table(spark: SparkSession, out: DataFrame, output_mode: str = "append") -> DataFrame:
-    """Run the streaming DataFrame to completion into a memory sink and
-    return the sink table."""
-    name = f"sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        out.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
+def _drain(writer: DataStreamWriter) -> None:
+    """Start ``writer`` over the available input, run it to completion
+    and stop it."""
+    q = writer.trigger(availableNow=True).start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
+
+
+def _drain_to_table(spark: SparkSession, out: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Run the streaming DataFrame to completion into a memory sink and
+    return the sink table."""
+    name = f"sink_{uuid.uuid4().hex[:12]}"
+    _drain(out.writeStream.outputMode(output_mode).format("memory").queryName(name))
     return spark.table(name)
+
+
+def _drain_foreach_batch(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    output_mode: str,
+    checkpoint: str | None = None,
+) -> None:
+    """Run ``stream`` to completion through ``foreachBatch(fn)``; a
+    ``checkpoint`` location makes the run resumable."""
+    writer = stream.writeStream.outputMode(output_mode).foreachBatch(fn)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    _drain(writer)
 
 
 def _run_stream(
@@ -417,15 +450,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     under retries additionally needs per-epoch idempotent writes —
     ``partitionBy('epoch')`` + dynamic partition overwrite + a
     checkpointLocation; this demo keeps the single-run contract.)"""
-    import tempfile
-
-    key = (sf_dir, "febatch")
-    if key in _FEBATCH_DIRS:
-        import shutil
-
-        shutil.rmtree(_FEBATCH_DIRS[key], ignore_errors=True)
-    out_dir = tempfile.mkdtemp(prefix="febatch_sink_")
-    _FEBATCH_DIRS[key] = out_dir
+    out_dir = _run_dir(sf_dir, "febatch_sink")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ANN001
         (
@@ -438,16 +463,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered = stream.filter(
         (F.col("value") > 100) & (F.col("event_type") != SENTINEL_TYPE)
     )
-    q = (
-        filtered.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(filtered, write_batch, "append")
     back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"), F.count_distinct("event_id").alias("n_distinct")
@@ -598,14 +614,7 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     miniature — Delta/Iceberg make the swap atomic); at scale both
     sides of the merge join are bucketed by the upsert key.
     """
-    import shutil
-    import tempfile
-
-    key = (sf_dir, "upsert_latest")
-    if key in _FEBATCH_DIRS:
-        shutil.rmtree(_FEBATCH_DIRS[key], ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="upsert_latest_")
-    _FEBATCH_DIRS[key] = root
+    root = _run_dir(sf_dir, "upsert_latest")
     state: dict[str, str | None] = {"path": None}
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ANN001
@@ -648,17 +657,7 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.parquet(new_path)
         state["path"] = new_path
 
-    stream = _staged_stream(spark, sf_dir)
-    q = (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(_staged_stream(spark, sf_dir), merge_batch, "update")
     final = spark.read.parquet(state["path"])
     return final.select(
         "user_id",
@@ -1824,29 +1823,21 @@ def _sscr_ensure_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted screen index: built once per corpus, bucketed+sorted by
     the probe key so every later increment probes with zero index-side
     shuffle (the dedup_minhash_bucketed_probe storage pattern)."""
-    import hashlib as _hl
-    import shutil as _sh
-    from urllib.parse import urlparse as _urlparse
-
     base = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .filter(F.col("doc_id") % SSCR_BASE_MOD == 0)
     )
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    tbl = f"b_sscr_index_{tag}"
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
+    tbl = f"b_sscr_index_{path_tag(sf_dir)}"
     if not spark.catalog.tableExists(tbl):
-        if warehouse:
-            _sh.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-        (
-            _sscr_anchored_wins(base, "base_doc")
-            .repartition(SSCR_BUCKETS, F.col("win_hash"))
-            .write.bucketBy(SSCR_BUCKETS, "win_hash")
-            .sortBy("win_hash")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tbl)
+        save_bucketed(
+            spark,
+            _sscr_anchored_wins(base, "base_doc").repartition(
+                SSCR_BUCKETS, F.col("win_hash")
+            ),
+            tbl,
+            "win_hash",
+            SSCR_BUCKETS,
         )
     return spark.table(tbl)
 
@@ -2063,20 +2054,12 @@ def stream_substring_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (streaming + LLM-pipeline surface per the
     brief).
     """
-    import shutil as _sh
-    import tempfile
-
     from mapreduce_c_implementation_spark.streaming.staging import stage_documents
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.filter(F.col("doc_id") % SSCR_BASE_MOD == 0)
     idx = _sscr_ensure_index(spark, sf_dir)
-
-    key = (sf_dir, "sscr")
-    if key in _FEBATCH_DIRS:
-        _sh.rmtree(_FEBATCH_DIRS[key], ignore_errors=True)
-    out_dir = tempfile.mkdtemp(prefix="sscr_sink_")
-    _FEBATCH_DIRS[key] = out_dir
+    out_dir = _run_dir(sf_dir, "sscr_sink")
 
     def screen_batch(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ANN001
         arr = batch_df.select("doc_id", "text")
@@ -2105,16 +2088,7 @@ def stream_substring_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % SSCR_BASE_MOD == 1)
         .dropDuplicates(["doc_id"])
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(screen_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(stream, screen_batch, "append")
     return spark.read.parquet(out_dir)
 
 
@@ -2367,11 +2341,6 @@ def stream_substring_screen_cumulative(spark: SparkSession, sf_dir: str) -> Data
     Reference analog: none (streaming + LLM-pipeline surface per the
     brief).
     """
-    import hashlib as _hl
-    import shutil as _sh
-    import tempfile
-    from urllib.parse import urlparse as _urlparse
-
     from mapreduce_c_implementation_spark.streaming.staging import stage_documents
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2384,31 +2353,16 @@ def stream_substring_screen_cumulative(spark: SparkSession, sf_dir: str) -> Data
     # with the same bucket spec.  Only the overlay resets per invocation
     # (the op replays the staged ingest from batch 0).
     base_idx = _sscr_ensure_index(spark, sf_dir)
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    ovl = f"b_sscrc_ovl_{tag}"
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    spark.sql(f"DROP TABLE IF EXISTS {ovl}")
-    if warehouse:
-        _sh.rmtree(f"{warehouse}/{ovl}", ignore_errors=True)
-    (
-        local_frame(spark, [], "base_doc long, win_hash string")
-        .write.bucketBy(SSCR_BUCKETS, "win_hash")
-        .sortBy("win_hash")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(ovl)
+    ovl = f"b_sscrc_ovl_{path_tag(sf_dir)}"
+    save_bucketed(
+        spark,
+        local_frame(spark, [], "base_doc long, win_hash string"),
+        ovl,
+        "win_hash",
+        SSCR_BUCKETS,
     )
-
-    key = (sf_dir, "sscrc")
-    if key in _FEBATCH_DIRS:
-        _sh.rmtree(_FEBATCH_DIRS[key], ignore_errors=True)
-    out_dir = tempfile.mkdtemp(prefix="sscrc_sink_")
-    _FEBATCH_DIRS[key] = out_dir
-    tkey = (sf_dir, "sscrc_texts")
-    if tkey in _FEBATCH_DIRS:
-        _sh.rmtree(_FEBATCH_DIRS[tkey], ignore_errors=True)
-    texts_dir = tempfile.mkdtemp(prefix="sscrc_texts_")
-    _FEBATCH_DIRS[tkey] = texts_dir
+    out_dir = _run_dir(sf_dir, "sscrc_sink")
+    texts_dir = _run_dir(sf_dir, "sscrc_texts")
     local_frame(spark, [], "doc_id long, text string").write.mode(
         "overwrite"
     ).parquet(texts_dir)
@@ -2454,16 +2408,16 @@ def stream_substring_screen_cumulative(spark: SparkSession, sf_dir: str) -> Data
             acc_texts = arr.join(accepted_ids, "doc_id", "semi").cache()
             cached.append(acc_texts)
             acc_texts.write.mode("append").parquet(texts_dir)
-            (
-                _sscr_anchored_wins(acc_texts, "base_doc")
-                .repartition(SSCR_BUCKETS, F.col("win_hash"))
-                .write.bucketBy(SSCR_BUCKETS, "win_hash")
-                .sortBy("win_hash")
-                .mode("append")
-                .format("parquet")
-                .saveAsTable(ovl)
+            save_bucketed(
+                spark,
+                _sscr_anchored_wins(acc_texts, "base_doc").repartition(
+                    SSCR_BUCKETS, F.col("win_hash")
+                ),
+                ovl,
+                "win_hash",
+                SSCR_BUCKETS,
+                mode="append",
             )
-            spark.catalog.refreshTable(ovl)
         finally:
             for c in cached:
                 c.unpersist()
@@ -2477,16 +2431,7 @@ def stream_substring_screen_cumulative(spark: SparkSession, sf_dir: str) -> Data
         .filter(F.col("doc_id") % SSCR_BASE_MOD == 1)
         .dropDuplicates(["doc_id"])
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(screen_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(stream, screen_batch, "append")
     return spark.read.parquet(out_dir)
 
 
@@ -2549,13 +2494,12 @@ def _sscrr_compact(spark: SparkSession, sources: list[str], dest: str) -> None:
         merged = merged.unionByName(
             spark.read.schema(ovl_schema).parquet(p)
         )
-    (
-        merged.repartition(SSCR_BUCKETS, F.col("win_hash"))
-        .write.bucketBy(SSCR_BUCKETS, "win_hash")
-        .sortBy("win_hash")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(dest)
+    save_bucketed(
+        spark,
+        merged.repartition(SSCR_BUCKETS, F.col("win_hash")),
+        dest,
+        "win_hash",
+        SSCR_BUCKETS,
     )
 
 
@@ -2582,14 +2526,19 @@ def _sscrr_run(spark: SparkSession, sf_dir: str, state_root: str,
                    1 base + 1 gen + <SSCRR_COMPACT_EVERY live tiers
       STATE.json   atomic manifest: screened_through / gen_table /
                    live_epochs - the commit point of each epoch
+
+    Resuming in a NEW process needs one more step that is not
+    implemented here: the catalog is in-memory, so the tier tables
+    STATE.json names (``gen_table``, the ``live_epochs`` overlays) must
+    first be re-registered over their warehouse directories.  Without
+    that, the first probe of a live tier fails on a missing table.
     """
-    import hashlib as _hl
     import os as _os
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.filter(F.col("doc_id") % SSCR_BASE_MOD == 0)
     base_idx = _sscr_ensure_index(spark, sf_dir)
-    tag = _hl.md5(state_root.encode()).hexdigest()[:8]
+    tag = path_tag(state_root)
     out_root = _os.path.join(state_root, "out")
     texts_root = _os.path.join(state_root, "texts")
     ckpt = _os.path.join(state_root, "ckpt")
@@ -2654,14 +2603,14 @@ def _sscrr_run(spark: SparkSession, sf_dir: str, state_root: str,
                 _os.path.join(texts_root, f"e{e:05d}")
             )
             # The epoch's overlay tier: accepted windows, bucketed.
-            (
-                _sscr_anchored_wins(acc_texts, "base_doc")
-                .repartition(SSCR_BUCKETS, F.col("win_hash"))
-                .write.bucketBy(SSCR_BUCKETS, "win_hash")
-                .sortBy("win_hash")
-                .mode("overwrite")
-                .format("parquet")
-                .saveAsTable(f"b_sscrr_{tag}_ovl_e{e:05d}")
+            save_bucketed(
+                spark,
+                _sscr_anchored_wins(acc_texts, "base_doc").repartition(
+                    SSCR_BUCKETS, F.col("win_hash")
+                ),
+                f"b_sscrr_{tag}_ovl_e{e:05d}",
+                "win_hash",
+                SSCR_BUCKETS,
             )
             live = st["live_epochs"] + [e]
             if len(live) >= SSCRR_COMPACT_EVERY:
@@ -2703,17 +2652,7 @@ def _sscrr_run(spark: SparkSession, sf_dir: str, state_root: str,
         .filter(F.col("doc_id") % SSCR_BASE_MOD == 1)
         .dropDuplicates(["doc_id"])
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(screen_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(stream, screen_batch, "append", checkpoint=ckpt)
     return (
         spark.read.option("recursiveFileLookup", "true")
         .parquet(out_root)
@@ -2777,10 +2716,6 @@ def stream_substring_screen_resumable(
     is O(1): read two manifests, open the checkpoint.  Reference
     analog: none (streaming + LLM-pipeline surface per the brief).
     """
-    import hashlib as _hl
-    import shutil as _sh
-    import tempfile
-
     from mapreduce_c_implementation_spark.streaming.staging import (
         stage_documents,
     )
@@ -2789,15 +2724,10 @@ def stream_substring_screen_resumable(
     # state root AND its catalog tables (tag-scoped) first.
     if sf_dir in _SSCRR_PREV:
         prev_root, prev_tag = _SSCRR_PREV[sf_dir]
-        for t in spark.catalog.listTables():
-            if t.name.startswith(f"b_sscrr_{prev_tag}_"):
-                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-        _sh.rmtree(prev_root, ignore_errors=True)
+        drop_tables(spark, f"b_sscrr_{prev_tag}_")
+        shutil.rmtree(prev_root, ignore_errors=True)
     state_root = tempfile.mkdtemp(prefix="sscrr_state_")
-    _SSCRR_PREV[sf_dir] = (
-        state_root,
-        _hl.md5(state_root.encode()).hexdigest()[:8],
-    )
+    _SSCRR_PREV[sf_dir] = (state_root, path_tag(state_root))
     return _sscrr_run(spark, sf_dir, state_root, stage_documents(sf_dir))
 
 
@@ -2861,10 +2791,6 @@ def stream_substring_screen_rtbf(
     the new one commits.  Reference analog: none (streaming + privacy
     surface per the brief).
     """
-    import hashlib as _hl
-    import shutil as _sh
-    import tempfile
-
     from mapreduce_c_implementation_spark.operators.dedup import (
         RTBF_DELETE_MOD,
         RTBF_DELETE_REM,
@@ -2877,49 +2803,34 @@ def stream_substring_screen_rtbf(
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.filter(F.col("doc_id") % SSCR_BASE_MOD == 0)
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = path_tag(sf_dir)
 
     # Per-invocation state (the cumulative-op pattern): drop previous
     # invocation's generation tables — catalog AND any orphaned
-    # location dirs a killed run left behind (LOCATION_ALREADY_EXISTS
-    # guard), fresh dirs for sink/texts/ledger.
-    from urllib.parse import urlparse as _urlparse
-
-    for t in spark.catalog.listTables():
-        if t.name.startswith(f"b_sscrv_{tag}_"):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-    warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    if warehouse:
-        import glob as _glob
-
-        for d in _glob.glob(f"{warehouse}/b_sscrv_{tag}_*"):
-            _sh.rmtree(d, ignore_errors=True)
-    run_dirs = {}
-    for part in ("sscrv_sink", "sscrv_texts", "sscrv_dels"):
-        key = (sf_dir, part)
-        if key in _FEBATCH_DIRS:
-            _sh.rmtree(_FEBATCH_DIRS[key], ignore_errors=True)
-        run_dirs[part] = tempfile.mkdtemp(prefix=f"{part}_")
-        _FEBATCH_DIRS[key] = run_dirs[part]
-    out_dir = run_dirs["sscrv_sink"]
-    texts_root = run_dirs["sscrv_texts"]
-    del_dir = run_dirs["sscrv_dels"]
+    # location dirs a killed run left behind — and take fresh dirs for
+    # sink/texts/ledger.
+    drop_tables(spark, f"b_sscrv_{tag}_")
+    out_dir = _run_dir(sf_dir, "sscrv_sink")
+    texts_root = _run_dir(sf_dir, "sscrv_texts")
+    del_dir = _run_dir(sf_dir, "sscrv_dels")
 
     # Generation 0: op-scoped rewritable base tier + empty overlay.
     st = {"gen": 0, "texts": f"{texts_root}/v0"}
-    (
-        _sscr_anchored_wins(base, "base_doc")
-        .repartition(SSCR_BUCKETS, F.col("win_hash"))
-        .write.bucketBy(SSCR_BUCKETS, "win_hash")
-        .sortBy("win_hash")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(f"b_sscrv_{tag}_base_v0")
+    save_bucketed(
+        spark,
+        _sscr_anchored_wins(base, "base_doc").repartition(
+            SSCR_BUCKETS, F.col("win_hash")
+        ),
+        f"b_sscrv_{tag}_base_v0",
+        "win_hash",
+        SSCR_BUCKETS,
     )
-    local_frame(spark, [], "base_doc long, win_hash string").write.bucketBy(
-        SSCR_BUCKETS, "win_hash"
-    ).sortBy("win_hash").mode("overwrite").format("parquet").saveAsTable(
-        f"b_sscrv_{tag}_ovl_v0"
+    save_bucketed(
+        spark,
+        local_frame(spark, [], "base_doc long, win_hash string"),
+        f"b_sscrv_{tag}_ovl_v0",
+        "win_hash",
+        SSCR_BUCKETS,
     )
     local_frame(spark, [], "doc_id long, text string").write.mode(
         "overwrite"
@@ -2943,9 +2854,6 @@ def stream_substring_screen_rtbf(
         for tier in ("base", "ovl"):
             old_tbl = f"b_sscrv_{tag}_{tier}_v{g_old}"
             new_tbl = f"b_sscrv_{tag}_{tier}_v{g_new}"
-            spark.sql(f"DROP TABLE IF EXISTS {new_tbl}")
-            if warehouse:
-                _sh.rmtree(f"{warehouse}/{new_tbl}", ignore_errors=True)
             rewrite = spark.table(old_tbl).join(
                 F.broadcast(dels.withColumnRenamed("doc_id", "base_doc")),
                 "base_doc",
@@ -2954,13 +2862,8 @@ def stream_substring_screen_rtbf(
             stream_substring_screen_rtbf.last_rewrite_plans.append(
                 physical_plan(rewrite)
             )
-            (
-                rewrite.write.bucketBy(SSCR_BUCKETS, "win_hash")
-                .sortBy("win_hash")
-                .mode("overwrite")
-                .format("parquet")
-                .saveAsTable(new_tbl)
-            )
+            # no repartition: bucket ids are computed in-task
+            save_bucketed(spark, rewrite, new_tbl, "win_hash", SSCR_BUCKETS)
             audit[f"{tier}_rows_removed"] = (
                 spark.table(old_tbl).count() - spark.table(new_tbl).count()
             )
@@ -2980,7 +2883,7 @@ def stream_substring_screen_rtbf(
         st["gen"], st["texts"] = g_new, new_texts
         for tier in ("base", "ovl"):
             spark.sql(f"DROP TABLE IF EXISTS b_sscrv_{tag}_{tier}_v{g_old}")
-        _sh.rmtree(old_texts, ignore_errors=True)
+        shutil.rmtree(old_texts, ignore_errors=True)
         stream_substring_screen_rtbf.last_delete_audit.append(audit)
 
     def screen_batch(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ANN001
@@ -3024,16 +2927,16 @@ def stream_substring_screen_rtbf(
             acc_texts = arr.join(accepted_ids, "doc_id", "semi").cache()
             cached.append(acc_texts)
             acc_texts.write.mode("append").parquet(st["texts"])
-            (
-                _sscr_anchored_wins(acc_texts, "base_doc")
-                .repartition(SSCR_BUCKETS, F.col("win_hash"))
-                .write.bucketBy(SSCR_BUCKETS, "win_hash")
-                .sortBy("win_hash")
-                .mode("append")
-                .format("parquet")
-                .saveAsTable(cur("ovl"))
+            save_bucketed(
+                spark,
+                _sscr_anchored_wins(acc_texts, "base_doc").repartition(
+                    SSCR_BUCKETS, F.col("win_hash")
+                ),
+                cur("ovl"),
+                "win_hash",
+                SSCR_BUCKETS,
+                mode="append",
             )
-            spark.catalog.refreshTable(cur("ovl"))
         finally:
             for c in cached:
                 c.unpersist()
@@ -3050,14 +2953,5 @@ def stream_substring_screen_rtbf(
         )
         .dropDuplicates(["doc_id", "source"])
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(screen_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_foreach_batch(stream, screen_batch, "append")
     return spark.read.parquet(out_dir)

@@ -20,6 +20,8 @@ def test_inverted_index_job_end_to_end(spark, sf_correct):
         output_dir=outdir,
         num_partitions=8,
         metrics_path=f"{outdir}/metrics_report.txt",
+        readers=2,
+        mappers=3,
     )
     res = run_inverted_index_job(spark, job)
 
@@ -41,6 +43,8 @@ def test_inverted_index_job_end_to_end(spark, sf_correct):
     # metrics report exists with the stable section order
     report = Path(job.metrics_path).read_text()
     assert report.index("=== JOB CONFIG ===") < report.index("=== TIMING ===")
+    # the reference's thread-pool knobs are echoed, not planned on
+    assert "readers: 2\n" in report and "mappers: 3\n" in report
     assert res.metrics.counters["n_output_files"] == 8
     assert res.metrics.wall_s > 0
 

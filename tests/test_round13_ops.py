@@ -141,12 +141,12 @@ def test_observed_manifest_matches_readback_and_vacuum_sees_lost_file(
     from mapreduce_c_implementation_spark.operators.dedup import (
         RTBF_BUCKETS,
         _rtbf_checksum_agg,
-        _save_bucketed,
         _save_observed_snapshot,
         read_snapshot_manifest,
         vacuum_superseded,
     )
     from mapreduce_c_implementation_spark.sources.tables import (
+        save_bucketed,
         table_location,
     )
 
@@ -157,7 +157,9 @@ def test_observed_manifest_matches_readback_and_vacuum_sees_lost_file(
             F.col("id").alias("doc_id"),
             F.md5(F.col("id").cast("string")).alias("k"),
         )
-        _save_bucketed(spark, df.repartition(RTBF_BUCKETS, "k"), old_t, "k")
+        save_bucketed(
+            spark, df.repartition(RTBF_BUCKETS, "k"), old_t, "k", RTBF_BUCKETS
+        )
         _save_observed_snapshot(
             spark,
             spark.table(old_t).filter(F.col("doc_id") % 10 != 3),
