@@ -14,10 +14,12 @@ Thread-count knobs map to configuration, not code:
 ``run_inverted_index_job`` is the flagship end-to-end: raw TEXT FILES in
 (the reference's actual input format, src/reader_queue.c:180-337),
 tokenized with ``_metadata.file_name`` lineage (== MR_CurrentFile,
-src/mapreduce.c:56-58), shuffled once on the word, reduced to sorted
-distinct posting lists, and written as ``part-%05d`` text shards exactly
-like the reference sink (src/main.c:92-98) — one file per reducer
-partition, its words in byte order.
+src/mapreduce.c:56-58), shuffled once on the word, reduced to each
+word's distinct files (a 64-bit file bitmap when the input has at most
+64 file names, a sorted string set above that), and written as
+``part-%05d`` text shards exactly like the reference sink
+(src/main.c:92-98) — one file per reducer partition, its words in byte
+order, each word's files in byte order.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ import time
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Callable
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,14 +77,43 @@ class JobResult:
     output_files: list[str] = field(default_factory=list)
 
 
+# The width of one bigint: a posting-list bitmap has one bit per file,
+# so the bitmap plan serves inputs of at most this many file names.
+POSTINGS_BITS = 64
+
+
+def _file_names(uris: list[str]) -> list[str]:
+    """The distinct decoded names of the listed file ``uris``.
+    ``_metadata.file_name`` is the last segment of a file's URI, and
+    ``unquote`` decodes it as ``tokenize_pairs_arrow`` does, so each
+    name is spelled as the pairs spell it.  Sorted by code point, which
+    is UTF-8 byte order."""
+    return sorted({unquote(uri.rsplit("/", 1)[-1]) for uri in uris})
+
+
 def inverted_index_plan(
     spark: SparkSession, input_paths: list[str], num_partitions: int
-) -> DataFrame:
+) -> tuple[DataFrame, dict]:
     """The flagship's plan, the reference's shape (src/mapreduce.h:105,
     src/sorting.c): scan -> Arrow map + combine -> ONE hash exchange on
-    the word into ``num_partitions`` reducers -> per-reducer
-    ``collect_set`` -> per-partition word sort -> one ``word -> [files]``
-    row per word."""
+    the word into ``num_partitions`` reducers -> per-reducer distinct
+    files -> per-partition word sort -> one ``word -> [files]`` row per
+    word, its files in byte order.  Returns the plan and the choices the
+    run report records: ``n_input_files`` (the scan's listing) and
+    ``postings``, the reducer that runs.
+
+    ``postings="bitmap"`` when the input has at most ``POSTINGS_BITS``
+    distinct file names.  File ``i`` of the names in byte order owns bit
+    ``i`` of a bigint.  A projection right after the Arrow map turns each
+    pair's name into its bit, the exchange carries ``(word, bigint)``,
+    and the reducer is ``bit_or``: a fixed-width, code-generated
+    HashAggregate that never sorts.  The output projection tests the
+    bits in name order, so each line lists its files in byte order.  A
+    pair whose name the plan-time dictionary lacks fails the job with
+    the file's name: no posting is dropped silently.
+
+    ``postings="set"`` above that: ``sort_array(collect_set(fname))``,
+    an ObjectHashAggregate over the name strings."""
     lines = spark.read.text(input_paths).select(
         F.col("value").alias("line"),
         # MR_CurrentFile lineage: which input file produced this record.
@@ -96,36 +128,66 @@ def inverted_index_plan(
     pairs = lines.mapInArrow(
         tokenize_pairs_arrow, schema="word string, fname string"
     )
-    return (
+    # The scan's own driver-side listing: no job.
+    uris = lines.inputFiles()
+    names = _file_names(uris)
+    bitmap = len(names) <= POSTINGS_BITS
+    choice = {"n_input_files": len(uris), "postings": "bitmap" if bitmap else "set"}
+    if bitmap:
+        # File i of ``names`` owns bit i; shiftleft(1L, 63) is the sign
+        # bit.  Each name enters the SQL text as its UTF-8 bytes in a
+        # binary literal cast to string, which no quote, backslash or
+        # parser setting can alter; the optimizer folds it to a
+        # constant.  Two parsed expressions cost two py4j calls, where
+        # Column builders cost a round trip per node (about 0.25 s of
+        # driver time per job at 64 files).
+        lits = [f"CAST(X'{n.encode().hex()}' AS STRING)" for n in names]
+        bits = [f"shiftleft(1L, {i})" for i in range(len(names))]
+        miss = (
+            "CAST(raise_error(concat('inverted_index_plan: no file bit for ', "
+            "coalesce(fname, 'NULL'))) AS BIGINT)"
+        )
+        whens = "".join(f" WHEN {n} THEN {b}" for n, b in zip(lits, bits))
+        bit = F.expr(f"CASE fname{whens} ELSE {miss} END" if names else miss)
+        pairs = pairs.select("word", bit.alias("bit"))
+        agg = F.bit_or("bit")
+        ifs = "".join(f", IF(files & {b} <> 0, {n}, NULL)" for n, b in zip(lits, bits))
+        render = F.expr(f"concat_ws(', '{ifs})")
+    else:
+        agg = F.sort_array(F.collect_set("fname"))
+        render = F.array_join("files", ", ")
+
+    postings = (
         # The one exchange: the reference's word-hash partitioner
-        # (src/partition.c).  groupBy reuses this distribution, so no
-        # map-side partial collect_set and no second shuffle.
+        # (src/partition.c).  groupBy reuses this distribution, so the
+        # partial aggregate runs reducer-side and there is no second
+        # shuffle.
         pairs.repartition(num_partitions, F.col("word"))
         .groupBy("word")
-        .agg(F.sort_array(F.collect_set("fname")).alias("files"))
+        .agg(agg.alias("files"))
         # Each part file lists its words in byte (strcmp) order, the
         # reference's sorted-key contract; the formatting projection
         # below is narrow, so the order reaches the sink.
         .sortWithinPartitions("word")
         .select(
-            F.concat(
-                F.col("word"), F.lit(" -> ["), F.array_join("files", ", "), F.lit("]")
-            ).alias("value")
+            F.concat(F.col("word"), F.lit(" -> ["), render, F.lit("]")).alias("value")
         )
     )
+    return postings, choice
 
 
 def _run_app(
     spark: SparkSession,
     job: MapReduceJob,
     app: str,
-    write: Callable[[Path], dict],
+    write: Callable[[Path, dict], dict],
 ) -> JobResult:
     """The steps every job-API app shares, the reference's MR_Run
     (src/job.c:157-293): validate, clear the output dir, time
-    ``write(out)`` (which builds the app's plan, writes it under
-    ``out`` and returns the app's own counters), then report.  The
-    part files under ``out`` give the shard count and skew table."""
+    ``write(out, config)`` (which builds the app's plan, adds its
+    plan-time choices to the report's ``config``, writes the plan under
+    ``out`` and returns the app's own counters), then report.  The part
+    files under ``out`` give the shard count and skew table."""
     job.validate()
     out = Path(job.output_dir)
     if job.clear_output and out.exists():
@@ -141,7 +203,7 @@ def _run_app(
     })
     stage_floor = max_stage_id(spark)
     t0 = time.perf_counter()
-    counters = write(out)
+    counters = write(out, metrics.config)
     metrics.wall_s = round(time.perf_counter() - t0, 3)
 
     files = sorted(str(p) for p in out.rglob("part-*"))
@@ -162,10 +224,15 @@ def _run_app(
 
 def run_inverted_index_job(spark: SparkSession, job: MapReduceJob) -> JobResult:
     """The flagship pipeline end-to-end over raw text files:
-    ``inverted_index_plan`` written as part-%05d text shards."""
+    ``inverted_index_plan`` written as part-%05d text shards.  The
+    report's config names the input file count and the postings
+    reducer that ran (``bitmap`` or ``set``)."""
 
-    def write(out: Path) -> dict:
-        postings = inverted_index_plan(spark, job.input_paths, job.num_partitions)
+    def write(out: Path, config: dict) -> dict:
+        postings, choice = inverted_index_plan(
+            spark, job.input_paths, job.num_partitions
+        )
+        config.update(choice)
         # One text shard per reducer partition — part-%05d like src/main.c:92-98.
         postings.write.text(str(out))
         return {}
@@ -265,7 +332,7 @@ def run_corpus_pipeline_job(spark: SparkSession, job: MapReduceJob) -> JobResult
         SPLIT_VALID_PCT,
     )
 
-    def write(out: Path) -> dict:
+    def write(out: Path, config: dict) -> dict:
         obs_in = Observation("corpus_in")
         obs_out = Observation("corpus_out")
 

@@ -238,10 +238,16 @@ def save_bucketed(
 
 def drop_tables(spark: SparkSession, prefix: str) -> None:
     """Drop every catalog table named ``prefix*`` and remove the
-    orphaned warehouse directories of such names."""
-    for t in spark.catalog.listTables():
-        if t.name.startswith(prefix):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+    orphaned warehouse directories of such names.  Tables are listed
+    through the JVM session catalog, which reads catalog metadata only:
+    PySpark's ``catalog.listTables`` runs Spark jobs to build its rows.
+    The catalog's pattern is a case-insensitive regex with ``*`` as the
+    wildcard, so the exact prefix test stays."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    found = catalog.listTables(catalog.getCurrentDatabase(), f"{prefix}*")
+    for name in [found.apply(i).table() for i in range(found.size())]:
+        if name.startswith(prefix):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
     warehouse = _warehouse_dir(spark)
     if warehouse:
         for d in glob.glob(f"{warehouse}/{prefix}*"):

@@ -10,15 +10,19 @@ passes):
 
 Every subcommand feeds one loop, ``compare``.  A *form* is one variant
 under test: the checkout, another revision (``--old-root``: the root of
-e.g. a ``git worktree``), a runtime-conf overlay, a fixture or a core
-count.  The loop keeps the best of ``--reps`` passes, times the
-no-change ``CONTROL`` query before every measurement, and reverses the
-form order on every other rep, so warm-up order favours no form.  Each
-form after the first reports ``ratio`` (its best wall over the first
-form's) and ``normalized`` (that ratio over the control's ratio), which
-reads ~1 when only the host changed.  The fixture is $SPARK_GRAFT_SF_DIR,
-as in bench.py.  The JSON report is printed last on stdout; ``scale``
-also writes its table as one section of docs/SCALING.md.
+e.g. a ``git archive`` export), a runtime-conf overlay, a fixture or a
+core count.  The design is paired: each rep runs every form once, the
+no-change ``CONTROL`` query timed before every measurement, and the form
+order reverses on every other rep.  ``--reps`` must be even, so each
+form runs first equally often.  Each form after the first reports, per
+rep, its wall over the first form's wall in the same rep, and that ratio
+over the same rep's control ratio; ``ratio`` and ``normalized`` are the
+medians of those per-rep ratios (in log space, so a ratio and its
+inverse weigh alike), and ``normalized_range`` their spread.
+``normalized`` reads ~1 when only the host changed.  The fixture is
+$SPARK_GRAFT_SF_DIR, as in bench.py.  The JSON report is printed last
+on stdout; ``scale`` also writes its table as one section of
+docs/SCALING.md.
 """
 
 from __future__ import annotations
@@ -26,7 +30,9 @@ from __future__ import annotations
 import argparse
 import importlib
 import json
+import math
 import shutil
+import statistics
 import sys
 import tempfile
 from contextlib import contextmanager, nullcontext
@@ -254,13 +260,24 @@ def _time_op(spark, ops, sf_dir: str, name: str) -> float:
     return bench.timed_run(spark, ops[name].query_fn, sf_dir)
 
 
+def _median_ratio(ratios: list[float]) -> float:
+    """The median of ``ratios`` taken in log space: with an even count
+    it is the geometric mean of the middle two, so the ratios ``k`` and
+    ``1/k`` of two reps with swapped order read 1."""
+    return math.exp(statistics.median(math.log(r) for r in ratios))
+
+
 def compare(forms: dict, names: list[str], reps: int, control_dir: str, run=_time_op):
     """Time every name under every form; return the JSON-ready report.
 
     ``forms`` maps a tag to a zero-argument callable returning a context
     manager that yields ``(spark, ops, sf_dir)``; it is entered once per
     rep.  ``run(spark, ops, sf_dir, name)`` returns seconds.  CONTROL
-    runs at ``control_dir`` before every measurement."""
+    runs at ``control_dir`` before every measurement.  ``reps`` must be
+    even: the form order reverses on every other rep, so only an even
+    count puts each form first equally often (ValueError otherwise)."""
+    if reps < 2 or reps % 2:
+        raise ValueError(f"reps must be even and at least 2, got {reps}")
     order = list(forms)
     walls = {t: {n: [] for n in names} for t in order}
     controls = {t: [] for t in order}
@@ -273,23 +290,35 @@ def compare(forms: dict, names: list[str], reps: int, control_dir: str, run=_tim
                     walls[tag][n].append(round(run(spark, ops, sf_dir, n), 3))
                 spark.sparkContext._jvm.System.gc()
     base, alts = order[0], order[1:]
-    ctl_ratio = {t: min(controls[t]) / min(controls[base]) for t in alts}
+
+    def paired(series: dict, t: str) -> list[float]:
+        return [x / y for x, y in zip(series[t], series[base])]
+
+    # controls[t][i] ran just before the i-th measurement of form t:
+    # rep i // len(names), name i % len(names).
+    ctl = {t: paired(controls, t) for t in alts}
     queries = {}
-    for n in names:
-        best = {t: min(walls[t][n]) for t in order}
-        ratio = {t: best[t] / best[base] for t in alts}
+    for i, n in enumerate(names):
+        runs = {t: walls[t][n] for t in order}
+        ratio = {t: paired(runs, t) for t in alts}
+        norm = {
+            t: [r / c for r, c in zip(ratio[t], ctl[t][i :: len(names)])] for t in alts
+        }
         queries[n] = {
-            "runs": {t: walls[t][n] for t in order},
-            "best": best,
-            "ratio": {t: round(r, 3) for t, r in ratio.items()},
-            "normalized": {t: round(r / ctl_ratio[t], 3) for t, r in ratio.items()},
+            "runs": runs,
+            "best": {t: min(runs[t]) for t in order},
+            "ratio": {t: round(_median_ratio(r), 3) for t, r in ratio.items()},
+            "normalized": {t: round(_median_ratio(r), 3) for t, r in norm.items()},
+            "normalized_range": {
+                t: [round(min(r), 3), round(max(r), 3)] for t, r in norm.items()
+            },
         }
     return {
         "control": CONTROL,
         "reps": reps,
         "forms": order,
         "controls": controls,
-        "control_ratio": {t: round(r, 3) for t, r in ctl_ratio.items()},
+        "control_ratio": {t: round(_median_ratio(r), 3) for t, r in ctl.items()},
         "queries": queries,
     }
 
@@ -482,8 +511,8 @@ def cmd_scale(args, spark, sf_dir: str) -> dict:
     ctl = ", ".join(f"{t} {r}x" for t, r in report["control_ratio"].items())
     note = (
         f"Generated by `python scripts/measure.py {' '.join(sys.argv[1:])}` from "
-        f"`{Path(sf_dir).name}` on {where}: best of {args.reps}; control "
-        f"`{CONTROL}` ratio {ctl}."
+        f"`{Path(sf_dir).name}` on {where}: walls best of {args.reps}, ratios "
+        f"the median of {args.reps} paired reps; control `{CONTROL}` ratio {ctl}."
     )
     write_section(heading, note, report)
     return report
@@ -526,6 +555,7 @@ def cmd_flagship(args, spark, sf_dir: str) -> dict:
             "corpus_mb": round(nbytes / 1e6, 1),
             "ratio": q["ratio"],
             "normalized": q["normalized"],
+            "normalized_range": q["normalized_range"],
             "control_ratio": r["control_ratio"],
         }
         for t, log in logs.items():
@@ -554,7 +584,8 @@ def _ints(text: str) -> list[int]:
 def main() -> None:
     common = argparse.ArgumentParser(add_help=False)
     common.add_argument(
-        "--reps", type=int, default=2, choices=range(1, 100), metavar="N"
+        "--reps", type=int, default=2, choices=range(2, 100, 2), metavar="N",
+        help="even: each form runs first in half of the reps",
     )
     ap = argparse.ArgumentParser(description="Same-session measurement.")
     sub = ap.add_subparsers(required=True)

@@ -212,3 +212,114 @@ def test_corpus_pipeline_job_end_to_end(spark, tmp_path):
 
     report = (tmp_path / "corpus_metrics.txt").read_text()
     assert "=== JOB CONFIG ===" in report and "corpus_pipeline" in report
+
+
+# --- postings: file bitmaps up to 64 files, string sets above ---------
+
+
+def _corpus(root: Path, n_files: int) -> dict[str, str]:
+    """``n_files`` small text files (at most one of them empty) whose
+    names include ones Spark percent-encodes, a non-ASCII one and one
+    with a quote and a backslash (SQL literal syntax).  Each
+    word lands in a seeded subset of the files, and ``shared`` in every
+    non-empty one, so the last file by name (bit 63 at 64 files) holds
+    postings."""
+    import random
+
+    rng = random.Random(n_files)
+    special = [
+        "my doc#1.txt", "a+b.txt", "zz naïve é.txt", "it's \\ok.txt", "empty.txt"
+    ]
+    names = special[: min(n_files, len(special))]
+    names += [f"f{i:02d}.txt" for i in range(n_files - len(names))]
+    vocab = [f"w{i}" for i in range(40)]
+    files = {}
+    for name in names:
+        if name == "empty.txt":
+            files[name] = ""
+        else:
+            words = rng.sample(vocab, 6) + ["Shared"]
+            files[name] = " ".join(words[:4]) + "\n" + " ".join(words[4:]) + "\n"
+    root.mkdir(parents=True, exist_ok=True)
+    for name, text in files.items():
+        (root / name).write_text(text)
+    return files
+
+
+def _postings_run(spark, corpus: Path, out: Path):
+    res = run_inverted_index_job(
+        spark,
+        MapReduceJob(input_paths=[str(corpus)], output_dir=str(out), num_partitions=3),
+    )
+    # Part names carry a per-write uuid; the reducer index is the key.
+    parts = {Path(f).name[:10]: Path(f).read_text() for f in res.output_files}
+    return res.metrics.config, parts
+
+
+@pytest.mark.parametrize("n_files", [1, 7, 64, 65])
+def test_bitmap_postings_match_set_postings(spark, tmp_path, monkeypatch, n_files):
+    """The bitmap reducer writes the same part files as the set reducer.
+    At 64 files the last name owns bit 63, the sign bit; at 65 the set
+    reducer is selected."""
+    from mapreduce_c_implementation_spark import job as job_mod
+
+    files = _corpus(tmp_path / "corpus", n_files)
+    config, parts = _postings_run(spark, tmp_path / "corpus", tmp_path / "default")
+    monkeypatch.setattr(job_mod, "POSTINGS_BITS", -1)  # the set plan everywhere
+    set_config, set_parts = _postings_run(spark, tmp_path / "corpus", tmp_path / "set")
+    assert config["postings"] == ("set" if n_files > 64 else "bitmap")
+    assert set_config["postings"] == "set"
+    assert parts == set_parts
+    lines = [ln for text in parts.values() for ln in text.splitlines()]
+    full = sorted(n for n, text in files.items() if text)
+    assert f"shared -> [{', '.join(full)}]" in lines
+    if n_files == 64:
+        assert max(files) == full[-1] == "zz naïve é.txt"
+
+
+def test_postings_over_an_empty_input_dir(spark, tmp_path, monkeypatch):
+    from mapreduce_c_implementation_spark import job as job_mod
+
+    (tmp_path / "corpus").mkdir()
+    config, parts = _postings_run(spark, tmp_path / "corpus", tmp_path / "default")
+    monkeypatch.setattr(job_mod, "POSTINGS_BITS", -1)
+    _, set_parts = _postings_run(spark, tmp_path / "corpus", tmp_path / "set")
+    assert config["n_input_files"] == 0 and config["postings"] == "bitmap"
+    assert parts == set_parts
+    assert "".join(parts.values()) == ""
+
+
+def test_file_bit_dictionary_miss_raises(spark, tmp_path, monkeypatch):
+    """A pair whose file name has no bit fails the job, naming the file;
+    the posting is never dropped silently."""
+    import re
+
+    from mapreduce_c_implementation_spark import job as job_mod
+
+    (tmp_path / "corpus").mkdir()
+    (tmp_path / "corpus" / "a.txt").write_text("one\n")
+    (tmp_path / "corpus" / "b.txt").write_text("two\n")
+    real = job_mod._file_names
+    monkeypatch.setattr(
+        job_mod, "_file_names", lambda uris: [n for n in real(uris) if n != "b.txt"]
+    )
+    with pytest.raises(Exception, match=re.escape("no file bit for b.txt")):
+        _postings_run(spark, tmp_path / "corpus", tmp_path / "out")
+
+
+@pytest.mark.parametrize("n_files, postings", [(2, "bitmap"), (65, "set")])
+def test_report_names_the_postings_reducer(spark, tmp_path, n_files, postings):
+    """The run report says how many files the scan listed and which
+    postings reducer ran."""
+    _corpus(tmp_path / "corpus", n_files)
+    job = MapReduceJob(
+        input_paths=[str(tmp_path / "corpus")],
+        output_dir=str(tmp_path / "out"),
+        num_partitions=2,
+    )
+    m = run_inverted_index_job(spark, job).metrics
+    assert m.config["n_input_files"] == n_files
+    assert m.config["postings"] == postings
+    report = m.render_report()
+    assert f"n_input_files: {n_files}\n" in report
+    assert f"postings: {postings}\n" in report

@@ -7,10 +7,12 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import random
 import sys
 from contextlib import contextmanager
 from functools import partial
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 from pyspark import cloudpickle
@@ -70,6 +72,47 @@ def test_compare_swaps_order_and_times_every_form(spark, sf_smoke, timed_calls):
     assert q["best"] == {t: min(q["runs"][t]) for t in ("a", "b")}
     assert set(q["ratio"]) == set(q["normalized"]) == {"b"}
     assert q["ratio"]["b"] > 0 and q["normalized"]["b"] > 0
+
+
+# Enough of a SparkSession for compare's GC call between forms.
+_NO_JVM = SimpleNamespace(System=SimpleNamespace(gc=lambda: None))
+_NO_SPARK = SimpleNamespace(sparkContext=SimpleNamespace(_jvm=_NO_JVM))
+
+
+@pytest.mark.parametrize("reps", [2, 4, 6])
+def test_compare_reads_one_when_forms_share_a_distribution(reps, monkeypatch):
+    """Both forms draw every wall from one distribution, except that the
+    form a rep enters first runs 30% slower (a warm-up effect).  The
+    paired, order-balanced ratios read 1 within 5%."""
+    rng = random.Random(reps)
+    entered = []
+
+    def wall(*_):
+        first = entered[len(entered) - 1 - (len(entered) - 1) % 2]
+        return (1.3 if entered[-1] == first else 1.0) * rng.lognormvariate(0, 0.01)
+
+    def form(tag):
+        @contextmanager
+        def enter():
+            entered.append(tag)
+            yield _NO_SPARK, {measure.CONTROL: SimpleNamespace(query_fn=None)}, ""
+
+        return enter
+
+    monkeypatch.setattr(bench, "timed_run", wall)
+    report = measure.compare({"a": form("a"), "b": form("b")}, ["q"], reps, "", wall)
+    q = report["queries"]["q"]
+    assert {len(r) for r in q["runs"].values()} == {reps}
+    for value in (q["ratio"]["b"], q["normalized"]["b"], report["control_ratio"]["b"]):
+        assert abs(value - 1) < 0.05, report
+    lo, hi = q["normalized_range"]["b"]
+    assert lo <= q["normalized"]["b"] <= hi
+
+
+@pytest.mark.parametrize("reps", [0, 1, 3, 5])
+def test_compare_refuses_odd_reps(reps):
+    with pytest.raises(ValueError, match="even"):
+        measure.compare({"a": None, "b": None}, ["q"], reps, "")
 
 
 def test_bench_main_uses_the_shared_timed_run(

@@ -69,17 +69,19 @@ def test_inverted_index_single_shuffle(spark, sf_correct):
     assert count_shuffles(df) == 1
 
 
-def test_flagship_plan_one_word_exchange(spark, tmp_path):
-    """The flagship job has the reference's shape: one exchange, hashed
-    on the word into the reducer count, with no partial aggregate on its
-    map side (the Arrow map already combined), and a per-partition sort
-    on the word above the aggregate."""
+def _flagship_shape(spark, tmp_path, n_files: int) -> tuple[dict, str]:
+    """The flagship job's plan over ``n_files`` files has the reference's
+    shape: one exchange, hashed on the word into the reducer count, with
+    no partial aggregate on its map side (the Arrow map already
+    combined), and a per-partition sort on the word above the aggregate.
+    Returns the plan's recorded choice and its text."""
     import re
 
     from mapreduce_c_implementation_spark.job import inverted_index_plan
 
-    (tmp_path / "a.txt").write_text("b a\n")
-    df = inverted_index_plan(spark, [str(tmp_path)], 7)
+    for i in range(n_files):
+        (tmp_path / f"f{i:02d}.txt").write_text("b a\n")
+    df, choice = inverted_index_plan(spark, [str(tmp_path)], 7)
     plan = physical_plan(df)
     tree = plan.split("\n\n")[0].splitlines()
     exchanges = [i for i, ln in enumerate(tree) if "Exchange" in ln]
@@ -91,7 +93,25 @@ def test_flagship_plan_one_word_exchange(spark, tmp_path):
     assert any("MapInArrow" in ln for ln in below), plan
     above = " ".join(tree[: exchanges[0]])
     assert above.index("Sort") < above.index("Aggregate"), plan
-    assert "partial_collect_set" in plan  # the aggregate runs reducer-side
+    return choice, plan
+
+
+def test_flagship_plan_one_word_exchange(spark, tmp_path):
+    """Up to 64 files the reducer is a ``bit_or`` over file bitmaps, run
+    reducer-side, with no ObjectHashAggregate."""
+    choice, plan = _flagship_shape(spark, tmp_path, 2)
+    assert choice == {"n_input_files": 2, "postings": "bitmap"}
+    assert "partial_bit_or" in plan
+    assert "ObjectHashAggregate" not in plan, plan
+
+
+def test_flagship_plan_above_64_files_collects_name_sets(spark, tmp_path):
+    """Above 64 files, one bigint cannot hold a file bitmap: the reducer
+    is the reducer-side ``collect_set`` of the file names."""
+    choice, plan = _flagship_shape(spark, tmp_path, 65)
+    assert choice == {"n_input_files": 65, "postings": "set"}
+    assert "partial_collect_set" in plan
+    assert "ObjectHashAggregate" in plan, plan
 
 
 def test_topk_uses_take_ordered(spark, sf_correct):

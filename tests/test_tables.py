@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_c_implementation_spark.sources.tables import (
     _warehouse_dir,
+    drop_tables,
     save_bucketed,
 )
 
@@ -89,6 +90,29 @@ def test_sscrr_compact_over_orphaned_location(spark):
         assert got == sorted((r.base_doc, r.win_hash) for r in rows.collect())
     finally:
         for t in (src, dest):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_drop_tables_runs_no_jobs(spark):
+    """drop_tables lists the catalog without a Spark job, drops exactly
+    the tables that match the prefix, and removes their directories."""
+    keep = "b_droptest_keep"
+    gone = ["b_droptest_x_one", "b_droptest_x_two"]
+    try:
+        for t in [keep, *gone]:
+            save_bucketed(spark, _frame(spark, 0, 10), t, "k", 2)
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        jobs = dag.numTotalJobs()
+        drop_tables(spark, "b_droptest_x_")
+        assert dag.numTotalJobs() - jobs == 0
+        assert [spark.catalog.tableExists(t) for t in [keep, *gone]] == [
+            True, False, False,
+        ]  # fmt: skip
+        warehouse = Path(_warehouse_dir(spark))
+        assert (warehouse / keep).is_dir()
+        assert not any((warehouse / t).exists() for t in gone)
+    finally:
+        for t in [keep, *gone]:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
