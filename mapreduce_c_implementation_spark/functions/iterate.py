@@ -1,21 +1,23 @@
-"""Observe-fused fixpoint iteration for the iterative operators.
+"""The round loop of the iterative operators.
 
-Each round is ONE Spark job: an eager ``localCheckpoint`` materializes
-the round's state, and the convergence probe rides that same job via
+``fixed_rounds`` is the one place a round's state is materialized: an
+eager ``localCheckpoint`` per round, with the round's row count (and a
+caller's convergence probe) riding that same job via
 ``DataFrame.observe``.  The checkpoint also keeps the loop linear: a
 recurrence that references the previous state twice (bare and joined)
-would otherwise double its plan every round.
+would otherwise double its plan every round.  At a billion rows the
+same loop holds with the checkpoint on reliable storage.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Observation, Row
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def checkpoint_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, Row]:
+def checkpoint_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
     """Materialize ``df`` as an eager local checkpoint and return it with
     the ``metrics`` (named aggregate columns) computed over the SAME pass.
 
@@ -43,7 +45,36 @@ def record_rounds(
         )
 
 
+def fixed_rounds(
+    op: Callable,
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    *metrics: Column,
+    until: Callable[[dict], bool] | None = None,
+) -> list[DataFrame]:
+    """Run ``state = step(state, k)`` for k = 1..``rounds``, materializing
+    each round's state through ``checkpoint_observed``, and return the
+    per-round states.  Each round observes its row count ``n`` and the
+    extra ``metrics``; ``until(observed)`` ends the loop after a round
+    whose observation it accepts.  Sets ``op.last_rounds`` and
+    ``op.last_round_rows`` (one row count per round run).
+    """
+    states, rows = [], []
+    for k in range(1, rounds + 1):
+        state, got = checkpoint_observed(
+            step(state, k), F.count(F.lit(1)).alias("n"), *metrics
+        )
+        states.append(state)
+        rows.append(got["n"])
+        if until is not None and until(got):
+            break
+    op.last_rounds, op.last_round_rows = len(states), rows
+    return states
+
+
 def propagate(
+    op: Callable,
     state: DataFrame,
     relax: Callable[[DataFrame], DataFrame],
     key: str,
@@ -51,24 +82,27 @@ def propagate(
     agg: Callable[[str], Column],
     max_rounds: int,
 ) -> tuple[DataFrame, int, bool]:
-    """Monotone label propagation: each round checkpoints
-    ``state ∪ relax(state)`` (both ``(key, value)``) reduced by
-    ``agg(value)`` (``F.min`` / ``F.max``) per ``key``, observing its
+    """Monotone label propagation for ``op``: each ``fixed_rounds`` round
+    checkpoints ``state ∪ relax(state)`` (both ``(key, value)``) reduced
+    by ``agg(value)`` (``F.min`` / ``F.max``) per ``key``, observing its
     ``(count, sum(value))`` signature.  Keys are only added and values
     only move one way, so a repeated signature means the round changed
     nothing and every longer unroll gives the same state.  Returns
     ``(state, rounds, converged)``; ``rounds`` includes that no-change
     round, and ``converged`` is False when ``max_rounds`` ran out first.
     """
-    prev = None
-    for rounds in range(1, max_rounds + 1):
-        state, got = checkpoint_observed(
-            state.union(relax(state)).groupBy(key).agg(agg(value).alias(value)),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(value).alias("s"),
-        )
-        sig = (got["n"], got["s"])
-        if sig == prev:
-            return state, rounds, True
-        prev = sig
-    return state, max_rounds, False
+    sigs: list[dict] = []
+
+    def repeated(got: dict) -> bool:
+        sigs.append(got)
+        return sigs[-2:-1] == [got]
+
+    states = fixed_rounds(
+        op,
+        state,
+        lambda s, _: s.union(relax(s)).groupBy(key).agg(agg(value).alias(value)),
+        max_rounds,
+        F.sum(value).alias("s"),
+        until=repeated,
+    )
+    return states[-1], len(states), sigs[-2:-1] == sigs[-1:]

@@ -669,6 +669,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("doc_id").alias("cluster_id")
     ).localCheckpoint()
     labels, rounds, converged = propagate(
+        dedup_connected_components,
         labels,
         lambda lab: edges.join(lab, edges.doc_a == lab.doc_id).select(
             F.col("doc_b").alias("doc_id"), "cluster_id"
@@ -2028,6 +2029,7 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No broadcast hint: labels is name-space-sized, which grows with
     # the catalog.
     labels, rounds, converged = propagate(
+        entity_resolution_clusters,
         labels,
         lambda lab: edges.join(lab, edges.key_a == lab.node).select(
             F.col("key_b").alias("node"), "entity_id"

@@ -22,8 +22,8 @@ Scale shape: the edge build is the TPC-H Q7 join diamond (one
 fact-fact shuffle, dims broadcast); the aggregated edge list is
 O(nations^2) rows, so each PageRank round is a tiny join+agg no matter
 the corpus size.  For a billion-node graph the same loop holds with
-ranks/edges hash-partitioned on node and `localCheckpoint` swapped for
-reliable checkpointing (see dedup_connected_components for the lineage
+ranks/edges hash-partitioned on node and each round's checkpoint on
+reliable storage (see ``functions/iterate.py`` for the lineage
 rationale).
 """
 
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_c_implementation_spark.functions.iterate import (
     checkpoint_observed,
+    fixed_rounds,
     propagate,
     record_rounds,
 )
@@ -142,8 +143,8 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: edge build = Q7 diamond (one shuffle), then each round
     is a join+agg over an O(nations^2) edge list.  No driver-side
     action: n and the derived constants come from a 1-row broadcast
-    aggregate, not `.count()`.  `localCheckpoint` per round caps the
-    lineage exactly as in dedup_connected_components.
+    aggregate, not `.count()`.  The rounds run through
+    ``functions/iterate.py::fixed_rounds``.
     """
     edges = _trade_edges(spark, sf_dir)
     outw = edges.groupBy("src").agg(F.sum("w").alias("w_out"))
@@ -161,22 +162,24 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.col("init").alias("r"))
         .localCheckpoint()
     )
-    for _ in range(PR_ITERS):
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         contrib = (
             ranks.join(ew, ranks.node == ew.src)
             .select("dst", F.expr("(r * w * 85) div (w_out * 100)").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
+        return (
             nodes.join(contrib, nodes.node == contrib.dst, "left")
             .crossJoin(F.broadcast(params))
             .select(
                 "node",
                 (F.col("base") + F.coalesce(F.col("s"), F.lit(0))).alias("r"),
             )
-            .localCheckpoint()
         )
+
+    ranks = fixed_rounds(graph_pagerank_nations, ranks, step, PR_ITERS)[-1]
     return ranks.join(nodes, "node").select("n_name", F.col("r").alias("pr_scaled"))
 
 
@@ -387,13 +390,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per round: one equi-join of the label table to the symmetric edge
     list, one (node, label) weight sum, and an in-group argmax via
     max(struct(weight, -label)) — no window, no shuffle beyond the
-    keyed aggregate.  `localCheckpoint` caps lineage per round exactly
-    as in [[graph_pagerank_nations]]; at a billion nodes the label
-    table is hash-partitioned on node and the checkpoint goes to
-    reliable storage.  Complements [[dedup_cc_stars]]: CC finds the
-    connectivity partition, LPA finds DENSITY structure inside a
-    connected graph (the trade graph is near-complete, so its
-    communities come from weight asymmetry, not topology).
+    keyed aggregate, one ``functions/iterate.py::fixed_rounds`` round;
+    at a billion nodes the label table is hash-partitioned on node.
+    Complements [[dedup_cc_stars]]: CC finds the connectivity
+    partition, LPA finds DENSITY structure inside a connected graph
+    (the trade graph is near-complete, so its communities come from
+    weight asymmetry, not topology).
     """
     edges = _trade_edges(spark, sf_dir)
     nd = F.col("src") != F.col("dst")
@@ -411,7 +413,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("node"), "n_name"
     )
     labels = nodes.select("node", F.col("node").alias("lab")).localCheckpoint()
-    for _ in range(LP_ITERS):
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         votes = (
             sym.join(labels, sym.src == labels.node)
             .groupBy(F.col("dst"), F.col("lab"))
@@ -420,11 +423,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max(F.struct(F.col("s"), (-F.col("lab")).alias("neglab"))).alias("m"))
             .select(F.col("dst").alias("node"), (-F.col("m.neglab")).alias("newlab"))
         )
-        labels = (
-            labels.join(votes, "node", "left")
-            .select("node", F.coalesce("newlab", "lab").alias("lab"))
-            .localCheckpoint()
+        return labels.join(votes, "node", "left").select(
+            "node", F.coalesce("newlab", "lab").alias("lab")
         )
+
+    labels = fixed_rounds(graph_label_propagation, labels, step, LP_ITERS)[-1]
     return labels.join(nodes, "node").select(
         "n_name", F.col("lab").cast("long").alias("community")
     )
@@ -571,6 +574,7 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed, so its stats are unknown and the planner would
     # sort-merge — broadcast explicitly.
     dist, rounds, converged = propagate(
+        graph_bfs_distances,
         dist,
         lambda d: d.join(F.broadcast(sym), d.node == sym.u).select(
             F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
@@ -936,11 +940,9 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the edge build is the Q7 diamond (one fact-fact
     shuffle); each half-step is one equi-join + keyed aggregate over
-    the nation-bounded edge list plus a 1-row L1-total broadcast, with
-    `localCheckpoint` capping lineage per round exactly like
-    [[graph_pagerank_nations]].  At web scale the same loop holds with
-    reliable checkpointing; rounds stay {HITS_ITERS} regardless of
-    data volume.
+    the nation-bounded edge list plus a 1-row L1-total broadcast, one
+    ``functions/iterate.py::fixed_rounds`` round each; rounds stay
+    2 x {HITS_ITERS} regardless of data volume.
 
     Reference analog: none (SURVEY §2.2 graph surface).
     """
@@ -949,9 +951,15 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("node"), "n_name"
     )
 
-    def half_step(
-        scores: DataFrame, src_col: str, dst_col: str, materialize: bool = True
-    ) -> DataFrame:
+    def half_step(scores: DataFrame, k: int) -> DataFrame:
+        # Odd rounds score authorities from hubs along src -> dst, even
+        # rounds hubs from authorities back along dst -> src.  Every
+        # half-step is materialized: a lazy auth half is consumed twice
+        # inside the hub step (raw feeds the left-join AND the broadcast
+        # total), so skipping its checkpoint re-evaluates the edge join
+        # 2x per round and doubles the plan (measured r13: 2.7 s ->
+        # 3.9 s, 6 -> 22 Exchanges).
+        src_col, dst_col = ("src", "dst") if k % 2 else ("dst", "src")
         raw = (
             scores.join(edges, scores.node == edges[src_col])
             .select(
@@ -962,7 +970,7 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("x").cast("decimal(38,0)").alias("raw"))
         )
         tot = raw.agg(F.sum("raw").cast("decimal(38,0)").alias("l1"))
-        out = (
+        return (
             nodes.select("node")
             .join(raw, "node", "left")
             .crossJoin(F.broadcast(tot))
@@ -976,19 +984,9 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("r"),
             )
         )
-        return out.localCheckpoint() if materialize else out
 
     hub = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("r"))
-    auth = None
-    for _ in range(HITS_ITERS):
-        # Materialize BOTH half-steps: a lazy auth half is consumed
-        # twice inside the hub step (raw feeds the left-join AND the
-        # broadcast total), so skipping its checkpoint re-evaluates the
-        # edge join 2x per round and doubles the plan — measured r13:
-        # 2.7 s -> 3.9 s, 6 -> 22 Exchanges.  Two cheap node-grain
-        # materializations per round beat one doubled lazy plan.
-        auth = half_step(hub, "src", "dst")
-        hub = half_step(auth, "dst", "src")
+    auth, hub = fixed_rounds(graph_hits_scores, hub, half_step, 2 * HITS_ITERS)[-2:]
     return (
         nodes.join(hub.withColumnRenamed("r", "hub_scaled"), "node")
         .join(auth.withColumnRenamed("r", "auth_scaled"), "node")
@@ -1387,6 +1385,7 @@ def graph_widest_path_bottleneck(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Broadcast the nation-bounded backbone, as in graph_bfs_distances.
     width, rounds, converged = propagate(
+        graph_widest_path_bottleneck,
         width,
         lambda w: w.join(F.broadcast(sym), w.node == sym.u).select(
             F.col("v").alias("node"),

@@ -16,10 +16,16 @@ rule-generated ±1 vectors, identical literals in both plans.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_c_implementation_spark.functions.iterate import propagate, record_rounds
+from mapreduce_c_implementation_spark.functions.iterate import (
+    fixed_rounds,
+    propagate,
+    record_rounds,
+)
 from mapreduce_c_implementation_spark.functions.vector import (
     EMB_DIM,
     SQL_DOT,
@@ -1315,8 +1321,8 @@ def gram_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     {EMB_DIM}²-row G with a {EMB_DIM}-row broadcast vector and a 1-row
     broadcast max — corpus-size independent, the definition of cheap
     post-processing.  At billion-scale d, rounds would partition G by
-    dim_i block; here localCheckpoint per round caps lineage as in
-    [[kmeans_lloyd]].
+    dim_i block; here each is a ``functions/iterate.py::fixed_rounds``
+    round.
     """
     import numpy as np
     import pandas as pd
@@ -1351,22 +1357,19 @@ def gram_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = spark.range(EMB_DIM).select(
         F.col("id").alias("dim"), F.lit(PI_VSCALE).cast("long").alias("v")
     )
-    for _ in range(PI_ITERS):
+
+    def step(v: DataFrame, _: int) -> DataFrame:
         u = (
             gram.join(F.broadcast(v), gram.dim_j == v.dim)
             .groupBy(F.col("dim_i").alias("dim"))
             .agg(F.sum(F.col("g") * F.col("v")).cast("long").alias("u"))
         )
         m = u.agg(F.max(F.abs(F.col("u"))).alias("m"))
-        v = (
-            u.crossJoin(F.broadcast(m))
-            .select(
-                "dim",
-                F.expr(f"(u * {PI_VSCALE}) div m").cast("long").alias("v"),
-            )
-            .localCheckpoint()
+        return u.crossJoin(F.broadcast(m)).select(
+            "dim", F.expr(f"(u * {PI_VSCALE}) div m").cast("long").alias("v")
         )
-    return v
+
+    return fixed_rounds(gram_power_iteration, v, step, PI_ITERS)[-1]
 
 
 # Shared rank-and-truncate body for the recall-eval oracle: the exact
@@ -2582,14 +2585,12 @@ def kcenter_greedy_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bit-identical doubles in both engines), argmax ties break to the
     smaller id, and only the OUTPUT distance is rounded.
 
-    Scale shape: each round is one in-row distance relax against a
-    1-row broadcast center plus a TakeOrdered(1) argmax — no shuffle
-    beyond the top-1 reduction; the distance table is localCheckpoint-
-    truncated per round exactly like [[graph_bfs_distances]]' frontier
-    (lazy chains double per round otherwise).  K corpus passes total,
-    embarrassingly parallel; at a billion vectors the same loop holds
-    with the checkpoint on reliable storage, or the relax fuses into
-    [[ann_ivf_coarse]] cells for a sub-scan variant.
+    Scale shape: each round is a TakeOrdered(1) argmax plus one in-row
+    distance relax against that 1-row broadcast center — no shuffle
+    beyond the top-1 reduction; the relaxed distance table is the
+    ``functions/iterate.py::fixed_rounds`` state.  K corpus passes
+    total, embarrassingly parallel; at a billion vectors the relax
+    fuses into [[ann_ivf_coarse]] cells for a sub-scan variant.
 
     r13 optimization note — alternative MEASURED AND REJECTED: driving
     the loop with collected centers as literal arrays (one checkpoint
@@ -2606,43 +2607,46 @@ def kcenter_greedy_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         spark_dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
-    c = pts.orderBy("vec_id").limit(1).localCheckpoint()
+    centers: list[DataFrame] = []
 
-    def relax(d: DataFrame, center: DataFrame) -> DataFrame:
+    def pick(d: DataFrame) -> DataFrame:
+        # The center feeds both the relax and the output trace, so it is
+        # materialized once.  With every md NULL the argmax is the
+        # lowest id, the traversal's start.
+        centers.append(
+            d.orderBy(F.desc("md"), F.asc("vec_id")).limit(1).localCheckpoint()
+        )
+        return centers[-1]
+
+    def relax(d: DataFrame, _: int) -> DataFrame:
         cc = F.broadcast(
-            center.select(
-                F.col("embedding").alias("c_emb"), F.col("n2").alias("c_n2")
-            )
+            pick(d).select(F.col("embedding").alias("c_emb"), F.col("n2").alias("c_n2"))
         )
         dist = (
             F.col("n2")
             + F.col("c_n2")
             - F.lit(2.0) * spark_dot(F.col("embedding"), F.col("c_emb"))
         )
-        base = d.crossJoin(cc)
-        md = dist if "md" not in d.columns else F.least(F.col("md"), dist)
-        return base.select(
-            "vec_id", "embedding", "n2", md.alias("md")
-        ).localCheckpoint()
+        return d.crossJoin(cc).select(
+            "vec_id", "embedding", "n2", F.least(F.col("md"), dist).alias("md")
+        )
 
-    out = c.select(
-        F.lit(0).cast("long").alias("round"),
-        F.col("vec_id").cast("long").alias("vec_id"),
-        F.lit(0.0).alias("min_dist_r6"),
-    )
-    d = relax(pts, c)
-    for r in range(1, K_CENTERS):
-        cr = d.orderBy(F.desc("md"), F.asc("vec_id")).limit(1).localCheckpoint()
-        out = out.unionByName(
-            cr.select(
+    # md NULL = no center yet; least() skips NULLs, so the first relax
+    # keeps the raw distance.  The last center is the argmax of the last
+    # relaxed table.
+    unreached = pts.withColumn("md", F.lit(None).cast("double"))
+    pick(fixed_rounds(kcenter_greedy_coreset, unreached, relax, K_CENTERS - 1)[-1])
+    return reduce(
+        DataFrame.unionByName,
+        [
+            c.select(
                 F.lit(r).cast("long").alias("round"),
                 F.col("vec_id").cast("long").alias("vec_id"),
-                F.round("md", 6).alias("min_dist_r6"),
+                (F.round("md", 6) if r else F.lit(0.0)).alias("min_dist_r6"),
             )
-        )
-        if r < K_CENTERS - 1:
-            d = relax(d, cr)
-    return out
+            for r, c in enumerate(centers)
+        ],
+    )
 
 
 # --- Round 10: weighted sparse-cosine pairs (DAAT postings join) ----------
@@ -3002,8 +3006,9 @@ def mmr_diverse_reranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: candidate generation is the distributed top-k
     (TakeOrdered); the greedy loop then runs on a {MMR_N}-row
     localCheckpoint'd table with a {MMR_N}x{MMR_N} sim matrix — per
-    round one keyed join + aggregate + TakeOrdered(1), independent of
-    corpus size.  At 100 TB only the candidate scan grows.
+    ``functions/iterate.py::fixed_rounds`` round one keyed join +
+    aggregate + TakeOrdered(1), independent of corpus size.  At 100 TB
+    only the candidate scan grows.
 
     Reference analog: none (LLM-pipeline surface per the brief).
     """
@@ -3070,7 +3075,8 @@ def mmr_diverse_reranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    for k in range(2, MMR_K + 1):
+
+    def step(sel: DataFrame, k: int) -> DataFrame:
         # chosen is <= MMR_K rows (a bounded constant) but checkpointed
         # tables carry no stats, so both chosen-joins would plan as
         # sort-merge with exchanges on every side — broadcast explicitly
@@ -3083,9 +3089,9 @@ def mmr_diverse_reranking(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("vec_id", "rel")
             .agg(F.max("sim").alias("ms"))
         )
-        pick = (
+        pick = (  # round 1 is the pure-relevance pick above
             m.select(
-                F.lit(k).cast("long").alias("round"),
+                F.lit(k + 1).cast("long").alias("round"),
                 "vec_id",
                 "rel",
                 (
@@ -3098,7 +3104,9 @@ def mmr_diverse_reranking(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("mmr_scaled"), F.asc("vec_id"))
             .limit(1)
         )
-        sel = sel.unionByName(pick).localCheckpoint()
+        return sel.unionByName(pick)
+
+    sel = fixed_rounds(mmr_diverse_reranking, sel, step, MMR_K - 1)[-1]
     return sel.select("round", "vec_id", F.col("rel").alias("rel_micro"), "mmr_scaled")
 
 
@@ -3230,6 +3238,7 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
     labels = dense.select("cid", F.col("cid").alias("lab")).localCheckpoint()
     labels, rounds, converged = propagate(
+        dbscan_grid_clusters,
         labels,
         lambda lab: nbr.join(F.broadcast(lab), nbr.ca == lab.cid).select(
             F.col("cb").alias("cid"), "lab"

@@ -15,9 +15,12 @@ left-to-right order via Spark ``aggregate`` vs DuckDB ``list_reduce``.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_c_implementation_spark.functions.iterate import fixed_rounds
 from mapreduce_c_implementation_spark.functions.prefix import running_by_bucket
 from mapreduce_c_implementation_spark.functions.text import (
     DUCKDB_TOKENIZE,
@@ -6002,8 +6005,9 @@ def platt_scaling_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side-combined aggregate to <= 10001 bin rows;
     every Newton step is a broadcast of the 2-number param row against
-    the bounded bin table + a 5-sum rollup, localCheckpoint-pinned —
-    corpus passes: exactly one, regardless of iterations.
+    the bounded bin table + a 5-sum rollup, one
+    ``functions/iterate.py::fixed_rounds`` round — corpus passes:
+    exactly one, regardless of iterations.
 
     Reference analog: none (LLM-pipeline surface per the brief).
     """
@@ -6033,16 +6037,16 @@ def platt_scaling_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     params = spark.range(1).select(
-        F.lit(0).cast("long").alias("a"), F.lit(0).cast("long").alias("b")
+        *(F.lit(0).cast("long").alias(c) for c in ("iter", "a", "b"))
     )
-    trace = None
     det = (
         "((CAST(haa20 AS DOUBLE) / 1e20 + 1e-9)"
         " * (CAST(hbb12 AS DOUBLE) / 1e12 + 1e-9)"
         " - (CAST(hab16 AS DOUBLE) / 1e16)"
         " * (CAST(hab16 AS DOUBLE) / 1e16))"
     )
-    for k in range(1, PLATT_ITERS + 1):
+
+    def newton(params: DataFrame, k: int) -> DataFrame:
         pm = F.expr(
             "CAST(round(1000000 / (1 + exp(-("
             " CAST(a AS DOUBLE) / 1000000 * (CAST(x AS DOUBLE) / 10000)"
@@ -6072,9 +6076,10 @@ def platt_scaling_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("decimal(38,0)")
             .alias("haa20"),
         )
-        params = (
+        return (
             params.crossJoin(F.broadcast(m))
             .select(
+                F.lit(k).cast("long").alias("iter"),
                 F.expr(
                     "a + CAST(round("
                     " ((CAST(hbb12 AS DOUBLE) / 1e12 + 1e-9)"
@@ -6092,15 +6097,12 @@ def platt_scaling_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f" / {det} * 1000000) AS BIGINT)"
                 ).alias("b"),
             )
-            .localCheckpoint()
         )
-        step = params.select(
-            F.lit(k).cast("long").alias("iter"),
-            F.col("a").alias("a_micro"),
-            F.col("b").alias("b_micro"),
-        )
-        trace = step if trace is None else trace.unionByName(step)
-    return trace
+
+    states = fixed_rounds(platt_scaling_calibration, params, newton, PLATT_ITERS)
+    return reduce(DataFrame.unionByName, states).select(
+        "iter", F.col("a").alias("a_micro"), F.col("b").alias("b_micro")
+    )
 
 
 # --- Round 10b: greedy set-cover document selection ------------------------
@@ -6183,8 +6185,8 @@ def greedy_set_cover_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     term-keyed LEFT-ANTI join against the covered-term table, a
     doc-keyed count, and a TakeOrdered(1) — the
     [[kcenter_greedy_coreset]] loop with set semantics.  The covered
-    table is vocabulary-bounded, shuffles stay term/doc-keyed, and K
-    corpus passes total.
+    table is the vocabulary-bounded ``functions/iterate.py::fixed_rounds``
+    state, shuffles stay term/doc-keyed, and K corpus passes total.
 
     Reference analog: none (LLM-pipeline surface per the brief).
     """
@@ -6203,8 +6205,9 @@ def greedy_set_cover_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     covered = local_frame(spark, [], "t string").localCheckpoint()
-    trace = None
-    for r in range(1, SETCOVER_K + 1):
+    picks: list[DataFrame] = []
+
+    def cover(covered: DataFrame, r: int) -> DataFrame:
         # covered is vocabulary-bounded and localCheckpoint-backed, so
         # its stats are UNKNOWN to the planner — an unhinted anti-join
         # plans sort-merge and re-shuffles the full doc-term table
@@ -6215,31 +6218,35 @@ def greedy_set_cover_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("doc_id")
             .agg(F.count("*").alias("g"))
         )
+        # The pick feeds both the covered update and the output trace,
+        # so it is materialized once.
         pick = (
             gain.orderBy(F.desc("g"), F.asc("doc_id"))
             .limit(1)
+            .select(
+                F.lit(r).cast("long").alias("round"),
+                "doc_id",
+                F.col("g").cast("long").alias("new_terms"),
+            )
             .localCheckpoint()
         )
+        picks.append(pick)
         # The picked doc's NEW terms are disjoint from `covered` and
         # internally distinct (dt is a distinct pair set), so the union
         # needs no per-round distinct re-shuffle of the covered table.
-        covered = covered.unionByName(
+        return covered.unionByName(
             dt.join(F.broadcast(pick.select("doc_id")), "doc_id")
             .join(F.broadcast(covered), "t", "left_anti")
             .select("t")
-        ).localCheckpoint()
-        step = pick.select(
-            F.lit(r).cast("long").alias("round"),
-            "doc_id",
-            F.col("g").cast("long").alias("new_terms"),
         )
-        trace = step if trace is None else trace.unionByName(step)
+
+    fixed_rounds(greedy_set_cover_docs, covered, cover, SETCOVER_K)
     # covered_total == running sum of new_terms: round r's gain counts
     # exactly the terms newly added to the covered set (|cov_r| =
     # |cov_{r-1}| + g_r), so the former per-round covered-count job +
     # crossJoin is a {SETCOVER_K}-row window here instead.
     w_run = _W.orderBy("round").rowsBetween(_W.unboundedPreceding, 0)
-    return trace.select(
+    return reduce(DataFrame.unionByName, picks).select(
         "round",
         "doc_id",
         "new_terms",

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import glob
 import hashlib
+import os
 import shutil
 from typing import Sequence
 from urllib.parse import urlparse
@@ -106,21 +107,7 @@ def parallel_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     planning); a properly laid-out 100 TB table already scans as
     thousands of partitions and this is a no-op either way.
     """
-    import os
-
-    df = load_table(spark, sf_dir, name)
-    try:
-        size = os.path.getsize(f"{sf_dir}/{name}.parquet")
-    except OSError:
-        return df
-    max_part = _parse_bytes_conf(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    est_partitions = max(1, -(-size // max_part))  # ceil
-    target = spark.sparkContext.defaultParallelism
-    if size >= PARALLELIZE_SCAN_MIN_BYTES and est_partitions < target:
-        df = df.repartition(target)
-    return df
+    return _widened_scan(spark, sf_dir, name, PARALLELIZE_SCAN_MIN_BYTES)
 
 
 def compute_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -137,33 +124,26 @@ def compute_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     scans as thousands of splits and this is a no-op; the guard exists
     for exactly the small-single-file layout the fixtures have.
     """
-    df = load_table(spark, sf_dir, name)
-    import os
+    return _widened_scan(spark, sf_dir, name, 0)
 
+
+def _widened_scan(
+    spark: SparkSession, sf_dir: str, name: str, min_bytes: int
+) -> DataFrame:
+    """load_table, round-robin repartitioned to core count when the file
+    is at least ``min_bytes`` and would scan as fewer splits than cores."""
+    df = load_table(spark, sf_dir, name)
     try:
         size = os.path.getsize(f"{sf_dir}/{name}.parquet")
     except OSError:
         return df
-    max_part = _parse_bytes_conf(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
+    # spark.sql.files.maxPartitionBytes, size suffixes (128m) parsed
+    max_part = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     est_partitions = max(1, -(-size // max_part))  # ceil
     target = spark.sparkContext.defaultParallelism
-    if est_partitions < target:
+    if size >= min_bytes and est_partitions < target:
         df = df.repartition(target)
     return df
-
-
-def _parse_bytes_conf(value: str) -> int:
-    """Spark size confs accept human-readable suffixes (128m, 1g, 64MB)."""
-    v = value.strip().lower().removesuffix("b")
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if v and v[-1] in units:
-        return int(float(v[:-1]) * units[v[-1]])
-    try:
-        return int(v)
-    except ValueError:
-        return 128 * 1024 * 1024
 
 
 def table_location(spark: SparkSession, tbl: str) -> str:

@@ -337,12 +337,22 @@ def test_iterative_ops_detect_convergence_early(spark, sf_correct):
         (graph.graph_kcore_peel_layers, graph.KCORE_ITERS),
         (similarity.dbscan_grid_clusters, similarity.DBSCAN_CC_ROUNDS),
     ]
+    propagated = {
+        dedup.dedup_connected_components,
+        dedup.entity_resolution_clusters,
+        graph.graph_bfs_distances,
+        graph.graph_widest_path_bottleneck,
+        similarity.dbscan_grid_clusters,
+    }
     for op, cap in cases:
-        op.last_rounds = op.last_converged = None
+        op.last_rounds = op.last_converged = op.last_round_rows = None
         op(spark, sf_correct).collect()
         assert isinstance(op.last_rounds, int), op.__name__
         assert op.last_rounds < cap, (op.__name__, op.last_rounds, cap)
         assert op.last_converged is True, op.__name__
+        if op in propagated:  # the propagate fixpoints record each round's rows
+            assert len(op.last_round_rows) == op.last_rounds, op.__name__
+            assert all(n > 0 for n in op.last_round_rows), op.__name__
 
 
 @pytest.mark.parametrize(
