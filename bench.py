@@ -282,52 +282,32 @@ def timed_run(spark, query_fn, sf_dir: str) -> float:
     return dt
 
 
-def _spelled(text, replica, width: int):
-    """``text`` with every ASCII-alnum run (a token of ``tokenize``)
-    prefixed by ``replica`` as ``width`` hex digits."""
-    from pyspark.sql import functions as F
-
-    prefix = F.lpad(F.lower(F.hex(replica)), width, "0")
-    return F.regexp_replace(text, F.lit("[A-Za-z0-9]+"), F.concat(prefix, F.lit("$0")))
-
-
 @contextmanager
 def flagship_job(spark, sf_dir: str, target_mb: int, metrics_path: str | None = None):
     """Stage a ~target_mb text corpus (documents.text replicated) and
-    yield ``(job, corpus_bytes, distinct_words)``: a ``MapReduceJob``
-    over it writing to a scratch output dir.  Each replica spells every
-    word with its own fixed-width hex prefix, so the vocabulary (and the
-    reduce's work) grows with the copies: ``distinct_words`` is one
-    replica's distinct-word count times the copies.  Both directories
-    are removed on exit, so staging stays outside every timed window."""
+    yield ``(job, corpus_bytes)``: a ``MapReduceJob`` over it writing to
+    a scratch output dir.  Both directories are removed on exit, so
+    staging stays outside every timed window."""
     import math
     import shutil
     import tempfile
 
     from pyspark.sql import functions as F
 
-    from mapreduce_c_implementation_spark.functions.text import tokenize
     from mapreduce_c_implementation_spark.job import MapReduceJob
     from mapreduce_c_implementation_spark.metrics import input_bytes
 
-    def line_bytes(df):
-        return df.agg(F.sum(F.octet_length("text") + F.lit(1))).first()[0]
-
-    target = target_mb * 1_000_000
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("text")
-    # Spelling only adds bytes, so the unspelled size bounds the copies
-    # and with them the prefix width.
-    most = max(1, math.ceil(target / max(1, line_bytes(docs))))
-    width = len(f"{most - 1:x}")
-    replica = docs.select(_spelled(F.col("text"), F.lit(0), width).alias("text"))
-    copies = max(1, math.ceil(target / max(1, line_bytes(replica))))
-    words = replica.select(F.explode(tokenize(F.col("text")))).distinct().count()
+    base_bytes = docs.agg(
+        F.sum(F.octet_length("text") + F.lit(1)).alias("b")
+    ).collect()[0][0]
+    copies = max(1, math.ceil(target_mb * 1_000_000 / max(1, base_bytes)))
     corpus = tempfile.mkdtemp(prefix="flagship_corpus_")
     out_dir = tempfile.mkdtemp(prefix="flagship_out_")
     try:
         (
             docs.crossJoin(F.broadcast(spark.range(copies)))
-            .select(_spelled(F.col("text"), F.col("id"), width).alias("text"))
+            .select("text")
             .repartition(64)
             .write.mode("overwrite")
             .text(corpus)
@@ -335,7 +315,7 @@ def flagship_job(spark, sf_dir: str, target_mb: int, metrics_path: str | None = 
         job = MapReduceJob(
             input_paths=[corpus], output_dir=out_dir, metrics_path=metrics_path
         )
-        yield job, input_bytes([corpus]), words * copies
+        yield job, input_bytes([corpus])
     finally:
         shutil.rmtree(corpus, ignore_errors=True)
         shutil.rmtree(out_dir, ignore_errors=True)
@@ -344,15 +324,14 @@ def flagship_job(spark, sf_dir: str, target_mb: int, metrics_path: str | None = 
 def flagship_throughput(spark, sf_dir: str, target_mb: int) -> dict:
     """The BASELINE.md comparison: the reference indexes ~708 MB of raw
     text in 19.1 s (~37 MB/s on 20 cores).  Same-shape measurement —
-    stage a ~target_mb text corpus (documents.text replicated, each
-    replica with its own word spellings), then run
+    stage a ~target_mb text corpus (documents.text replicated), then run
     ``run_inverted_index_job`` end to end (text scan -> tokenize ->
     combine -> word-keyed shuffle -> sorted postings -> part-%05d sink)
     and report MB/s.  Staging is excluded from the timed window."""
     from mapreduce_c_implementation_spark.job import run_inverted_index_job
 
     report = str(Path(__file__).resolve().parent / "metrics_report.txt")
-    with flagship_job(spark, sf_dir, target_mb, report) as (job, corpus_bytes, words):
+    with flagship_job(spark, sf_dir, target_mb, report) as (job, corpus_bytes):
         # Same best-of-N rule as the headline loop: this box's noise
         # windows can double a single run's wall time.  Staging is
         # shared; each rep re-runs the full job (scan -> tokenize ->
@@ -364,7 +343,6 @@ def flagship_throughput(spark, sf_dir: str, target_mb: int) -> dict:
             wall = min(wall, result.metrics.wall_s)
     return {
         "corpus_mb": round(corpus_bytes / 1e6, 1),
-        "distinct_words": words,
         "wall_s": wall,
         "mb_per_s": round(corpus_bytes / 1e6 / wall, 1) if wall else 0.0,
         "metrics_report": report,

@@ -52,25 +52,27 @@ def fixed_rounds(
     rounds: int,
     *metrics: Column,
     until: Callable[[dict], bool] | None = None,
-) -> list[DataFrame]:
+) -> DataFrame:
     """Run ``state = step(state, k)`` for k = 1..``rounds``, materializing
     each round's state through ``checkpoint_observed``, and return the
-    per-round states.  Each round observes its row count ``n`` and the
-    extra ``metrics``; ``until(observed)`` ends the loop after a round
-    whose observation it accepts.  Sets ``op.last_rounds`` and
-    ``op.last_round_rows`` (one row count per round run).
+    last state; only the current round's state stays referenced, so a
+    replaced one can be cleaned up.  An operator that reports a per-round
+    trace keeps it in the state.  Each round observes its row count
+    ``n`` and the extra ``metrics``; ``until(observed)`` ends the loop
+    after a round whose observation it accepts.  Sets
+    ``op.last_rounds`` and ``op.last_round_rows`` (one row count per
+    round run).
     """
-    states, rows = [], []
+    rows = []
     for k in range(1, rounds + 1):
         state, got = checkpoint_observed(
             step(state, k), F.count(F.lit(1)).alias("n"), *metrics
         )
-        states.append(state)
         rows.append(got["n"])
         if until is not None and until(got):
             break
-    op.last_rounds, op.last_round_rows = len(states), rows
-    return states
+    op.last_rounds, op.last_round_rows = len(rows), rows
+    return state
 
 
 def propagate(
@@ -81,15 +83,17 @@ def propagate(
     value: str,
     agg: Callable[[str], Column],
     max_rounds: int,
-) -> tuple[DataFrame, int, bool]:
+    closure_bound: str | None = None,
+) -> DataFrame:
     """Monotone label propagation for ``op``: each ``fixed_rounds`` round
     checkpoints ``state ∪ relax(state)`` (both ``(key, value)``) reduced
     by ``agg(value)`` (``F.min`` / ``F.max``) per ``key``, observing its
     ``(count, sum(value))`` signature.  Keys are only added and values
     only move one way, so a repeated signature means the round changed
-    nothing and every longer unroll gives the same state.  Returns
-    ``(state, rounds, converged)``; ``rounds`` includes that no-change
-    round, and ``converged`` is False when ``max_rounds`` ran out first.
+    nothing and every longer unroll gives the same state.  Returns the
+    state and records the rounds through ``record_rounds`` (with
+    ``closure_bound``): they include that no-change round, and
+    ``op.last_converged`` is False when ``max_rounds`` ran out first.
     """
     sigs: list[dict] = []
 
@@ -97,7 +101,7 @@ def propagate(
         sigs.append(got)
         return sigs[-2:-1] == [got]
 
-    states = fixed_rounds(
+    state = fixed_rounds(
         op,
         state,
         lambda s, _: s.union(relax(s)).groupBy(key).agg(agg(value).alias(value)),
@@ -105,4 +109,5 @@ def propagate(
         F.sum(value).alias("s"),
         until=repeated,
     )
-    return states[-1], len(states), sigs[-2:-1] == sigs[-1:]
+    record_rounds(op, len(sigs), sigs[-2:-1] == sigs[-1:], closure_bound)
+    return state

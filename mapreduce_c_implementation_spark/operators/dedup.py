@@ -668,7 +668,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = docs.select(
         "doc_id", F.col("doc_id").alias("cluster_id")
     ).localCheckpoint()
-    labels, rounds, converged = propagate(
+    return propagate(
         dedup_connected_components,
         labels,
         lambda lab: edges.join(lab, edges.doc_a == lab.doc_id).select(
@@ -678,11 +678,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster_id",
         F.min,
         CC_ROUNDS,
+        f"CC_ROUNDS={CC_ROUNDS}",
     )
-    record_rounds(
-        dedup_connected_components, rounds, converged, f"CC_ROUNDS={CC_ROUNDS}"
-    )
-    return labels
 
 
 @register(
@@ -2028,7 +2025,7 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # No broadcast hint: labels is name-space-sized, which grows with
     # the catalog.
-    labels, rounds, converged = propagate(
+    labels = propagate(
         entity_resolution_clusters,
         labels,
         lambda lab: edges.join(lab, edges.key_a == lab.node).select(
@@ -2038,9 +2035,7 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "entity_id",
         F.min,
         CC_ROUNDS,
-    )
-    record_rounds(
-        entity_resolution_clusters, rounds, converged, f"CC_ROUNDS={CC_ROUNDS}"
+        f"CC_ROUNDS={CC_ROUNDS}",
     )
     return (
         labels.join(vals, labels.node == vals.rep_key)

@@ -179,7 +179,7 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    ranks = fixed_rounds(graph_pagerank_nations, ranks, step, PR_ITERS)[-1]
+    ranks = fixed_rounds(graph_pagerank_nations, ranks, step, PR_ITERS)
     return ranks.join(nodes, "node").select("n_name", F.col("r").alias("pr_scaled"))
 
 
@@ -427,7 +427,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "node", F.coalesce("newlab", "lab").alias("lab")
         )
 
-    labels = fixed_rounds(graph_label_propagation, labels, step, LP_ITERS)[-1]
+    labels = fixed_rounds(graph_label_propagation, labels, step, LP_ITERS)
     return labels.join(nodes, "node").select(
         "n_name", F.col("lab").cast("long").alias("community")
     )
@@ -573,7 +573,7 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sym is NATION-bounded (<= 25 nodes x top-k degree) but
     # checkpointed, so its stats are unknown and the planner would
     # sort-merge — broadcast explicitly.
-    dist, rounds, converged = propagate(
+    dist = propagate(
         graph_bfs_distances,
         dist,
         lambda d: d.join(F.broadcast(sym), d.node == sym.u).select(
@@ -584,7 +584,6 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min,
         BFS_ITERS,
     )
-    record_rounds(graph_bfs_distances, rounds, converged)
     n = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), "n_name"
     )
@@ -953,7 +952,8 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def half_step(scores: DataFrame, k: int) -> DataFrame:
         # Odd rounds score authorities from hubs along src -> dst, even
-        # rounds hubs from authorities back along dst -> src.  Every
+        # rounds hubs from authorities back along dst -> src; each state
+        # carries the scores it was computed from as `o`.  Every
         # half-step is materialized: a lazy auth half is consumed twice
         # inside the hub step (raw feeds the left-join AND the broadcast
         # total), so skipping its checkpoint re-evaluates the edge join
@@ -971,11 +971,12 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         tot = raw.agg(F.sum("raw").cast("decimal(38,0)").alias("l1"))
         return (
-            nodes.select("node")
+            scores.select("node", F.col("r").alias("o"))
             .join(raw, "node", "left")
             .crossJoin(F.broadcast(tot))
             .select(
                 "node",
+                "o",
                 F.coalesce(
                     F.expr(
                         f"CAST(raw * {HITS_SCALE} div l1 AS BIGINT)"
@@ -986,11 +987,9 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     hub = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("r"))
-    auth, hub = fixed_rounds(graph_hits_scores, hub, half_step, 2 * HITS_ITERS)[-2:]
-    return (
-        nodes.join(hub.withColumnRenamed("r", "hub_scaled"), "node")
-        .join(auth.withColumnRenamed("r", "auth_scaled"), "node")
-        .select("n_name", "hub_scaled", "auth_scaled")
+    hub = fixed_rounds(graph_hits_scores, hub, half_step, 2 * HITS_ITERS)
+    return nodes.join(hub, "node").select(
+        "n_name", F.col("r").alias("hub_scaled"), F.col("o").alias("auth_scaled")
     )
 
 
@@ -1384,7 +1383,7 @@ def graph_widest_path_bottleneck(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(WP_INIT).cast("long").alias("width"),
     )
     # Broadcast the nation-bounded backbone, as in graph_bfs_distances.
-    width, rounds, converged = propagate(
+    width = propagate(
         graph_widest_path_bottleneck,
         width,
         lambda w: w.join(F.broadcast(sym), w.node == sym.u).select(
@@ -1396,7 +1395,6 @@ def graph_widest_path_bottleneck(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max,
         WP_ITERS,
     )
-    record_rounds(graph_widest_path_bottleneck, rounds, converged)
     n = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), "n_name"
     )

@@ -16,16 +16,10 @@ rule-generated ±1 vectors, identical literals in both plans.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_c_implementation_spark.functions.iterate import (
-    fixed_rounds,
-    propagate,
-    record_rounds,
-)
+from mapreduce_c_implementation_spark.functions.iterate import fixed_rounds, propagate
 from mapreduce_c_implementation_spark.functions.vector import (
     EMB_DIM,
     SQL_DOT,
@@ -1369,7 +1363,7 @@ def gram_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dim", F.expr(f"(u * {PI_VSCALE}) div m").cast("long").alias("v")
         )
 
-    return fixed_rounds(gram_power_iteration, v, step, PI_ITERS)[-1]
+    return fixed_rounds(gram_power_iteration, v, step, PI_ITERS)
 
 
 # Shared rank-and-truncate body for the recall-eval oracle: the exact
@@ -2587,10 +2581,11 @@ def kcenter_greedy_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each round is a TakeOrdered(1) argmax plus one in-row
     distance relax against that 1-row broadcast center — no shuffle
-    beyond the top-1 reduction; the relaxed distance table is the
-    ``functions/iterate.py::fixed_rounds`` state.  K corpus passes
-    total, embarrassingly parallel; at a billion vectors the relax
-    fuses into [[ann_ivf_coarse]] cells for a sub-scan variant.
+    beyond the top-1 reduction; the relaxed distance table, which marks
+    each center with its round, is the ``functions/iterate.py::
+    fixed_rounds`` state.  K corpus passes total, embarrassingly
+    parallel; at a billion vectors the relax fuses into
+    [[ann_ivf_coarse]] cells for a sub-scan variant.
 
     r13 optimization note — alternative MEASURED AND REJECTED: driving
     the loop with collected centers as literal arrays (one checkpoint
@@ -2607,45 +2602,46 @@ def kcenter_greedy_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         spark_dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
-    centers: list[DataFrame] = []
 
-    def pick(d: DataFrame) -> DataFrame:
-        # The center feeds both the relax and the output trace, so it is
-        # materialized once.  With every md NULL the argmax is the
-        # lowest id, the traversal's start.
-        centers.append(
-            d.orderBy(F.desc("md"), F.asc("vec_id")).limit(1).localCheckpoint()
-        )
-        return centers[-1]
-
-    def relax(d: DataFrame, _: int) -> DataFrame:
-        cc = F.broadcast(
-            pick(d).select(F.col("embedding").alias("c_emb"), F.col("n2").alias("c_n2"))
+    def pick_and_relax(d: DataFrame, k: int) -> DataFrame:
+        # The argmax row is the round's center; it is marked with its
+        # 0-based round and the distance it was picked at (`cd`), and
+        # every row's md is relaxed against it.
+        c = d.orderBy(F.desc("md"), F.asc("vec_id")).limit(1).select(
+            F.col("vec_id").alias("c_id"),
+            F.col("embedding").alias("c_emb"),
+            F.col("n2").alias("c_n2"),
+            F.col("md").alias("c_md"),
         )
         dist = (
             F.col("n2")
             + F.col("c_n2")
             - F.lit(2.0) * spark_dot(F.col("embedding"), F.col("c_emb"))
         )
-        return d.crossJoin(cc).select(
-            "vec_id", "embedding", "n2", F.least(F.col("md"), dist).alias("md")
+        is_c = F.col("vec_id") == F.col("c_id")
+        return d.crossJoin(F.broadcast(c)).select(
+            "vec_id",
+            "embedding",
+            "n2",
+            F.least(F.col("md"), dist).alias("md"),
+            F.when(is_c, F.lit(k - 1)).otherwise(F.col("round")).alias("round"),
+            F.when(is_c, F.col("c_md")).otherwise(F.col("cd")).alias("cd"),
         )
 
-    # md NULL = no center yet; least() skips NULLs, so the first relax
-    # keeps the raw distance.  The last center is the argmax of the last
-    # relaxed table.
-    unreached = pts.withColumn("md", F.lit(None).cast("double"))
-    pick(fixed_rounds(kcenter_greedy_coreset, unreached, relax, K_CENTERS - 1)[-1])
-    return reduce(
-        DataFrame.unionByName,
-        [
-            c.select(
-                F.lit(r).cast("long").alias("round"),
-                F.col("vec_id").cast("long").alias("vec_id"),
-                (F.round("md", 6) if r else F.lit(0.0)).alias("min_dist_r6"),
-            )
-            for r, c in enumerate(centers)
-        ],
+    # md NULL = no center yet: the first argmax is the lowest id, the
+    # traversal's start, and least() skips NULLs, so the first relax
+    # keeps the raw distance.
+    d = pts.select(
+        "*",
+        F.lit(None).cast("double").alias("md"),
+        F.lit(None).cast("long").alias("round"),
+        F.lit(None).cast("double").alias("cd"),
+    )
+    d = fixed_rounds(kcenter_greedy_coreset, d, pick_and_relax, K_CENTERS)
+    return d.where(F.col("round").isNotNull()).select(
+        "round",
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.coalesce(F.round("cd", 6), F.lit(0.0)).alias("min_dist_r6"),
     )
 
 
@@ -3106,7 +3102,7 @@ def mmr_diverse_reranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return sel.unionByName(pick)
 
-    sel = fixed_rounds(mmr_diverse_reranking, sel, step, MMR_K - 1)[-1]
+    sel = fixed_rounds(mmr_diverse_reranking, sel, step, MMR_K - 1)
     return sel.select("round", "vec_id", F.col("rel").alias("rel_micro"), "mmr_scaled")
 
 
@@ -3237,7 +3233,7 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ca", F.col("cid").alias("cb")
     ).localCheckpoint()
     labels = dense.select("cid", F.col("cid").alias("lab")).localCheckpoint()
-    labels, rounds, converged = propagate(
+    labels = propagate(
         dbscan_grid_clusters,
         labels,
         lambda lab: nbr.join(F.broadcast(lab), nbr.ca == lab.cid).select(
@@ -3247,11 +3243,6 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lab",
         F.min,
         DBSCAN_CC_ROUNDS,
-    )
-    record_rounds(
-        dbscan_grid_clusters,
-        rounds,
-        converged,
         f"DBSCAN_CC_ROUNDS={DBSCAN_CC_ROUNDS}",
     )
     return (

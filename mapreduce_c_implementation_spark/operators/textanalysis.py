@@ -15,8 +15,6 @@ left-to-right order via Spark ``aggregate`` vs DuckDB ``list_reduce``.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -6036,7 +6034,8 @@ def platt_scaling_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"), F.sum("y").alias("pos"))
         .localCheckpoint()
     )
-    params = spark.range(1).select(
+    # The state is the trace of (iter, a, b) rows, seeded with iter 0.
+    trace = spark.range(1).select(
         *(F.lit(0).cast("long").alias(c) for c in ("iter", "a", "b"))
     )
     det = (
@@ -6046,7 +6045,8 @@ def platt_scaling_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         " * (CAST(hab16 AS DOUBLE) / 1e16))"
     )
 
-    def newton(params: DataFrame, k: int) -> DataFrame:
+    def newton(trace: DataFrame, k: int) -> DataFrame:
+        params = trace.where(F.col("iter") == k - 1)
         pm = F.expr(
             "CAST(round(1000000 / (1 + exp(-("
             " CAST(a AS DOUBLE) / 1000000 * (CAST(x AS DOUBLE) / 10000)"
@@ -6076,9 +6076,8 @@ def platt_scaling_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("decimal(38,0)")
             .alias("haa20"),
         )
-        return (
-            params.crossJoin(F.broadcast(m))
-            .select(
+        return trace.unionByName(
+            params.crossJoin(F.broadcast(m)).select(
                 F.lit(k).cast("long").alias("iter"),
                 F.expr(
                     "a + CAST(round("
@@ -6099,8 +6098,8 @@ def platt_scaling_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    states = fixed_rounds(platt_scaling_calibration, params, newton, PLATT_ITERS)
-    return reduce(DataFrame.unionByName, states).select(
+    trace = fixed_rounds(platt_scaling_calibration, trace, newton, PLATT_ITERS)
+    return trace.where(F.col("iter") > 0).select(
         "iter", F.col("a").alias("a_micro"), F.col("b").alias("b_micro")
     )
 
@@ -6204,8 +6203,11 @@ def greedy_set_cover_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    covered = local_frame(spark, [], "t string").localCheckpoint()
-    picks: list[DataFrame] = []
+    # The state is the covered-term table; each term carries the round,
+    # document and gain of the pick that covered it.
+    covered = local_frame(
+        spark, [], "t string, round long, doc_id long, new_terms long"
+    ).localCheckpoint()
 
     def cover(covered: DataFrame, r: int) -> DataFrame:
         # covered is vocabulary-bounded and localCheckpoint-backed, so
@@ -6213,40 +6215,31 @@ def greedy_set_cover_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # plans sort-merge and re-shuffles the full doc-term table
         # every round (measured r13: loop 4.7 s vs 2.0 s broadcast).
         # Broadcasting it makes both anti-joins shuffle-free.
+        cov = F.broadcast(covered.select("t"))
         gain = (
-            dt.join(F.broadcast(covered), "t", "left_anti")
+            dt.join(cov, "t", "left_anti")
             .groupBy("doc_id")
             .agg(F.count("*").alias("g"))
         )
-        # The pick feeds both the covered update and the output trace,
-        # so it is materialized once.
-        pick = (
-            gain.orderBy(F.desc("g"), F.asc("doc_id"))
-            .limit(1)
-            .select(
-                F.lit(r).cast("long").alias("round"),
-                "doc_id",
-                F.col("g").cast("long").alias("new_terms"),
-            )
-            .localCheckpoint()
+        pick = gain.orderBy(F.desc("g"), F.asc("doc_id")).limit(1).select(
+            F.lit(r).cast("long").alias("round"),
+            "doc_id",
+            F.col("g").cast("long").alias("new_terms"),
         )
-        picks.append(pick)
         # The picked doc's NEW terms are disjoint from `covered` and
         # internally distinct (dt is a distinct pair set), so the union
         # needs no per-round distinct re-shuffle of the covered table.
         return covered.unionByName(
-            dt.join(F.broadcast(pick.select("doc_id")), "doc_id")
-            .join(F.broadcast(covered), "t", "left_anti")
-            .select("t")
+            dt.join(F.broadcast(pick), "doc_id").join(cov, "t", "left_anti")
         )
 
-    fixed_rounds(greedy_set_cover_docs, covered, cover, SETCOVER_K)
+    covered = fixed_rounds(greedy_set_cover_docs, covered, cover, SETCOVER_K)
     # covered_total == running sum of new_terms: round r's gain counts
     # exactly the terms newly added to the covered set (|cov_r| =
     # |cov_{r-1}| + g_r), so the former per-round covered-count job +
     # crossJoin is a {SETCOVER_K}-row window here instead.
     w_run = _W.orderBy("round").rowsBetween(_W.unboundedPreceding, 0)
-    return reduce(DataFrame.unionByName, picks).select(
+    return covered.select("round", "doc_id", "new_terms").distinct().select(
         "round",
         "doc_id",
         "new_terms",

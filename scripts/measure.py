@@ -546,14 +546,13 @@ def cmd_flagship(args, spark, sf_dir: str) -> dict:
         bases = {"checkout": fixed(spark, all_operators(), sf_dir)}
     sizes = {}
     for mb in args.sizes:
-        with bench.flagship_job(spark, sf_dir, mb) as (job, nbytes, words):
+        with bench.flagship_job(spark, sf_dir, mb) as (job, nbytes):
             logs = {t: [] for t in bases}
             forms = {t: flagship_form(f, job, logs[t]) for t, f in bases.items()}
             r = compare(forms, ["flagship"], args.reps, sf_dir, lambda s, ops, d, n: ops[n]())
         q = r["queries"]["flagship"]
         sizes[str(mb)] = {
             "corpus_mb": round(nbytes / 1e6, 1),
-            "distinct_words": words,
             "ratio": q["ratio"],
             "normalized": q["normalized"],
             "normalized_range": q["normalized_range"],
