@@ -17,16 +17,29 @@ tokenized with ``_metadata.file_name`` lineage (== MR_CurrentFile,
 src/mapreduce.c:56-58), shuffled once on the word, reduced to each
 word's distinct files (a 64-bit file bitmap when the input has at most
 64 file names, a sorted string set above that), and written as
-``part-%05d`` text shards exactly like the reference sink
-(src/main.c:92-98) — one file per reducer partition, its words in byte
-order, each word's files in byte order.
+``part-%05d.txt`` shards exactly like the reference sink
+(src/main.c:92-98) — one file per non-empty reducer partition, its
+words in byte order, each word's files in byte order.
+
+The sink is ``write_part_files``, not Spark's file writer: the reducers
+are coalesced to at most one writer task per core, and a ``mapInArrow``
+writer copies each reducer's run of lines straight from the Arrow
+string buffer into its own file; the driver renames the files from the
+collected commit rows.  A Spark write task per reducer would instead
+deserialise the session's Hadoop configuration and commit through
+``FileOutputCommitter``, tens of milliseconds per task.  The Python
+workers it runs on (and the tokenizer's) fork from the package's
+daemon module (``daemon.py``, set in ``session.build_session``), so a
+task does not re-read ``pyspark.zip`` before it starts.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from functools import partial
 from pathlib import Path
 from typing import Callable
 from urllib.parse import unquote
@@ -43,7 +56,7 @@ from mapreduce_c_implementation_spark.metrics import (
     collect_stage_metrics,
     input_bytes,
     max_stage_id,
-    partition_skew_from_files,
+    partition_skew,
 )
 
 
@@ -176,21 +189,117 @@ def inverted_index_plan(
     return postings, choice
 
 
+# One commit row per part file a writer task wrote.
+_COMMIT_SCHEMA = "part int, path string, lines long, bytes long"
+
+
+def _write_runs(tmp: str, batches):
+    """``write_part_files``' ``mapInArrow`` body: each reducer's run of
+    ``(part, line)`` rows becomes one file under ``tmp``, written from
+    the Arrow string column's data buffer with no per-row Python.
+    Yields one commit row per file."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    attempt = f"{ctx.stageId()}-{ctx.partitionId()}-{ctx.attemptNumber()}"
+    rows: list[dict] = []  # one per file; the last one's file is ``f``
+    f = None
+    for batch in batches:
+        parts = batch.column(0).to_numpy()
+        text = batch.column(1)
+        if not len(parts):
+            continue
+        if text.null_count:
+            i = text.is_null().to_numpy(zero_copy_only=False).argmax()
+            raise ValueError(f"write_part_files: NULL line in reducer {parts[i]}")
+        wide = pa.types.is_large_string(text.type)
+        offsets = np.frombuffer(text.buffers()[1], np.int64 if wide else np.int32)
+        offsets = offsets[text.offset : text.offset + len(text) + 1]
+        data = text.buffers()[2]
+        cuts = [0, *(np.flatnonzero(parts[1:] != parts[:-1]) + 1), len(parts)]
+        for a, b in zip(cuts, cuts[1:]):
+            part = int(parts[a])
+            if not rows or rows[-1]["part"] != part:
+                if any(r["part"] == part for r in rows):
+                    raise RuntimeError(f"write_part_files: reducer {part} in two runs")
+                if f is not None:
+                    f.close()
+                path = os.path.join(tmp, f"part-{part:05d}-{attempt}")
+                rows.append({"part": part, "path": path, "lines": 0, "bytes": 0})
+                f = open(path, "wb")
+            lo, hi = int(offsets[a]), int(offsets[b])
+            f.write(data[lo:hi])
+            rows[-1]["lines"] += b - a
+            rows[-1]["bytes"] += hi - lo
+    if f is not None:
+        f.close()
+    yield pa.RecordBatch.from_pylist(
+        rows,
+        schema=pa.schema([("part", pa.int32()), ("path", pa.string()),
+                          ("lines", pa.int64()), ("bytes", pa.int64())]),
+    )
+
+
+def write_part_files(
+    postings: DataFrame, out: Path, tasks: int
+) -> list[tuple[str, int, int]]:
+    """The reference's sink (src/main.c:92-98): each non-empty reducer
+    partition of the one-column text frame ``postings`` becomes
+    ``out/part-%05d.txt``, its lines as ``write.text`` writes them.
+
+    The reducer id (``spark_partition_id()``) is projected below a
+    ``coalesce`` to ``tasks`` writer tasks; each writer task gets its
+    reducers one whole run at a time, in no set order, and writes each
+    run to ``out/_temporary``.  The driver collects the
+    commit rows, renames each file to its reducer's name, removes
+    ``_temporary`` and writes ``_SUCCESS``.  A failed job leaves no part
+    file and no ``_temporary``.  Returns ``(path, lines, bytes)`` per
+    part file, in reducer order."""
+    tmp = out / "_temporary"
+    tmp.mkdir(parents=True)
+    framed = postings.select(
+        F.spark_partition_id().alias("part"),
+        F.concat(postings.columns[0], F.lit("\n")).alias("line"),
+    ).coalesce(tasks)
+    committed: list[tuple[str, int, int]] = []
+    try:
+        rows = framed.mapInArrow(partial(_write_runs, str(tmp)), _COMMIT_SCHEMA).collect()
+        for r in sorted(rows):
+            final = out / f"part-{r.part:05d}.txt"
+            if final.exists():
+                raise RuntimeError(f"write_part_files: reducer {r.part} committed twice")
+            os.replace(r.path, final)
+            committed.append((str(final), r.lines, r.bytes))
+    except BaseException:
+        for path, _, _ in committed:
+            os.unlink(path)
+        raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    (out / "_SUCCESS").touch()
+    return committed
+
+
 def _run_app(
     spark: SparkSession,
     job: MapReduceJob,
     app: str,
-    write: Callable[[Path, dict], dict],
+    write: Callable[[Path, dict], tuple[dict, list[tuple[str, int]]]],
 ) -> JobResult:
     """The steps every job-API app shares, the reference's MR_Run
-    (src/job.c:157-293): validate, clear the output dir, time
-    ``write(out, config)`` (which builds the app's plan, adds its
-    plan-time choices to the report's ``config``, writes the plan under
-    ``out`` and returns the app's own counters), then report.  The part
-    files under ``out`` give the shard count and skew table."""
+    (src/job.c:157-293): validate, clear the output dir (or refuse an
+    existing one, before any job runs), time ``write(out, config)``
+    (which builds the app's plan, adds its plan-time choices to the
+    report's ``config``, writes the plan under ``out`` and returns the
+    app's own counters and its part files with their sizes), then
+    report.  The part files give the shard count and skew table."""
     job.validate()
     out = Path(job.output_dir)
-    if job.clear_output and out.exists():
+    if out.exists():
+        if not job.clear_output:
+            raise FileExistsError(f"output directory exists: {out}")
         shutil.rmtree(out)
 
     metrics = JobMetrics(config={
@@ -203,10 +312,10 @@ def _run_app(
     })
     stage_floor = max_stage_id(spark)
     t0 = time.perf_counter()
-    counters = write(out, metrics.config)
+    counters, sized = write(out, metrics.config)
     metrics.wall_s = round(time.perf_counter() - t0, 3)
 
-    files = sorted(str(p) for p in out.rglob("part-*"))
+    files = sorted(path for path, _ in sized)
     metrics.counters.update(counters)
     metrics.counters["n_output_files"] = len(files)
     metrics.counters["input_bytes"] = input_bytes(job.input_paths)
@@ -214,7 +323,7 @@ def _run_app(
     # come from the driver status store (scoped to this job's stages),
     # the skew table from reducer shard sizes.
     metrics.stages = collect_stage_metrics(spark, after=stage_floor)
-    metrics.partition_top = partition_skew_from_files(files)
+    metrics.partition_top = partition_skew(sized)
     if job.metrics_path:
         metrics.write_report(job.metrics_path)
     if job.verbose:
@@ -224,18 +333,25 @@ def _run_app(
 
 def run_inverted_index_job(spark: SparkSession, job: MapReduceJob) -> JobResult:
     """The flagship pipeline end-to-end over raw text files:
-    ``inverted_index_plan`` written as part-%05d text shards.  The
-    report's config names the input file count and the postings
-    reducer that ran (``bitmap`` or ``set``)."""
+    ``inverted_index_plan`` written by ``write_part_files`` as
+    part-%05d.txt shards.  The report's config names the input file
+    count, the postings reducer that ran (``bitmap`` or ``set``) and the
+    writer tasks; its counters hold the lines and bytes written."""
 
-    def write(out: Path, config: dict) -> dict:
+    def write(out: Path, config: dict) -> tuple[dict, list[tuple[str, int]]]:
         postings, choice = inverted_index_plan(
             spark, job.input_paths, job.num_partitions
         )
-        config.update(choice)
-        # One text shard per reducer partition — part-%05d like src/main.c:92-98.
-        postings.write.text(str(out))
-        return {}
+        # One writer task per core at most (the reference: one file per
+        # reducer thread, src/main.c:92-98).
+        tasks = min(job.num_partitions, spark.sparkContext.defaultParallelism)
+        config.update(choice, writer_tasks=tasks)
+        parts = write_part_files(postings, out, tasks)
+        counters = {
+            "output_lines": sum(lines for _, lines, _ in parts),
+            "output_bytes": sum(nbytes for _, _, nbytes in parts),
+        }
+        return counters, [(path, nbytes) for path, _, nbytes in parts]
 
     return _run_app(spark, job, "inverted_index", write)
 
@@ -388,10 +504,11 @@ def run_corpus_pipeline_job(spark: SparkSession, job: MapReduceJob) -> JobResult
             .repartition(job.num_partitions, F.col("doc_id"))
         )
         final.write.partitionBy("split").parquet(str(out))
-        return {
+        counters = {
             "n_input_docs": int(obs_in.get["n_input_docs"]),
             "n_output_docs": int(obs_out.get["n_output_docs"]),
             "n_output_tokens": int(obs_out.get["n_output_tokens"]),
         }
+        return counters, [(str(p), p.stat().st_size) for p in out.rglob("part-*")]
 
     return _run_app(spark, job, "corpus_pipeline", write)

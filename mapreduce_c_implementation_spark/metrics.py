@@ -83,13 +83,15 @@ def collect_stage_metrics(spark, after: int = -1) -> list[StageMetric]:
     return out
 
 
-def partition_skew_from_files(paths: list[str], top: int = 10) -> list[tuple[str, int]]:
-    """Top-N reducer partitions by output bytes — the Spark-native form
-    of the reference's per-partition key-count table: one part file per
-    reduce partition, so shard size == partition load."""
-    sized = [(Path(p).name, Path(p).stat().st_size) for p in paths]
-    sized.sort(key=lambda t: (-t[1], t[0]))
-    return sized[:top]
+def partition_skew(
+    sized: list[tuple[str, int]], top: int = 10
+) -> list[tuple[str, int]]:
+    """Top-N reducer partitions by output bytes, from ``(path, bytes)``
+    per part file — the Spark-native form of the reference's
+    per-partition key-count table: one part file per reduce partition,
+    so shard size == partition load."""
+    named = sorted(((Path(p).name, n) for p, n in sized), key=lambda t: (-t[1], t[0]))
+    return named[:top]
 
 
 def input_bytes(paths: list[str]) -> int:

@@ -16,8 +16,14 @@ single-node assumptions into query code.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# The directory that holds this package: on the Python workers' path, so
+# they import it (the daemon module below, by-reference functions such
+# as ``tokenize_pairs_arrow``) whatever the driver's working directory.
+_PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
 
 # Knobs that queries rely on semantically (timezone, ANSI-off) or that are
 # unambiguously right at any scale (AQE, arrow).  Applied both when we build
@@ -78,6 +84,11 @@ def build_session(
         .config("spark.sql.ui.retainedExecutions", "20")
         .config("spark.worker.ui.retainedExecutors", "10")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # Python workers fork from this package's daemon, which stops
+        # each task from re-reading pyspark.zip and the spark-core jar
+        # (see daemon.py).  Static: it must be set before the session.
+        .config("spark.python.daemon.module", "mapreduce_c_implementation_spark.daemon")
     )
     for k, v in REQUIRED_RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -2,7 +2,7 @@
 """Generate docs/OPERATORS.md from the live registry — the line-by-line
 operator catalog (name, module, tags, oracle pairing, docstring lead).
 Run after adding operators; tests/test_extensions.py asserts the file
-is in sync with the registry."""
+is byte for byte what ``render`` gives in a fresh interpreter."""
 
 from __future__ import annotations
 
@@ -20,7 +20,8 @@ def first_sentence(doc: str) -> str:
     return text[:200]
 
 
-def main() -> None:
+def render() -> str:
+    """The catalog's text, in the registry's order."""
     from mapreduce_c_implementation_spark.registry import all_operators
 
     ops = all_operators()
@@ -43,9 +44,13 @@ def main() -> None:
         tags = " ".join(op.tags)
         oracle = "SQL" if op.oracle_sql else "rows-only"
         lines.append(f"| {i} | `{name}` | {mod} | {tags} | {oracle} | {summary} |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
     out = Path(__file__).resolve().parents[1] / "docs" / "OPERATORS.md"
-    out.write_text("\n".join(lines) + "\n")
-    print(f"wrote {out} ({len(ops)} operators)")
+    out.write_text(render(), encoding="utf-8")
+    print(f"wrote {out}")
 
 
 if __name__ == "__main__":

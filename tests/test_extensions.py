@@ -265,22 +265,26 @@ def test_cc_stars_matches_propagation_and_converges_fast(spark, sf_correct):
 
 
 def test_operators_md_in_sync():
-    """docs/OPERATORS.md is generated from the registry; it must list
-    exactly the registered operators (regenerate with
-    scripts/gen_operators_md.py after adding one)."""
+    """docs/OPERATORS.md is generated from the registry: it must be byte
+    for byte what scripts/gen_operators_md.py writes (regenerate after
+    adding an operator).  The generator runs in a fresh interpreter, as
+    it does from the command line, so the registry's order there is not
+    the order this test session happened to import operator modules in."""
     import pathlib
-    import re
+    import subprocess
+    import sys
 
-    from mapreduce_c_implementation_spark.registry import all_operators
-
-    md = (
-        pathlib.Path(__file__).resolve().parents[1] / "docs" / "OPERATORS.md"
-    ).read_text()
-    listed = set(re.findall(r"^\| \d+ \| `([a-z0-9_]+)`", md, re.MULTILINE))
-    ops = set(all_operators())
-    assert listed == ops, (
-        f"docs/OPERATORS.md out of sync: missing={sorted(ops - listed)[:5]} "
-        f"stale={sorted(listed - ops)[:5]}"
+    root = pathlib.Path(__file__).resolve().parents[1]
+    render = (
+        "import sys; sys.path.insert(0, 'scripts'); "
+        "from gen_operators_md import render; "
+        "sys.stdout.buffer.write(render().encode())"
+    )
+    want = subprocess.run(
+        [sys.executable, "-c", render], cwd=root, capture_output=True, check=True
+    ).stdout
+    assert (root / "docs" / "OPERATORS.md").read_bytes() == want, (
+        "docs/OPERATORS.md is stale: run scripts/gen_operators_md.py"
     )
 
 

@@ -25,10 +25,9 @@ def test_inverted_index_job_end_to_end(spark, sf_correct):
     )
     res = run_inverted_index_job(spark, job)
 
-    # part-%05d naming, exactly num_partitions shards
+    # The reference's part-%05d.txt names, one per reducer.
     names = [Path(f).name for f in res.output_files]
-    assert len(names) == 8
-    assert names[0] == "part-00000" or names[0].startswith("part-00000-")
+    assert names == [f"part-{i:05d}.txt" for i in range(8)]
 
     # output format parity: 'word -> [shard_a.txt, shard_b.txt]'
     lines = []
@@ -251,8 +250,7 @@ def _postings_run(spark, corpus: Path, out: Path):
         spark,
         MapReduceJob(input_paths=[str(corpus)], output_dir=str(out), num_partitions=3),
     )
-    # Part names carry a per-write uuid; the reducer index is the key.
-    parts = {Path(f).name[:10]: Path(f).read_text() for f in res.output_files}
+    parts = {Path(f).name: Path(f).read_text() for f in res.output_files}
     return res.metrics.config, parts
 
 
@@ -305,6 +303,9 @@ def test_file_bit_dictionary_miss_raises(spark, tmp_path, monkeypatch):
     )
     with pytest.raises(Exception, match=re.escape("no file bit for b.txt")):
         _postings_run(spark, tmp_path / "corpus", tmp_path / "out")
+    # A failed job leaves no output behind.
+    assert not list((tmp_path / "out").glob("part-*"))
+    assert not (tmp_path / "out" / "_temporary").exists()
 
 
 @pytest.mark.parametrize("n_files, postings", [(2, "bitmap"), (65, "set")])
@@ -323,3 +324,157 @@ def test_report_names_the_postings_reducer(spark, tmp_path, n_files, postings):
     report = m.render_report()
     assert f"n_input_files: {n_files}\n" in report
     assert f"postings: {postings}\n" in report
+
+
+# --- the sink: part-%05d.txt per reducer, one writer task per core ----
+
+_BYTE_ORDER_TOY = {
+    "first.txt": "zebra mango kiwi apple\nZeta 10 9 alpha Apple\n",
+    "second.txt": "zebra yak 2 banana cherry mango\nxylophone 100 b a\n",
+}
+_NAMES_TOY = {"my doc#1.txt": "Shared one\n", "a+b.txt": "shared two\n"}
+
+
+@pytest.mark.parametrize("num_partitions", [1, 3, 8, 40])
+@pytest.mark.parametrize("corpus", ["byte_order", "names", "files7", "files65"])
+def test_part_files_match_spark_text_sink(spark, tmp_path, corpus, num_partitions):
+    """Each reducer's part file holds exactly the bytes Spark's own
+    text sink (``write.text``) writes for the same plan; a reducer with
+    no words writes no file.  Widths 1 to 40 put the writer tasks both
+    below and at the core count; 7 files select the bitmap plan, 65 the
+    set plan."""
+    from mapreduce_c_implementation_spark.job import inverted_index_plan
+
+    root = tmp_path / "corpus"
+    if corpus.startswith("files"):
+        _corpus(root, int(corpus[5:]))
+    else:
+        root.mkdir()
+        for name, text in (_BYTE_ORDER_TOY if corpus == "byte_order" else _NAMES_TOY).items():
+            (root / name).write_text(text)
+    res = run_inverted_index_job(
+        spark,
+        MapReduceJob(
+            input_paths=[str(root)],
+            output_dir=str(tmp_path / "out"),
+            num_partitions=num_partitions,
+        ),
+    )
+    postings, _ = inverted_index_plan(spark, [str(root)], num_partitions)
+    postings.write.text(str(tmp_path / "spark"))
+    # Spark names its files part-<reducer>-<uuid>-c000.txt.
+    want = {
+        f"{p.name[:10]}.txt": p.read_bytes()
+        for p in (tmp_path / "spark").glob("part-*")
+        if p.stat().st_size
+    }
+    got = {Path(f).name: Path(f).read_bytes() for f in res.output_files}
+    assert got == want
+    assert sorted(p.name for p in (tmp_path / "out").iterdir()) == sorted(
+        [*got, "_SUCCESS"]
+    )
+    m = res.metrics
+    assert m.config["writer_tasks"] == min(
+        num_partitions, spark.sparkContext.defaultParallelism
+    )
+    assert m.counters["output_lines"] == sum(v.count(b"\n") for v in got.values())
+    assert m.counters["output_bytes"] == sum(len(v) for v in got.values())
+    assert m.partition_top == sorted(
+        ((k, len(v)) for k, v in got.items()), key=lambda t: (-t[1], t[0])
+    )[:10]
+
+
+def test_existing_output_dir_is_refused_before_any_job(spark, tmp_path):
+    """With ``clear_output=False`` an existing output directory raises
+    before a Spark job runs and is left as it was."""
+    (tmp_path / "corpus").mkdir()
+    (tmp_path / "corpus" / "a.txt").write_text("one\n")
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "part-00000.txt").write_text("kept\n")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = dag.numTotalJobs()
+    job = MapReduceJob(
+        input_paths=[str(tmp_path / "corpus")], output_dir=str(out), clear_output=False
+    )
+    with pytest.raises(FileExistsError):
+        run_inverted_index_job(spark, job)
+    assert dag.numTotalJobs() == jobs
+    assert [p.name for p in out.iterdir()] == ["part-00000.txt"]
+    assert (out / "part-00000.txt").read_text() == "kept\n"
+
+
+def test_write_runs_rejects_null_lines_and_split_reducers(tmp_path, monkeypatch):
+    """The writer names the reducer of a NULL line, and refuses a
+    reducer whose rows arrive as two runs."""
+    import pyarrow as pa
+
+    from mapreduce_c_implementation_spark import job as job_mod
+
+    class Ctx:
+        def stageId(self):
+            return 1
+
+        def partitionId(self):
+            return 2
+
+        def attemptNumber(self):
+            return 0
+
+    import pyspark
+
+    monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(Ctx))
+
+    def run(parts, lines):
+        batch = pa.record_batch(
+            [pa.array(parts, pa.int32()), pa.array(lines, pa.string())], ["part", "line"]
+        )
+        return list(job_mod._write_runs(str(tmp_path), iter([batch])))
+
+    with pytest.raises(ValueError, match="NULL line in reducer 7"):
+        run([3, 7, 7], ["a\n", "b\n", None])
+    with pytest.raises(RuntimeError, match="reducer 4 in two runs"):
+        run([4, 5, 4], ["a\n", "b\n", "c\n"])
+    (out,) = run([9, 9, 2], ["é\n", "b\n", "c\n"])
+    assert out.to_pylist() == [
+        {"part": 9, "path": str(tmp_path / "part-00009-1-2-0"), "lines": 2, "bytes": 5},
+        {"part": 2, "path": str(tmp_path / "part-00002-1-2-0"), "lines": 1, "bytes": 2},
+    ]
+    assert (tmp_path / "part-00009-1-2-0").read_bytes() == "é\nb\n".encode()
+
+
+def test_flagship_jobs_and_tasks(spark, tmp_path):
+    """A flagship call runs 2 Spark jobs (the map stage, then the
+    reduce and sink) and no more tasks than its map tasks plus one
+    writer task per core: 40 reducers do not mean 40 write tasks."""
+    _corpus(tmp_path / "corpus", 7)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = dag.numTotalJobs()
+    res = run_inverted_index_job(
+        spark,
+        MapReduceJob(input_paths=[str(tmp_path / "corpus")],
+                     output_dir=str(tmp_path / "out")),
+    )
+    assert dag.numTotalJobs() - jobs == 2
+    stages = res.metrics.stages
+    map_tasks = sum(s.num_tasks for s in stages if s.input_bytes > 0)
+    assert map_tasks > 0
+    cores = spark.sparkContext.defaultParallelism
+    assert sum(s.num_tasks for s in stages) <= map_tasks + min(40, cores)
+
+
+def test_python_workers_run_the_package_daemon(spark):
+    """The session's Python workers fork from the package's daemon: a
+    zip importer's ``invalidate_caches`` is the daemon's no-op."""
+    import pyarrow as pa
+
+    def probe(batches):
+        import zipimport
+
+        for _ in batches:
+            pass
+        name = zipimport.zipimporter.invalidate_caches.__qualname__
+        yield pa.RecordBatch.from_pylist([{"name": name}])
+
+    rows = spark.range(1).mapInArrow(probe, "name string").collect()
+    assert {r.name for r in rows} == {"keep_zip_directory"}
